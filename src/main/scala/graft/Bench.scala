@@ -14,29 +14,46 @@ object Bench {
     // count() lets Catalyst prune projections and under-reports work).
     // Three passes, min per query: a 70+-query run in one JVM has multi-
     // second GC/JIT noise on individual queries; the min is the
-    // steady-state cost (pass 1 also pays plan compilation).
-    def pass(): Seq[(String, Double)] =
+    // steady-state cost (pass 1 also pays plan compilation). A query
+    // that throws in any pass is reported under "failed" with its
+    // error, never as a time, and stays out of the total.
+    def pass(): Seq[(String, Either[String, Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.isEmpty || only(n) }
         .map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        name -> (System.nanoTime() - t0) / 1e9
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          name -> Right((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          name -> Left(e.toString)
+        }
       }
-    val results = (pass() ++ pass() ++ pass()).groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (name, runs) => name -> runs.map(_._2).min }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val runs = (pass() ++ pass() ++ pass()).groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (name, rs) => name -> rs.map(_._2) }
+    val failed = runs.flatMap { case (name, rs) =>
+      rs.collectFirst { case Left(e) => name -> e } }
+    val results = runs.filterNot(r => failed.exists(_._1 == r._1))
+      .map { case (name, rs) => name -> rs.collect { case Right(s) => s }.min }
+    def str(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+    val qs = results.map { case (k, v) => s"${str(k)}:$v" }
+      .mkString("{", ",", "}")
+    val fs = failed.map { case (k, e) => s"${str(k)}:${str(e)}" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"sf":"$sfDir"}""")
     // Machine-readable FULL per-query map (the driver's BENCH artifact
     // truncates its tail, losing cross-round per-query comparability):
     // when BENCH_FULL_OUT is set, the same name→seconds map lands
-    // whole at that path (e.g. BENCHFULL_r18.json in the repo root).
+    // whole at that path (e.g. BENCHFULL_r18.json in the repo root),
+    // with the failed queries beside it.
     sys.env.get("BENCH_FULL_OUT").foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-        s"""{"sf":"$sfDir","unit":"sec","total":$total,"queries":$qs}""")
+        s"""{"sf":"$sfDir","unit":"sec","total":$total,"queries":$qs,"failed":$fs}""")
     }
     spark.stop()
   }

@@ -49,20 +49,45 @@ object Manifest {
     * from it instead of trusting every caller to re-pass the flag
     * (omitting it on a positional stack would tear the
     * postings/positions families: tombstones retire old positional
-    * rows with no replacements landing). */
+    * rows with no replacements landing). `deltas` is a keyed family's
+    * MERGE-ON-READ chain in commit order (oldest first), keyed by the
+    * field id `deltaKey`; it renders as the `deltas=`/`deltakey=` lines
+    * only when non-empty, so every state without a chain — every
+    * manifest written before the chain existed included — renders and
+    * parses exactly as before. */
   case class State(version: Long, batchId: Long, globalV: Long,
                    statsV: Map[Int, Long], baseV: Long = -1L,
                    baseBatch: Long = -1L,
                    auxV: Map[Int, Long] = Map.empty,
                    pos: Boolean = false,
-                   schema: String = "") {
+                   schema: String = "",
+                   deltas: Seq[Delta] = Seq.empty,
+                   deltaKey: Int = -1) {
     def render: String = {
       def pins(m: Map[Int, Long]) = m.toSeq.sorted
         .map { case (b, v) => s"$b:$v" }.mkString(",")
       s"version=$version\nbatch=$batchId\nglobal=$globalV\n" +
         s"stats=${pins(statsV)}\nbase=$baseV\nbasebatch=$baseBatch\n" +
         s"aux=${pins(auxV)}\npos=${if (pos) 1 else 0}\n" +
-        s"schema=$schema\n"
+        s"schema=$schema\n" +
+        (if (deltas.isEmpty) ""
+         else s"deltas=${deltas.map(_.encode).mkString(",")}\n" +
+           s"deltakey=$deltaKey\n")
+    }
+  }
+
+  /** One merge-on-read delta of a keyed family: the attempt token of
+    * its unpartitioned `delta/v=<token>` directory and the buckets its
+    * rows fall in (so a fold or a change feed elects buckets from the
+    * manifest alone). Encoded `<token>:<b>.<b>...`. */
+  final case class Delta(token: Long, buckets: Seq[Int]) {
+    def encode: String = s"$token:${buckets.sorted.mkString(".")}"
+  }
+
+  object Delta {
+    def decode(s: String): Delta = {
+      val Array(t, bs) = s.split(":", 2)
+      Delta(t.toLong, bs.split('.').filter(_.nonEmpty).map(_.toInt).toSeq)
     }
   }
 
@@ -325,24 +350,27 @@ object Manifest {
     * goes through java.nio ATOMIC_MOVE (rename(2) on POSIX) there; HDFS
     * keeps the FileContext path, whose overwrite-rename is atomic by
     * contract. An object store without atomic rename needs a
-    * conditional put instead (the pluggable-commit reason above). */
+    * conditional put instead (the pluggable-commit reason above). On
+    * `file` the scratch file is written with java.nio too: created
+    * through the checksummed local FileSystem it would leave a
+    * `.manifest.tmp-*.crc` sidecar that the move never carries. */
   private def swapPointer(spark: SparkSession,
       f: org.apache.hadoop.fs.FileSystem,
       base: org.apache.hadoop.fs.Path, bytes: Array[Byte],
       version: Long): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(base,
       s"manifest.tmp-$version-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
     val dst = new org.apache.hadoop.fs.Path(base, "manifest")
     if (f.getScheme == "file") {
-      val tq = f.makeQualified(tmp).toUri.getPath
-      val dq = f.makeQualified(dst).toUri.getPath
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tq), java.nio.file.Paths.get(dq),
+      val tq = java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath)
+      val dq = java.nio.file.Paths.get(f.makeQualified(dst).toUri.getPath)
+      java.nio.file.Files.write(tq, bytes)
+      java.nio.file.Files.move(tq, dq,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } else {
+      val out = f.create(tmp, true)
+      try out.write(bytes) finally out.close()
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         dst.toUri, spark.sessionState.newHadoopConf())
       fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
@@ -362,7 +390,10 @@ object Manifest {
       kv.getOrElse("basebatch", "-1").toLong,
       pins(kv.getOrElse("aux", "")),
       kv.getOrElse("pos", "0") == "1",
-      kv.getOrElse("schema", ""))
+      kv.getOrElse("schema", ""),
+      kv.getOrElse("deltas", "").split(",").filter(_.nonEmpty).toSeq
+        .map(Delta.decode),
+      kv.getOrElse("deltakey", "-1").toInt)
   }
 
   /** SNAPSHOT read — resolve the state committed as `version` (time
@@ -634,9 +665,16 @@ object Manifest {
           .foreach(v => f.delete(v, true))
     }
     // history manifests and scratch leftovers are FILES — list the
-    // root unfiltered (the dir-only `ls` above is for asset sweeps)
+    // root unfiltered (the dir-only `ls` above is for asset sweeps),
+    // through the raw FileSystem where there is one: a checksummed
+    // listing hides the `.manifest.tmp-*.crc` sidecars that scratch
+    // files once created through it left behind
+    val raw = f match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     var retired = 0
-    f.listStatus(root).toSeq.map(_.getPath).foreach { p =>
+    raw.listStatus(root).toSeq.map(_.getPath).foreach { p =>
       val n = p.getName
       // toLongOption, not toLong: a foreign file matching the prefix
       // but not parsing (an editor backup "manifest.v=3~") must be
@@ -646,6 +684,8 @@ object Manifest {
           n.drop(11).toLongOption.exists(_ < floor)) ||
           n.startsWith("manifest.tmp-")
       if (stale) { f.delete(p, false); retired += 1 }
+      else if (n.startsWith(".manifest.tmp-") && n.endsWith(".crc"))
+        raw.delete(p, false) // an orphan sidecar, not a manifest
     }
     (deleted, retired, kept)
   }

@@ -1,8 +1,12 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
+  StructType}
 
 /** GENERAL KEYED TABLE under the [[Manifest]] protocol, with
   * TRANSACTIONAL SCHEMA EVOLUTION — the generic form of the
@@ -54,16 +58,41 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   * are the duplicate/collision checks, so an evolution can never
   * commit a schema that Spark resolution would then find ambiguous.
   *
-  * Everything else is the shared choreography: upserts land
-  * after-images in exactly their keys' buckets (O(batch + touched
-  * buckets), exactly-once by batch id), deletes drop rows, MERGE
-  * applies conditional rules with an optional delete arm, the change
-  * feed diffs re-pinned buckets between two cuts — ACROSS an
-  * evolution boundary it resolves the before-cut BY ID onto the
-  * after-cut's schema, so a consumer always sees feed rows in the
-  * schema of the cut it is advancing to, renames and drops
-  * included. An evolution commit alone re-pins nothing and correctly
-  * emits an empty feed.
+  * STORAGE IS BASE + DELTAS (merge-on-read; the Iceberg v2
+  * equality-delete / Delta deletion-vector idea in this repo's terms):
+  *
+  *  - the BASE is one per-bucket-MVCC family, `rows/v=<token>/bkt=<b>`,
+  *    its bucket pins in [[Manifest.State.statsV]];
+  *  - every upsert / delete / merge into a table that already holds
+  *    rows APPENDS one unpartitioned `delta/v=<token>` directory: the
+  *    commit's after-images plus a key-only tombstone per deleted key
+  *    (`_del`), each row tagged with its bucket. The commit pins it at
+  *    the end of [[Manifest.State.deltas]], the chain, in commit order,
+  *    with the buckets it touches. The first commit into an empty table
+  *    writes the base buckets directly;
+  *  - a read resolves the newest row per key: base rows no delta names,
+  *    plus each named key's newest delta row unless it is a tombstone
+  *    ([[readRows]]);
+  *  - [[compact]], [[rebucket]] and the commit that would make the
+  *    chain [[ChainCap]] long FOLD the chain into per-bucket bases
+  *    through the same write-and-repin law; [[vacuum]] keeps the deltas
+  *    of retained cuts and reclaims the rest.
+  *
+  * The trade: a delivery writes O(delivery) bytes — nothing stored is
+  * re-read or rewritten at commit — where copy-on-write rewrote every
+  * bucket it touched, i.e. the whole table once a delivery has more
+  * keys than buckets. A read pays one broadcast anti-join against the
+  * chain's keys; space holds the chain's superseded images until the
+  * next fold. Compaction pays the rewrite once per cadence instead of
+  * once per commit. The change feed reads, at both cuts, the buckets
+  * whose base moved inside the window whole and elsewhere only the
+  * keys the window's deltas name — ACROSS an evolution boundary it
+  * resolves the before-cut BY ID onto the after-cut's schema, so a
+  * consumer always sees feed rows in the schema of the cut it is
+  * advancing to, renames and drops included. An evolution commit
+  * alone re-pins nothing and correctly emits an empty feed. Commits
+  * stay exactly-once by batch id, and MERGE applies conditional rules
+  * with an optional delete arm.
   *
   * No reference counterpart (jurimetria-etl fixes its 13-column frame
   * at parse time); schema evolution follows the published
@@ -137,6 +166,11 @@ object TxTableStack {
   private def schemaOf(st: Manifest.State): TableSchema =
     TableSchema.decode(st.schema)
 
+  /** The chain length at which a commit folds the chain into the bases
+    * instead of appending a delta: it bounds a read's merge work at
+    * this many deltas. */
+  private val ChainCap = 8
+
   /** Create the table at `root` with its initial row schema (Spark
     * DDL, e.g. `"doc_id LONG, lang STRING"` — normalized into the
     * canonical encoded form before storing, so multi-line DDL is
@@ -152,42 +186,143 @@ object TxTableStack {
     }
 
   /** Rename logical columns to their `f<id>` storage names — the
-    * write-side half of the id-resolution contract. */
-  private def toPhysical(df: DataFrame, schema: TableSchema): DataFrame =
+    * write-side half of the id-resolution contract. `bkt` and the
+    * `extra` bookkeeping columns keep their names. */
+  private def toPhysical(df: DataFrame, schema: TableSchema,
+                         extra: String*): DataFrame =
     df.select(schema.fields.map(f =>
-      col(f.name).as(f.physName)) :+ col("bkt"): _*)
+      col(f.name).as(f.physName)) ++ ("bkt" +: extra).map(col): _*)
 
-  /** Committed rows of a cut resolved BY FIELD ID onto `schema`
-    * (+ bkt): pinned buckets read one version group at a time (a
-    * version's files share the physical schema their commit wrote,
-    * but ACROSS versions the id set and the physical types may
-    * differ), then every schema field selected by its `f<id>` storage
-    * name — present ids cast to the declared type, ids a file
-    * predates (or that were dropped and re-added) null-filled. Passing
-    * a DIFFERENT cut's schema is the change feed's cross-boundary
-    * projection: renames follow the id, drops disappear, adds read
-    * null. */
+  /** The Spark schema of the parquet files under `dir`, from ONE footer
+    * read on the driver, every field nullable. Handing it to the reader
+    * skips the schema-inference job `spark.read.parquet` would otherwise
+    * run per read. Every file of one write shares its schema, and the
+    * footer carries the schema Spark wrote, so by-id projection sees
+    * exactly the physical ids and types of that write. */
+  private def footerSchema(spark: SparkSession, dir: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(dir)
+    val file = p.getFileSystem(conf).listStatus(p).map(_.getPath)
+      .find { f => val n = f.getName
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") }
+      .getOrElse(throw new IllegalStateException(s"no parquet file under $dir"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val written = try Option(reader.getFooter.getFileMetaData
+        .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"$file carries no Spark schema — not written by this table"))
+    finally reader.close()
+    StructType(written.map(f => StructField(f.name, f.dataType)))
+  }
+
+  /** Select every `schema` field from `raw` by its `f<id>` storage name
+    * — present ids cast to the declared type, ids the file predates (or
+    * that were dropped and re-added) null-filled — plus the `keep`
+    * columns as they are. */
+  private def byId(raw: DataFrame, schema: TableSchema,
+                   keep: Column*): DataFrame = {
+    val have = raw.columns.toSet
+    raw.select(schema.fields.map { f =>
+      (if (have(f.physName)) col(f.physName).cast(f.dataType)
+       else lit(null).cast(f.dataType)).as(f.name)
+    } ++ keep: _*)
+  }
+
+  /** Boolean columns a reader tags each write's rows with. */
+  private type Tags = Seq[(String, Boolean)]
+
+  /** The parquet dirs of some `writes` (each write's dirs, and the
+    * `Tags` its rows carry as literal columns) under `root/family`, by
+    * id onto `schema`, plus the `keep` columns and `_v`: the `v=`
+    * partition value of a dir, i.e. the version token of its write. A
+    * write's files share the physical schema its commit wrote, but
+    * ACROSS writes the id set and the physical types may differ; writes
+    * that share one, and their tags, are read by one scan. Tokens stay
+    * out of every expression: a literal token would make each read's
+    * generated code new, and compile it again. */
+  private def readWrites(spark: SparkSession, root: String, family: String,
+                         writes: Seq[(Seq[String], Tags)],
+                         schema: TableSchema, keep: String*): DataFrame =
+    writes.groupBy { case (dirs, tags) => (footerSchema(spark, dirs.head), tags) }
+      .toSeq.map { case ((phys, tags), ws) =>
+        (phys, tags, ws.flatMap(_._1).sorted) }.sortBy(_._3.head)
+      .map { case (phys, tags, dirs) =>
+        byId(spark.read.schema(phys.add("v", LongType))
+          .option("basePath", s"$root/$family").parquet(dirs: _*), schema,
+          keep.map(col) ++ (col("v").as("_v") +:
+            tags.map { case (n, b) => lit(b).as(n) }): _*)
+      }.reduce(_.unionByName(_))
+
+  /** The base rows under `pins` (bucket → token; a change feed passes
+    * both cuts' pins, so a bucket may appear twice) by id onto `schema`,
+    * with `bkt`, `_v` and the `tags` of each pin. Passing a DIFFERENT
+    * cut's schema is the change feed's cross-boundary projection:
+    * renames follow the id, drops disappear, adds read null. */
+  private def readBase(spark: SparkSession, root: String,
+                       pins: Iterable[(Int, Long)], schema: TableSchema,
+                       tags: ((Int, Long)) => Tags = _ => Nil): DataFrame =
+    if (pins.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        schema.structType.add("bkt", IntegerType).add("_v", LongType))
+    else
+      readWrites(spark, root, "rows",
+        pins.toSeq.distinct.groupBy(p => (p._2, tags(p))).toSeq.map {
+          case ((v, t), ps) => ps.map(p => s"$root/rows/v=$v/bkt=${p._1}") -> t },
+        schema, "bkt")
+
+  /** Deltas' rows — after-images and tombstones — by id onto `schema`,
+    * with `bkt`, `_del`, `_v` and the `tags` of each delta; only rows in
+    * the `restrict` buckets. */
+  private def readDeltas(spark: SparkSession, root: String,
+                         ds: Seq[Manifest.Delta], schema: TableSchema,
+                         restrict: Option[Set[Int]],
+                         tags: Manifest.Delta => Tags = _ => Nil): DataFrame = {
+    val rows = readWrites(spark, root, "delta",
+      ds.map(d => Seq(s"$root/delta/v=${d.token}") -> tags(d)), schema,
+      "bkt", "_del")
+    // a delta spans buckets; keep only its rows in the read set
+    restrict.filterNot(bs => ds.forall(_.buckets.forall(bs)))
+      .fold(rows)(bs => rows.filter(col("bkt").isin(bs.toSeq: _*)))
+  }
+
+  /** The name, in `schema`, of the field a cut's chain is keyed by. */
+  private def chainKey(st: Manifest.State, schema: TableSchema): String =
+    schema.fields.find(_.id == st.deltaKey).map(_.name).getOrElse(
+      throw new IllegalStateException(
+        s"the delta chain's key (field ${st.deltaKey}) is not in the " +
+          "schema it is read under — compact the table first"))
+
+  /** The committed rows of a cut on `schema` (+ bkt), optionally only
+    * those in the `restrict` buckets: the base rows no delta names, plus
+    * each named key's NEWEST delta row unless that row is a tombstone.
+    * With no chain this is the base read alone.
+    *
+    * One rule settles both: a row drops when a delta with a LARGER
+    * version token names its key. Tokens grow with the commit ordinal,
+    * and a commit that writes bases also empties the chain, so every
+    * delta of a cut outranks every base pin of it. The rule is one
+    * anti-join against the chain's (key, token) pairs; those are small,
+    * so it broadcasts them once and neither the bases nor the deltas
+    * shuffle. `_v` stays a column read from the paths, never a
+    * literal, so the optimizer cannot split that one broadcast per
+    * union branch. */
   private def readRows(spark: SparkSession, root: String,
                        st: Manifest.State, schema: TableSchema,
-                       restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
+                       restrict: Option[Set[Int]]): DataFrame = {
+    val base = readBase(spark, root,
+      restrict.fold(st.statsV)(bs => st.statsV.filter(p => bs(p._1))), schema)
+    val chain = st.deltas.filter(d => restrict.forall(d.buckets.exists(_)))
+    if (chain.isEmpty) base.drop("_v")
+    else {
+      val key = chainKey(st, schema)
+      val deltas = readDeltas(spark, root, chain, schema, restrict)
+      val named = deltas.select(col(key).as("_key"), col("_v").as("_newer"))
+      base.withColumn("_del", lit(false)).unionByName(deltas)
+        .join(named, col(key) === col("_key") && col("_newer") > col("_v"),
+          "left_anti")
+        .filter(!col("_del")).drop("_del", "_v")
     }
-    if (pinned.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schema.structType.add("bkt", IntegerType))
-    else
-      pinned.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, bs) =>
-        val raw = spark.read.option("basePath", s"$root/rows")
-          .parquet(bs.map { case (b, _) =>
-            s"$root/rows/v=$v/bkt=$b" }.sorted: _*)
-        val have = raw.columns.toSet
-        raw.select(schema.fields.map { f =>
-          (if (have(f.physName)) col(f.physName).cast(f.dataType)
-           else lit(null).cast(f.dataType)).as(f.name)
-        } :+ col("bkt"): _*)
-      }.reduce(_.unionByName(_))
   }
 
   /** Align `batch` to the manifest schema BY NAME (case-insensitive,
@@ -211,16 +346,14 @@ object TxTableStack {
     * column exists, no batch row has a null key (a null key has no
     * bucket), and the batch carries each key ONCE — a duplicated key
     * would persist duplicate rows in [[commitBatch]] and fan out the
-    * full-outer join in [[commitMerge]], double-applying an additive
-    * rule WITHIN one commit (the corruption the batch-id guard
-    * prevents ACROSS commits). One aggregate pass over the
-    * checkpointed batch. */
-  /** The batch-shape guard FUSED with the bucket election: one agg
-    * pass returns the touched `bkt` set (bounded by B) alongside the
-    * null-key and duplicate-key counters, instead of a guard action
-    * plus a separate election action (guide §2.4 — remove redundant
-    * passes). Callers pass a LAZY-checkpointed `rows`: this single
-    * drain is also what materializes the checkpoint. */
+    * join in [[commitMerge]], double-applying an additive rule WITHIN
+    * one commit (the corruption the batch-id guard prevents ACROSS
+    * commits). FUSED with the bucket election: one agg pass returns the
+    * touched `bkt` set (bounded by B) alongside the null-key and
+    * duplicate-key counters, instead of a guard action plus a separate
+    * election action (guide §2.4 — remove redundant passes). Callers
+    * pass a LAZY-checkpointed `rows`: this single drain is also what
+    * materializes the checkpoint. */
   private def requireKeyedBatchBuckets(rows: DataFrame,
                                        keyCol: String): Seq[Int] = {
     val c = rows.agg(count(lit(1)), count(col(keyCol)),
@@ -235,12 +368,91 @@ object TxTableStack {
     c.getSeq[Int](3)
   }
 
+  private def keyField(schema: TableSchema, keyCol: String): TField =
+    schema.find(keyCol).getOrElse(throw new IllegalArgumentException(
+      s"key column $keyCol is not in the table schema"))
+
+  /** Fold the chain — and a capped commit's own `extra` images, which
+    * outrank it — into the `buckets` bases: the rows of those buckets
+    * shuffle ONCE by bucket, each key keeps its newest row (bases rank
+    * below every delta; see [[readRows]]) unless that is a tombstone,
+    * and each bucket lands as ONE file under a fresh pin through
+    * [[Manifest.writeRepin]]; the chain empties. `buckets` must cover
+    * every bucket the chain and `extra` touch (more is a
+    * defragmentation of those too). */
+  private def fold(spark: SparkSession, root: String, st: Manifest.State,
+                   vNew: Long, schema: TableSchema, buckets: Seq[Int],
+                   extra: Seq[DataFrame] = Nil): Manifest.State = {
+    val bs = buckets.toSet
+    val base = readBase(spark, root, st.statsV.filter(p => bs(p._1)), schema)
+    val rows =
+      if (st.deltas.isEmpty && extra.isEmpty)
+        base.drop("_v").repartition(col("bkt"))
+      else {
+        val cols = schema.fields.map(_.name) :+ "_del"
+        (base.withColumn("_del", lit(false)) +:
+          (if (st.deltas.isEmpty) Nil
+           else Seq(readDeltas(spark, root, st.deltas, schema, Some(bs)))) ++:
+          extra.map(_.withColumn("_v", lit(Long.MaxValue))))
+          .reduce(_.unionByName(_))
+          .repartition(col("bkt"))
+          .groupBy(col("bkt"), col(chainKey(st, schema)))
+          .agg(max_by(struct(cols.map(col): _*), col("_v")).as("_row"))
+          .select(col("bkt") +: cols.map(c => col(s"_row.$c").as(c)): _*)
+          .filter(!col("_del"))
+      }
+    st.copy(version = vNew,
+      statsV = Manifest.writeRepin(toPhysical(rows, schema), "rows", root,
+        vNew, buckets, st.statsV),
+      deltas = Seq.empty, deltaKey = -1)
+  }
+
+  /** The write path every keyed face shares: land `images` — the
+    * commit's after-images (`_del` false) and key-only tombstones
+    * (`_del` true) on the table schema, + bkt, all in the `touched`
+    * buckets — as the state of version `vNew`:
+    *
+    *  - into a table with no rows yet, the images ARE the base: they
+    *    write the touched buckets directly;
+    *  - otherwise they append ONE delta directory and pin it at the end
+    *    of the chain — O(delivery) bytes, no stored row re-read;
+    *  - the commit that would make the chain [[ChainCap]] long folds the
+    *    chain and its own images into the bases instead; a commit keyed
+    *    differently from a pending chain folds the chain, then its own
+    *    images (a chain has one key). */
+  private def land(spark: SparkSession, root: String, st: Manifest.State,
+                   vNew: Long, batchId: Long, schema: TableSchema,
+                   key: TField, images: DataFrame,
+                   touched: Seq[Int]): Manifest.State = {
+    val chained = st.deltas.flatMap(_.buckets).distinct
+    val landed =
+      if (touched.isEmpty) st
+      else if (st.statsV.isEmpty && st.deltas.isEmpty)
+        st.copy(statsV = Manifest.writeRepin(
+          toPhysical(images.filter(!col("_del")), schema),
+          "rows", root, vNew, touched, st.statsV))
+      else if (st.deltas.nonEmpty && st.deltaKey != key.id)
+        fold(spark, root,
+          fold(spark, root, st, vNew, schema, chained).copy(deltaKey = key.id),
+          vNew, schema, touched, Seq(images))
+      else if (st.deltas.size + 1 >= ChainCap)
+        fold(spark, root, st, vNew, schema, (chained ++ touched).distinct,
+          Seq(images))
+      else {
+        val tok = Manifest.attemptVersion(vNew)
+        toPhysical(images, schema, "_del")
+          .write.mode("overwrite").parquet(s"$root/delta/v=$tok")
+        st.copy(deltas = st.deltas :+ Manifest.Delta(tok, touched.sorted),
+          deltaKey = key.id)
+      }
+    landed.copy(version = vNew, batchId = batchId)
+  }
+
   /** TRANSACTIONAL UPSERT — the batch's rows are AFTER-IMAGES:
-    * each replaces its key's stored row wholesale (or inserts), in
-    * exactly the batch keys' buckets; rows the batch never named ride
-    * through verbatim. The batch must carry each key exactly once
-    * (REQUIREd). Lagging writers null-fill (see [[align]]).
-    * Exactly-once by batch id. */
+    * each replaces its key's stored row wholesale (or inserts); rows
+    * the batch never named ride through verbatim. The batch must carry
+    * each key exactly once (REQUIREd). Lagging writers null-fill (see
+    * [[align]]). Exactly-once by batch id. */
   def commitBatch(spark: SparkSession, root: String, batch: DataFrame,
                   batchId: Long, keyCol: String, buckets: Int,
                   publish: Boolean = true): Boolean =
@@ -249,26 +461,19 @@ object TxTableStack {
         s"table not initialized at $root — call init first")
     ) { (st, vNew) =>
       val schema = schemaOf(st)
-      val key = schema.find(keyCol).getOrElse(throw
-        new IllegalArgumentException(
-          s"key column $keyCol is not in the table schema")).name
+      val key = keyField(schema, keyCol)
       val rows = align(batch, schema)
-        .withColumn("bkt", bktOf(col(key), buckets))
+        .withColumn("bkt", bktOf(col(key.name), buckets))
         .localCheckpoint(eager = false) // materialized by the fused guard
-      val touched = requireKeyedBatchBuckets(rows, key)
-      if (touched.isEmpty) st.copy(version = vNew, batchId = batchId)
-      else {
-        val replaced = readRows(spark, root, st, schema, Some(touched))
-          .join(rows.select(key), Seq(key), "left_anti")
-          .unionByName(rows)
-        st.copy(version = vNew, batchId = batchId,
-          statsV = Manifest.writeRepin(toPhysical(replaced, schema),
-            "rows", root, vNew, touched, st.statsV))
-      }
+      val touched = requireKeyedBatchBuckets(rows, key.name)
+      land(spark, root, st, vNew, batchId, schema, key,
+        rows.withColumn("_del", lit(false)), touched)
     }
 
-  /** TRANSACTIONAL DELETE — drop the keys' rows from their buckets;
-    * absent keys are no-ops (replay- and double-delete-exact). */
+  /** TRANSACTIONAL DELETE — drop the keys' rows: one key-only tombstone
+    * per distinct key; absent keys are no-ops (replay- and
+    * double-delete-exact). Keys are cast to the key column's type
+    * before they are bucketed, as upserted rows are. */
   def commitDelete(spark: SparkSession, root: String, keys: DataFrame,
                    batchId: Long, keyCol: String, buckets: Int,
                    publish: Boolean = true): Boolean =
@@ -277,25 +482,20 @@ object TxTableStack {
         s"table not initialized at $root — call init first")
     ) { (st, vNew) =>
       val schema = schemaOf(st)
-      val key = schema.find(keyCol).getOrElse(throw
-        new IllegalArgumentException(
-          s"key column $keyCol is not in the table schema")).name
-      val ids = keys.select(col(keyCol).as(key))
-        .filter(col(key).isNotNull).distinct()
-        .withColumn("bkt", bktOf(col(key), buckets))
+      val key = keyField(schema, keyCol)
+      val ids = keys.select(col(keyCol).cast(key.dataType).as(key.name))
+        .filter(col(key.name).isNotNull).distinct()
+        .withColumn("bkt", bktOf(col(key.name), buckets))
         // lazy: the election collect drains the frame and materializes
         // the checkpoint in the same action (guide §2.4)
         .localCheckpoint(eager = false)
       val touched = ids.select("bkt").distinct()
         .collect().map(_.getInt(0)).toSeq
-      if (touched.isEmpty) st.copy(version = vNew, batchId = batchId)
-      else {
-        val replaced = readRows(spark, root, st, schema, Some(touched))
-          .join(ids.select(key), Seq(key), "left_anti")
-        st.copy(version = vNew, batchId = batchId,
-          statsV = Manifest.writeRepin(toPhysical(replaced, schema),
-            "rows", root, vNew, touched, st.statsV))
-      }
+      val tombstones = ids.select(schema.fields.map(f =>
+        if (f.id == key.id) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)) ++
+        Seq(col("bkt"), lit(true).as("_del")): _*)
+      land(spark, root, st, vNew, batchId, schema, key, tombstones, touched)
     }
 
   /** Resolve each merge rule/predicate against the aliased s ⋈ b
@@ -326,15 +526,15 @@ object TxTableStack {
     * a rule keep their stored value (the standard `UPDATE SET <cols>`
     * contract — [[commitBatch]] is the replace-all `SET *` face);
     * unmatched batch rows INSERT as-is; stored rows the batch never
-    * named ride through verbatim. One full-outer join on the key,
-    * confined to the batch keys' buckets — O(batch + touched buckets'
-    * occupancy), the upsert law. Every rule's resolved type is
-    * validated against its column ([[requireRuleType]]) and
-    * `deleteWhen` must resolve BOOLEAN. Additive rules and the delete
-    * arm are both NON-idempotent, which is exactly why the guard's
-    * batch-id high-water matters: a replayed trigger is absorbed
-    * before the join and can never double-apply an update or
-    * double-free a bucket's rows. */
+    * named ride through verbatim. One join of the batch against the
+    * stored rows of its keys' buckets; the commit lands the batch keys'
+    * after-images and a key-only tombstone per deleted key ([[land]]).
+    * Every rule's resolved type is validated against its column
+    * ([[requireRuleType]]) and `deleteWhen` must resolve BOOLEAN.
+    * Additive rules and the delete arm are both NON-idempotent, which
+    * is exactly why the guard's batch-id high-water matters: a
+    * replayed trigger is absorbed before the join and can never
+    * double-apply an update or double-free a bucket's rows. */
   def commitMerge(spark: SparkSession, root: String, batch: DataFrame,
                   batchId: Long, keyCol: String, buckets: Int,
                   onMatched: Map[String, String],
@@ -345,9 +545,8 @@ object TxTableStack {
         s"table not initialized at $root — call init first")
     ) { (st, vNew) =>
       val schema = schemaOf(st)
-      val key = schema.find(keyCol).getOrElse(throw
-        new IllegalArgumentException(
-          s"key column $keyCol is not in the table schema")).name
+      val keyF = keyField(schema, keyCol)
+      val key = keyF.name
       require(!onMatched.keySet.exists(_.equalsIgnoreCase(key)),
         s"the key column $key cannot carry a matched rule — " +
           "re-keying a row is a delete + insert")
@@ -363,8 +562,8 @@ object TxTableStack {
       else {
         val sKey = col(s"s.$key")
         val bKey = col(s"b.$key")
-        val joined = readRows(spark, root, st, schema, Some(touched))
-          .alias("s").join(rows.alias("b"), sKey === bKey, "full_outer")
+        val joined = readRows(spark, root, st, schema, Some(touched.toSet))
+          .alias("s").join(rows.alias("b"), sKey === bKey, "right_outer")
         onMatched.foreach { case (name, sql) =>
           requireRuleType(joined, s"matched rule for $name", sql,
             schema.find(name).get.dataType)
@@ -372,25 +571,21 @@ object TxTableStack {
         deleteWhen.foreach(sql => requireRuleType(joined,
           "the deleteWhen predicate", sql,
           org.apache.spark.sql.types.BooleanType))
-        val matched = sKey.isNotNull && bKey.isNotNull
-        val merged = joined
+        val matched = sKey.isNotNull
+        val del = deleteWhen.map(sql => matched && coalesce(expr(sql),
+          lit(false))).getOrElse(lit(false))
+        val images = joined
           .select(schema.fields.map { f =>
             val sC = col(s"s.${f.name}")
             val bC = col(s"b.${f.name}")
-            (if (f.name == key) coalesce(sC, bC)
-             else when(matched, onMatched.collectFirst {
+            (if (f.name == key) bC
+             else when(!del, when(matched, onMatched.collectFirst {
                     case (n, sql) if n.equalsIgnoreCase(f.name) => expr(sql)
                   }.getOrElse(sC))
-                  .when(sKey.isNull, bC)
-                  .otherwise(sC))
+                  .otherwise(bC)))
               .cast(f.dataType).as(f.name)
-          } ++ Seq(coalesce(col("s.bkt"), col("b.bkt")).as("bkt"),
-            deleteWhen.map(sql => matched && coalesce(expr(sql),
-              lit(false))).getOrElse(lit(false)).as("_del")): _*)
-          .filter(!col("_del")).drop("_del")
-        st.copy(version = vNew, batchId = batchId,
-          statsV = Manifest.writeRepin(toPhysical(merged, schema),
-            "rows", root, vNew, touched, st.statsV))
+          } ++ Seq(col("b.bkt").as("bkt"), del.as("_del")): _*)
+        land(spark, root, st, vNew, batchId, schema, keyF, images, touched)
       }
     }
 
@@ -404,6 +599,9 @@ object TxTableStack {
         throw new IllegalStateException(
           s"table not initialized at $root — call init first"))
       val next = derive(schemaOf(st))
+      require(st.deltas.isEmpty || next.fields.exists(_.id == st.deltaKey),
+        "the pending delta chain is keyed by the column this evolution " +
+          "drops — compact the table first")
       if (publish)
         Manifest.commit(spark, root, st.copy(version = st.version + 1,
           schema = next.encode))
@@ -525,8 +723,16 @@ object TxTableStack {
     * columns read null, renamed columns follow their id, dropped
     * columns vanish from the diff — so a row whose only difference
     * is a newly-populated column classifies correctly and a
-    * rename/drop alone changes nothing. The pin diff bounds the
-    * read; an evolution-only window re-pins nothing and emits
+    * rename/drop alone changes nothing.
+    *
+    * The manifests bound the read: a bucket whose base pin moved inside
+    * the window, or that a delta leaving the chain (a fold) touched, is
+    * diffed whole; elsewhere only the keys named by deltas committed
+    * inside the window are (a broadcast semi-join). Every base version
+    * and delta either cut holds is read ONCE, flagged with the cuts
+    * that hold it, and one aggregation by key takes each cut's newest
+    * row (ranked as in [[readRows]]) — no full-outer join of two
+    * separately resolved cuts. An evolution-only window reads and emits
     * nothing. */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Long, keyCol: String): DataFrame = {
@@ -534,33 +740,73 @@ object TxTableStack {
     val stT = Manifest.stateAt(spark, root, Some(toVersion))
     require(stT.batchId >= stF.batchId,
       s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
-    val changed = Manifest.repinnedBuckets(stF.statsV, stT.statsV)
     val target = schemaOf(stT)
-    val key = target.find(keyCol).getOrElse(throw
+    val keyF = target.find(keyCol).getOrElse(throw
       new IllegalArgumentException(
-        s"key column $keyCol is not in the toVersion schema")).name
+        s"key column $keyCol is not in the toVersion schema"))
+    val key = keyF.name
     val payload = target.fields.map(_.name).filterNot(_ == key)
-    // the before cut, resolved by id onto the AFTER schema
-    val beforeRows = readRows(spark, root, stF, target, Some(changed))
-    val before = beforeRows.select(col(key) +:
-      payload.map(c => col(c).as(s"_b_$c")) :+ lit(true).as("_bp"): _*)
-    val after = readRows(spark, root, stT, target, Some(changed))
-      .drop("bkt").withColumn("_ap", lit(true))
-    val bs = struct(payload.map(c => col(s"_b_$c")): _*)
-    val as = struct(payload.map(col): _*)
-    before.join(after, Seq(key), "full_outer")
-      .select(col(key) +: payload.map(col) :+
-        when(col("_bp").isNull, lit("insert"))
-          .when(col("_ap").isNull, lit("delete"))
-          .when(!(bs <=> as), lit("update")).as("change"): _*)
+    val before = stF.deltas.map(_.token).toSet
+    val after = stT.deltas.map(_.token).toSet
+    val window = stT.deltas.filterNot(d => before(d.token))
+    val folded = stF.deltas.filterNot(d => after(d.token))
+    val moved = Manifest.repinnedBuckets(stF.statsV, stT.statsV).toSet ++
+      folded.flatMap(_.buckets)
+    val (whole, keyed) =
+      if (stT.deltaKey == keyF.id) (moved, window.flatMap(_.buckets).toSet -- moved)
+      else (moved ++ window.flatMap(_.buckets), Set.empty[Int])
+    val read = whole ++ keyed
+    val pinsF = stF.statsV.filter(p => read(p._1))
+    val pinsT = stT.statsV.filter(p => read(p._1))
+    val deltas = (stF.deltas ++ stT.deltas).distinct
+      .filter(_.buckets.exists(read))
+    // every write either cut holds, read once, tagged with the cuts
+    // holding it
+    val pins = pinsF.toSeq ++ pinsT
+    val rows = ((if (pins.isEmpty) Nil
+      else Seq(readBase(spark, root, pins, target, p =>
+        Seq("_inF" -> pinsF.get(p._1).contains(p._2),
+          "_inT" -> pinsT.get(p._1).contains(p._2)))
+        .withColumn("_del", lit(false)))) ++
+      (if (deltas.isEmpty) Nil
+       else Seq(readDeltas(spark, root, deltas, target, Some(read), d =>
+         Seq("_inF" -> before(d.token), "_inT" -> after(d.token))))))
+      .reduceOption(_.unionByName(_))
+      .getOrElse(readBase(spark, root, Nil, target)
+        .select(col("*") +: Seq("_del", "_inF", "_inT").map(lit(false).as(_)): _*))
+    val scoped =
+      if (keyed.isEmpty) rows
+      else {
+        val named = readDeltas(spark, root, window, target, None).select(key)
+        if (whole.isEmpty) rows.join(named, Seq(key), "left_semi")
+        else rows.filter(col("bkt").isin(whole.toSeq: _*)).unionByName(
+          rows.filter(col("bkt").isin(keyed.toSeq: _*))
+            .join(named, Seq(key), "left_semi"))
+      }
+    // each cut's newest row of a key (`_b` before, `_a` after) and its
+    // rank, null when the cut holds no row of the key
+    val row = struct((payload :+ "_del").map(col): _*)
+    val newest = Seq("_inF" -> "_b", "_inT" -> "_a").flatMap { case (in, n) =>
+      val rank = when(col(in), col("_v"))
+      Seq(max_by(row, rank).as(n), max(rank).as(s"${n}v")) }
+    def live(n: String) = col(s"${n}v").isNotNull && !col(s"$n._del")
+    val bs = struct(payload.map(c => col(s"_b.$c")): _*)
+    val as = struct(payload.map(c => col(s"_a.$c")): _*)
+    scoped.groupBy(key).agg(newest.head, newest.tail: _*)
+      .select(col(key) +: payload.map(c => when(live("_a"), col(s"_a.$c")).as(c)) :+
+        when(!live("_b") && live("_a"), lit("insert"))
+          .when(live("_b") && !live("_a"), lit("delete"))
+          .when(live("_b") && live("_a") && !(bs <=> as), lit("update"))
+          .as("change"): _*)
       .filter(col("change").isNotNull)
   }
 
   /** RE-BUCKET MIGRATION — the undersized-B cure every keyed family
-    * carries: one commit moves the whole row family under `newBuckets`
-    * (an O(ledger) rewrite by definition, amortized over the corpus
-    * growth that forced it); later commits must pass the new bucket
-    * count. The row schema rides through unchanged. */
+    * carries: one commit moves the whole row family, the delta chain
+    * folded in, under `newBuckets` (an O(table) rewrite by definition,
+    * amortized over the corpus growth that forced it); later commits
+    * must pass the new bucket count. The row schema rides through
+    * unchanged. */
   def rebucket(spark: SparkSession, root: String, keyCol: String,
                newBuckets: Int, publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
@@ -568,37 +814,34 @@ object TxTableStack {
       val st = Manifest.read(spark, root).getOrElse(
         throw new IllegalStateException(
           s"table not initialized at $root — call init first"))
-      if (st.statsV.isEmpty) false
+      if (st.statsV.isEmpty && st.deltas.isEmpty) false
       else {
         val schema = schemaOf(st)
-        val key = schema.find(keyCol).getOrElse(throw
-          new IllegalArgumentException(
-            s"key column $keyCol is not in the table schema")).name
+        val key = keyField(schema, keyCol).name
         val vNew = st.version + 1
         val pins = Manifest.moveFamily(
           toPhysical(readRows(spark, root, st, schema, None)
             .withColumn("bkt", bktOf(col(key), newBuckets)), schema),
           "rows", root, vNew)
         if (publish)
-          Manifest.commit(spark, root,
-            st.copy(version = vNew, statsV = pins))
+          Manifest.commit(spark, root, st.copy(version = vNew, statsV = pins,
+            deltas = Seq.empty, deltaKey = -1))
         true
       }
     }
 
   /** COMPACTION — the OPTIMIZE face ([[Ledger.compactBuckets]]'s
-    * sibling under the manifest): every upsert/merge/delete drain
-    * leaves each touched bucket's new pin with as many files as the
-    * write had tasks, so a bucket's read cost fragments over time —
-    * the exact law the text index's compactor already cures. Elect
-    * fragmented buckets FROM METADATA ALONE (file count per pinned
-    * bucket directory — no data read), rewrite exactly those buckets
-    * content-identically to ONE file each through the normal
-    * write-and-repin law, and publish one maintenance commit (the
-    * batch high-water is untouched — compaction is not a batch).
-    * Unelected buckets keep their pins: their bytes are untouched by
-    * construction. Returns the elected bucket ids (empty → nothing
-    * fragmented, nothing committed). */
+    * sibling under the manifest). Two things fragment a table's read:
+    * the delta chain, and base buckets written as many files as their
+    * write had tasks. Elect FROM METADATA ALONE every bucket a pending
+    * delta touches plus every pinned bucket with more than
+    * `maxFilesPerBucket` files (a listing, no data read), fold the
+    * chain into those buckets and rewrite each content-identically to
+    * ONE file through the normal write-and-repin law, and publish one
+    * maintenance commit (the batch high-water is untouched —
+    * compaction is not a batch). Unelected buckets keep their pins:
+    * their bytes are untouched by construction. Returns the elected
+    * bucket ids (empty → nothing to do, nothing committed). */
   def compact(spark: SparkSession, root: String,
               maxFilesPerBucket: Int = 1,
               publish: Boolean = true): Seq[Int] =
@@ -608,29 +851,20 @@ object TxTableStack {
         throw new IllegalStateException(
           s"table not initialized at $root — call init first"))
       val conf = spark.sessionState.newHadoopConf()
-      val fsys = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-      val elected = st.statsV.toSeq.filter { case (b, v) =>
-        val dir = new org.apache.hadoop.fs.Path(s"$root/rows/v=$v/bkt=$b")
-        fsys.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) >
-          maxFilesPerBucket
-      }.map(_._1).sorted
-      if (elected.nonEmpty && publish) {
-        val schema = schemaOf(st)
-        val vNew = st.version + 1
-        // repartition on bkt puts each elected bucket in ONE task,
-        // hence ONE file under its new pin — the compaction itself
-        val rewritten = toPhysical(
-          readRows(spark, root, st, schema, Some(elected)), schema)
-          .repartition(col("bkt"))
-        Manifest.commit(spark, root, st.copy(version = vNew,
-          statsV = Manifest.writeRepin(rewritten, "rows", root, vNew,
-            elected, st.statsV)))
-      }
+      val fsys = new Path(root).getFileSystem(conf)
+      val fragmented = st.statsV.toSeq.filter { case (b, v) =>
+        fsys.listStatus(new Path(s"$root/rows/v=$v/bkt=$b"))
+          .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket
+      }.map(_._1)
+      val elected = (fragmented ++ st.deltas.flatMap(_.buckets)).distinct.sorted
+      if (elected.nonEmpty && publish)
+        Manifest.commit(spark, root,
+          fold(spark, root, st, st.version + 1, schemaOf(st), elected))
       elected
     }
 
-  /** Garbage-collect unpinned row versions and retire history below
-    * the retention floor. */
+  /** Garbage-collect unpinned row versions and deltas no retained cut
+    * chains, and retire history below the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
     Manifest.withCommitLock(spark, root) {
@@ -638,8 +872,10 @@ object TxTableStack {
         retainVersions)
       val live = retained.flatMap(_.statsV.map { case (b, v) =>
         s"v=$v/bkt=$b" }).toSet
+      val chained = retained.flatMap(_.deltas.map(d => s"v=${d.token}")).toSet
       val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-        floor, Seq(Manifest.SweepFamily("rows", 2, live)))
+        floor, Seq(Manifest.SweepFamily("rows", 2, live),
+          Manifest.SweepFamily("delta", 1, chained)))
       TxServeStack.VacuumStats(deleted, retired, kept)
     }
 }

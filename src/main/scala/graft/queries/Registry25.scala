@@ -169,12 +169,13 @@ object Registry25 {
 
   /** TABLE COMPACTION ([[TxTableStack.compact]] — the OPTIMIZE face;
     * [[graft.operators.Ledger.compactBuckets]]'s law under the
-    * manifest): three upsert drains leave each touched bucket's pin
-    * with one file per write task (REQUIREd: the fixture actually
-    * fragments), compaction elects fragmented buckets FROM METADATA
-    * ALONE and rewrites exactly those to ONE file each in one
-    * maintenance commit — batch high-water untouched, unelected
-    * buckets' pins (and therefore bytes) untouched, content
+    * manifest): the load writes the bases, and the two upsert drains
+    * on top append merge-on-read deltas (REQUIREd: the fixture
+    * actually fragments — pending deltas or multi-file buckets),
+    * compaction elects the deltas' and the multi-file buckets FROM
+    * METADATA ALONE, folds and rewrites exactly those to ONE file
+    * each in one maintenance commit — batch high-water untouched,
+    * unelected buckets' pins (and therefore bytes) untouched, content
     * bit-identical (the oracle's row set is the witness). A second
     * compact finds nothing and commits nothing. */
   val tableCompact = Q("table_compact",
@@ -200,8 +201,10 @@ object Registry25 {
     def files(b: Int, v: Long): Int =
       new java.io.File(s"$root/rows/v=$v/bkt=$b").listFiles()
         .count(_.getName.endsWith(".parquet"))
-    require(st.statsV.exists { case (b, v) => files(b, v) > 1 },
-      "the drain fixture must actually fragment")
+    require(st.deltas.nonEmpty ||
+      st.statsV.exists { case (b, v) => files(b, v) > 1 },
+      "the drain fixture must actually fragment: pending deltas or " +
+        "multi-file buckets")
     val elected = TxTableStack.compact(s, root)
     require(elected.nonEmpty, "compaction must elect the fragmented buckets")
     val st2 = Manifest.read(s, root).get

@@ -693,4 +693,65 @@ class ManifestSpec extends SparkSpec {
       graft.queries.FixtureCache.deleteRecursively(dir)
     }
   }
+
+  test("pointer swaps leave no scratch files or checksum sidecars; " +
+    "vacuum reclaims sidecars an earlier swap leaked") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mftcrc")
+    try {
+      val root = dir.toString
+      TxTableStack.init(spark, root, "k LONG, lang STRING")
+      for (i <- 0 to 3)
+        assert(TxTableStack.commitBatch(spark, root,
+          Seq((i.toLong, s"v$i")).toDF("k", "lang"), i.toLong, "k", 4))
+      def scratch = dir.toFile.listFiles().toSeq.map(_.getName)
+        .filter(n => n.startsWith("manifest.tmp-") ||
+          (n.startsWith(".manifest.tmp-") && n.endsWith(".crc")))
+      assert(scratch.isEmpty, s"commits left scratch files: $scratch")
+      // a sidecar the checksummed scratch create used to leave behind
+      java.nio.file.Files.write(dir.resolve(".manifest.tmp-2-0f0f.crc"),
+        Array[Byte](1, 2, 3))
+      TxTableStack.vacuum(spark, root)
+      assert(scratch.isEmpty, s"vacuum left scratch files: $scratch")
+      assert(TxTableStack.resolve(spark, root).count() == 4L)
+    } finally {
+      graft.queries.FixtureCache.deleteRecursively(dir)
+    }
+  }
+
+  test("a manifest rendered before the delta chain existed parses with " +
+    "an empty chain, re-renders byte-identically, and keeps serving") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mftold")
+    try {
+      val root = dir.toString
+      TxTableStack.init(spark, root, "k LONG, lang STRING")
+      assert(TxTableStack.commitBatch(spark, root,
+        Seq((1L, "pt"), (2L, "en")).toDF("k", "lang"), 0L, "k", 4))
+      val st = Manifest.read(spark, root).get
+      // the exact layout every manifest had before `deltas=` existed
+      val old = s"version=${st.version}\nbatch=0\nglobal=-1\n" +
+        "stats=" + st.statsV.toSeq.sorted.map { case (b, v) => s"$b:$v" }
+          .mkString(",") +
+        s"\nbase=-1\nbasebatch=-1\naux=\npos=0\nschema=${st.schema}\n"
+      java.nio.file.Files.write(dir.resolve("manifest"),
+        old.getBytes("UTF-8"))
+      val parsed = Manifest.read(spark, root).get
+      assert(parsed.deltas.isEmpty && parsed.deltaKey == -1)
+      assert(parsed.render == old)
+      assert(TxTableStack.resolve(spark, root).orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((1L, "pt"), (2L, "en")))
+      // the next commit appends the table's first delta on top of it
+      assert(TxTableStack.commitBatch(spark, root,
+        Seq((2L, "de")).toDF("k", "lang"), 1L, "k", 4))
+      val next = Manifest.read(spark, root).get
+      assert(next.deltas.size == 1 && next.statsV == st.statsV)
+      assert(next.render.contains("\ndeltas=") &&
+        Manifest.read(spark, root).contains(next))
+      assert(TxTableStack.resolve(spark, root).orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((1L, "pt"), (2L, "de")))
+    } finally {
+      graft.queries.FixtureCache.deleteRecursively(dir)
+    }
+  }
 }

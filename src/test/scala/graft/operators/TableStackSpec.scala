@@ -197,6 +197,9 @@ class TableStackSpec extends SparkSpec {
     val root = mk()
     assert(TxTableStack.commitBatch(spark, root,
       Seq((1L, "xx")).toDF("k", "lang"), 1L, "k", B))
+    // the upsert appended a delta; folding it supersedes the old base
+    // and the delta, which is what vacuum must reclaim
+    assert(TxTableStack.compact(spark, root).nonEmpty)
     val head = rows(root)
     val stats = TxTableStack.vacuum(spark, root, retainVersions = 0)
     assert(stats.deletedDirs > 0)
@@ -458,5 +461,216 @@ class TableStackSpec extends SparkSpec {
     val v2 = Manifest.read(spark, root).get.version
     assert(TxTableStack.compact(spark, root).isEmpty)
     assert(Manifest.read(spark, root).get.version == v2)
+  }
+
+  private def deltaDirs(root: String): Set[String] =
+    Option(new java.io.File(s"$root/delta").listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName).toSet
+
+  test("merge-on-read: commits into a loaded table append deltas; " +
+    "the chain cap and compaction fold them into the bases") {
+    val root = mk() // the first commit writes the bases directly
+    val st0 = Manifest.read(spark, root).get
+    assert(st0.deltas.isEmpty && st0.statsV.nonEmpty)
+    for (i <- 1 to 6)
+      assert(TxTableStack.commitBatch(spark, root,
+        Seq((i.toLong, s"v$i")).toDF("k", "lang"), i.toLong, "k", B))
+    val st6 = Manifest.read(spark, root).get
+    assert(st6.deltas.size == 6 && st6.statsV == st0.statsV,
+      "an upsert into a loaded table must append, not rewrite buckets")
+    assert(deltaDirs(root) == st6.deltas.map(d => s"v=${d.token}").toSet)
+    assert(TxTableStack.commitDelete(spark, root, Seq(2L).toDF("k"),
+      7L, "k", B))
+    assert(Manifest.read(spark, root).get.deltas.size == 7)
+    // the eighth delta would reach the cap: this commit folds instead
+    assert(TxTableStack.commitBatch(spark, root,
+      Seq((9L, "nine")).toDF("k", "lang"), 8L, "k", B))
+    val st8 = Manifest.read(spark, root).get
+    assert(st8.deltas.isEmpty, "the capped commit must fold the chain")
+    val want = Seq((1L, "v1"), (3L, "v3"), (4L, "v4"), (5L, "v5"),
+      (6L, "v6"), (9L, "nine"))
+    assert(rows(root).map(t => (t._1, t._2)) == want)
+    assert(TxTableStack.commitBatch(spark, root,
+      Seq((3L, "tres")).toDF("k", "lang"), 9L, "k", B))
+    assert(Manifest.read(spark, root).get.deltas.size == 1)
+    assert(TxTableStack.compact(spark, root).nonEmpty)
+    assert(Manifest.read(spark, root).get.deltas.isEmpty)
+    assert(rows(root).map(t => (t._1, t._2)) ==
+      want.map(t => if (t._1 == 3L) (3L, "tres") else t))
+    // the chain's key column cannot be dropped while deltas are pending
+    assert(TxTableStack.commitBatch(spark, root,
+      Seq((4L, "quatro")).toDF("k", "lang"), 10L, "k", B))
+    intercept[IllegalArgumentException] {
+      TxTableStack.evolveDrop(spark, root, "k")
+    }
+  }
+
+  test("a delta written without its swap stays invisible; the replay " +
+    "converges bit-identically; vacuum reclaims the orphan") {
+    val straight = mk()
+    val crashed = mk()
+    val up = Seq((2L, "de"), (5L, "it")).toDF("k", "lang")
+    val del = Seq(1L).toDF("k")
+    assert(TxTableStack.commitBatch(spark, straight, up, 1L, "k", B))
+    assert(TxTableStack.commitDelete(spark, straight, del, 2L, "k", B))
+    val before = rows(crashed)
+    val v = Manifest.read(spark, crashed).get.version
+    assert(TxTableStack.commitBatch(spark, crashed, up, 1L, "k", B,
+      publish = false))
+    assert(deltaDirs(crashed).size == 1, "the crashed delta landed")
+    assert(Manifest.read(spark, crashed).get.version == v &&
+      rows(crashed) == before, "an unswapped delta leaked to a reader")
+    assert(TxTableStack.commitBatch(spark, crashed, up, 1L, "k", B))
+    assert(TxTableStack.commitDelete(spark, crashed, del, 2L, "k", B,
+      publish = false))
+    assert(TxTableStack.commitDelete(spark, crashed, del, 2L, "k", B))
+    def all(root: String) = TxTableStack.resolve(spark, root)
+      .orderBy("k").collect().toSeq
+    assert(all(crashed) == all(straight),
+      "crash + replay drifted from the straight-through run")
+    val chained = Manifest.read(spark, crashed).get.deltas
+      .map(d => s"v=${d.token}").toSet
+    assert(deltaDirs(crashed).size == 4 && chained.size == 2)
+    val vs = TxTableStack.vacuum(spark, crashed)
+    assert(vs.deletedDirs >= 2, "vacuum must reclaim both orphan deltas")
+    assert(deltaDirs(crashed) == chained)
+    assert(all(crashed) == all(straight))
+  }
+
+  test("resolve and changes build their frames without a Spark job") {
+    val root = mk()
+    assert(TxTableStack.commitBatch(spark, root,
+      Seq((2L, "de"), (4L, "fr")).toDF("k", "lang"), 1L, "k", B))
+    assert(TxTableStack.evolveSchema(spark, root, "quality DOUBLE"))
+    assert(TxTableStack.commitDelete(spark, root, Seq(3L).toDF("k"),
+      2L, "k", B))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val head = TxTableStack.resolve(spark, root)
+      val snap = TxTableStack.resolve(spark, root, Some(1L))
+      val feed = TxTableStack.changes(spark, root, 1L, 4L, "k")
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      assert(jobs.get == 0,
+        s"building the frames ran ${jobs.get} Spark jobs")
+      assert(head.orderBy("k").collect().map(_.getLong(0)).toSeq ==
+        Seq(1L, 2L, 4L))
+      assert(snap.count() == 3L)
+      assert(feed.orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(3))).toSeq ==
+        Seq((2L, "update"), (3L, "delete"), (4L, "insert")))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("seeded model: random upsert/delete/merge/compact/evolve " +
+    "sequences resolve and feed like an in-memory fold") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(6011L)
+    val root = newRoot()
+    TxTableStack.init(spark, root, "k LONG, lang STRING, n BIGINT")
+    // the model: field id -> name per cut, and key -> (field id -> value)
+    type Rec = Map[Int, Any]
+    var names: Seq[(Int, String)] = Seq(1 -> "k", 2 -> "lang", 3 -> "n")
+    var table = Map.empty[Long, Rec]
+    val cuts = scala.collection.mutable.Map[Long, (Seq[(Int, String)],
+      Map[Long, Rec])]()
+    def record(): Unit =
+      cuts(Manifest.read(spark, root).get.version) = (names, table)
+    record()
+    def nameOf(id: Int) = names.find(_._1 == id).get._2
+    def frame(recs: Seq[Rec], ids: Seq[Int]): DataFrame = {
+      val types = Map(1 -> LongType, 2 -> StringType, 3 -> LongType,
+        4 -> DoubleType)
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          recs.map(r => Row.fromSeq(ids.map(r.getOrElse(_, null)))), 2),
+        StructType(ids.map(i => StructField(nameOf(i), types(i)))))
+    }
+    def someKeys(n: Int): Seq[Long] =
+      rnd.shuffle((0L until 64L).toList).take(n)
+    val langs = Seq("pt", "en", "es", "de")
+    val plan = Seq("up", "up", "merge", "del", "up", "evolve", "merge",
+      "up", "del", "up", "rename", "up", "compact", "merge", "del", "up")
+    var batch = 0L
+    plan.foreach { op =>
+      batch += 1
+      op match {
+        case "up" =>
+          val withQ = names.exists(_._1 == 4) && rnd.nextBoolean()
+          val recs = someKeys(1 + rnd.nextInt(12)).map { k =>
+            Map[Int, Any](1 -> k, 2 -> langs(rnd.nextInt(4)),
+              3 -> rnd.nextInt(100).toLong) ++
+              (if (withQ) Map(4 -> k * 0.5) else Map.empty) }
+          val ids = Seq(1, 2, 3) ++ (if (withQ) Seq(4) else Nil)
+          assert(TxTableStack.commitBatch(spark, root, frame(recs, ids),
+            batch, "k", B))
+          recs.foreach(r => table += r(1).asInstanceOf[Long] -> r)
+        case "del" =>
+          val ks = someKeys(1 + rnd.nextInt(6))
+          assert(TxTableStack.commitDelete(spark, root,
+            ks.toDF("k"), batch, "k", B))
+          table --= ks
+        case "merge" =>
+          val recs = someKeys(1 + rnd.nextInt(10)).map { k =>
+            Map[Int, Any](1 -> k, 2 -> langs(rnd.nextInt(4)),
+              3 -> rnd.nextInt(100).toLong) }
+          assert(TxTableStack.commitMerge(spark, root,
+            frame(recs, Seq(1, 2, 3)), batch, "k", B,
+            onMatched = Map(nameOf(3) -> s"s.${nameOf(3)} + b.${nameOf(3)}"),
+            deleteWhen = Some(s"s.${nameOf(3)} >= 90")))
+          recs.foreach { b =>
+            val k = b(1).asInstanceOf[Long]
+            table.get(k) match {
+              case None => table += k -> b
+              case Some(s) if s.get(3).exists(_.asInstanceOf[Long] >= 90) =>
+                table -= k
+              case Some(s) => table += k -> (s + (3 ->
+                (s(3).asInstanceOf[Long] + b(3).asInstanceOf[Long])))
+            }
+          }
+        case "evolve" =>
+          assert(TxTableStack.evolveSchema(spark, root, "q DOUBLE"))
+          names :+= 4 -> "q"
+        case "rename" =>
+          assert(TxTableStack.evolveRename(spark, root, "lang", "language"))
+          names = names.map(f => if (f._1 == 2) 2 -> "language" else f)
+        case "compact" =>
+          TxTableStack.compact(spark, root)
+      }
+      record()
+    }
+    assert(cuts.size == plan.size + 1, "every op must have committed")
+    def render(ns: Seq[(Int, String)], r: Rec): Seq[Any] =
+      ns.map(f => r.getOrElse(f._1, null))
+    cuts.toSeq.sortBy(_._1).foreach { case (v, (ns, t)) =>
+      val got = TxTableStack.resolve(spark, root, Some(v)).collect()
+        .map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+      assert(got == t.toSeq.sortBy(_._1).map(e => render(ns, e._2)),
+        s"resolve at v$v differs from the model")
+      if (v > 0) {
+        val (_, prev) = cuts(v - 1)
+        val want = (prev.keySet ++ t.keySet).toSeq.sorted.flatMap { k =>
+          (prev.get(k), t.get(k)) match {
+            case (None, Some(a)) => Some(render(ns, a) :+ "insert")
+            case (Some(_), None) =>
+              Some((k +: ns.tail.map(_ => null)) :+ "delete")
+            case (Some(b), Some(a)) if render(ns, b) != render(ns, a) =>
+              Some(render(ns, a) :+ "update")
+            case _ => None
+          }
+        }
+        val feed = TxTableStack.changes(spark, root, v - 1, v, "k")
+          .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+        assert(feed == want, s"changes(v${v - 1}, v$v) differs from the model")
+      }
+    }
   }
 }

@@ -8,4 +8,10 @@ package org.apache.spark
 object GraftTestBridge {
   def clearCheckpointDir(sc: SparkContext): Unit =
     sc.checkpointDir = None
+
+  /** Wait until every listener event posted so far is delivered — the
+    * listener bus is not public — so a test's counting listener has
+    * seen every job that has started. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }
