@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
   StructType}
@@ -77,6 +78,18 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
   *    chain [[ChainCap]] long FOLD the chain into per-bucket bases
   *    through the same write-and-repin law; [[vacuum]] keeps the deltas
   *    of retained cuts and reclaims the rest.
+  *
+  * A COMMIT IS ONE WRITE. [[commitBatch]] and [[commitDelete]] land
+  * their images in one Spark write, and the batch guard (no null key, no
+  * repeated key) and the election of the touched buckets ride on that
+  * write as observed metrics ([[guardMetrics]]). The commit reads them
+  * once the write is done; a refusal deletes the directory it just wrote
+  * — nothing pins it, no reader ever saw it — and throws, so the table
+  * is left as it was. Two commits need the touched buckets BEFORE they
+  * write and keep the guard as a pass of its own: [[commitMerge]], which
+  * joins its batch against the stored rows of those buckets, and a
+  * commit keyed differently from a pending chain, which folds its images
+  * into those buckets' bases.
   *
   * The trade: a delivery writes O(delivery) bytes — nothing stored is
   * re-read or rewritten at commit — where copy-on-write rewrote every
@@ -169,7 +182,7 @@ object TxTableStack {
   /** The chain length at which a commit folds the chain into the bases
     * instead of appending a delta: it bounds a read's merge work at
     * this many deltas. */
-  private val ChainCap = 8
+  private[operators] val ChainCap = 8
 
   /** Create the table at `root` with its initial row schema (Spark
     * DDL, e.g. `"doc_id LONG, lang STRING"` — normalized into the
@@ -342,31 +355,71 @@ object TxTableStack {
     }: _*)
   }
 
-  /** The batch-shape REQUIREs every keyed write face shares: the key
-    * column exists, no batch row has a null key (a null key has no
-    * bucket), and the batch carries each key ONCE — a duplicated key
-    * would persist duplicate rows in [[commitBatch]] and fan out the
-    * join in [[commitMerge]], double-applying an additive rule WITHIN
-    * one commit (the corruption the batch-id guard prevents ACROSS
-    * commits). FUSED with the bucket election: one agg pass returns the
-    * touched `bkt` set (bounded by B) alongside the null-key and
-    * duplicate-key counters, instead of a guard action plus a separate
-    * election action (guide §2.4 — remove redundant passes). Callers
-    * pass a LAZY-checkpointed `rows`: this single drain is also what
-    * materializes the checkpoint. */
-  private def requireKeyedBatchBuckets(rows: DataFrame,
-                                       keyCol: String): Seq[Int] = {
-    val c = rows.agg(count(lit(1)), count(col(keyCol)),
-      countDistinct(col(keyCol)), collect_set(col("bkt"))).head()
-    require(c.getLong(0) == c.getLong(1),
-      s"${c.getLong(0) - c.getLong(1)} batch rows carry a NULL $keyCol " +
+  /** The batch-shape guard every keyed write face shares: the key column
+    * exists, no row has a null key (a null key has no bucket), and no key
+    * appears on two rows — a repeated key would persist duplicate rows in
+    * [[commitBatch]] and fan out the join in [[commitMerge]],
+    * double-applying an additive rule WITHIN one commit (the corruption
+    * the batch-id guard prevents ACROSS commits). Over `rows` + `bkt` +
+    * `_n` (the row count of each row's key, `count(*) over (partition by
+    * key)`), three aggregates settle it and elect the touched buckets on
+    * the same pass: the rows with a null key, the rows whose key repeats,
+    * and the set of `bkt` values.
+    *
+    * Both counters count BAD rows, so each is zero exactly when the batch
+    * is clean. Observed on a write ([[Dataset.observe]]), a re-run task
+    * merges its rows into the accumulators again: that can only add to a
+    * counter already non-zero, never make a clean batch refuse or a bad
+    * one pass. A guard computed as the difference of two counts (rows
+    * minus keys) would break under that double count; none is. */
+  private def guardMetrics(key: String): Seq[Column] = Seq(
+    count_if(col(key).isNull).as("nulls"),
+    count_if(col(key).isNotNull && col("_n") > 1).as("repeats"),
+    collect_set(col("bkt")).as("bkts"))
+
+  /** The `_n` column [[guardMetrics]] reads for a batch whose keys may
+    * repeat: one shuffle by key, shared with nothing else. */
+  private def keyRows(key: String): Column =
+    count(lit(1)).over(Window.partitionBy(col(key)))
+
+  /** REQUIRE the guard's counters zero and return the touched buckets.
+    * A refused commit first deletes `orphan`, the directory its write
+    * landed: nothing pins it, and the table is left as it was. */
+  private def requireGuard(spark: SparkSession, g: Row, key: String,
+                           orphan: Option[String]): Seq[Int] = {
+    val nulls = g.getAs[Long]("nulls")
+    val repeats = g.getAs[Long]("repeats")
+    if (nulls > 0 || repeats > 0) orphan.foreach(deleteDir(spark, _))
+    require(nulls == 0,
+      s"$nulls batch rows carry a NULL $key " +
         "— a null key resolves to no bucket; filter or fix upstream")
-    require(c.getLong(1) == c.getLong(2),
-      s"batch carries ${c.getLong(1) - c.getLong(2)} duplicate " +
-        s"$keyCol rows — an upsert batch is a set of after-images, " +
-        "one per key; fold duplicates deterministically upstream")
-    c.getSeq[Int](3)
+    require(repeats == 0,
+      s"$repeats batch rows share their $key with another batch row " +
+        "— an upsert batch is a set of after-images, one per key; fold " +
+        "duplicates deterministically upstream")
+    g.getSeq[Int](g.fieldIndex("bkts"))
   }
+
+  /** The guard as its own pass over `rows`, for the commits that need
+    * the touched buckets before they write. Callers pass a
+    * LAZY-checkpointed `rows`: this one drain also materializes it. */
+  private def guardPass(spark: SparkSession, rows: DataFrame, key: String,
+                        n: Column): Seq[Int] = {
+    val m = guardMetrics(key)
+    requireGuard(spark, rows.withColumn("_n", n).agg(m.head, m.tail: _*)
+      .head(), key, None)
+  }
+
+  private def deleteDir(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+  }
+
+  /** How long a commit waits for its write's observed guard. The
+    * observation completes on the listener bus right after the write
+    * returns; the bound only turns a lost observation into an error
+    * instead of a hang. */
+  private val ObserveTimeout = scala.concurrent.duration.Duration(5, "min")
 
   private def keyField(schema: TableSchema, keyCol: String): TField =
     schema.find(keyCol).getOrElse(throw new IllegalArgumentException(
@@ -409,41 +462,68 @@ object TxTableStack {
 
   /** The write path every keyed face shares: land `images` — the
     * commit's after-images (`_del` false) and key-only tombstones
-    * (`_del` true) on the table schema, + bkt, all in the `touched`
-    * buckets — as the state of version `vNew`:
+    * (`_del` true) on the table schema, + bkt — as the state of version
+    * `vNew`, in ONE Spark write that carries the guard
+    * ([[guardMetrics]], `n` its `_n` column) through
+    * [[Dataset.observe]]:
     *
     *  - into a table with no rows yet, the images ARE the base: they
-    *    write the touched buckets directly;
+    *    write their buckets directly;
     *  - otherwise they append ONE delta directory and pin it at the end
-    *    of the chain — O(delivery) bytes, no stored row re-read;
-    *  - the commit that would make the chain [[ChainCap]] long folds the
-    *    chain and its own images into the bases instead; a commit keyed
-    *    differently from a pending chain folds the chain, then its own
-    *    images (a chain has one key). */
+    *    of the chain — O(delivery) bytes, no stored row re-read; the
+    *    commit that makes the chain [[ChainCap]] long then folds the
+    *    whole chain, its own delta included, into the bases.
+    *
+    * The guard is read after the write: a refusal deletes the directory
+    * the write landed (nothing pins it) and throws, and images that touch
+    * no bucket delete it and pin nothing. No pre-pass and no checkpoint
+    * run. The exception is a commit keyed differently from a pending
+    * chain: a chain has one key, so it folds the chain, then its own
+    * images into the buckets they touch, and that second fold must know
+    * those buckets before it writes — it keeps the guard as its own pass
+    * ([[guardPass]]), as [[commitMerge]] does to read the stored rows its
+    * batch joins. */
   private def land(spark: SparkSession, root: String, st: Manifest.State,
                    vNew: Long, batchId: Long, schema: TableSchema,
-                   key: TField, images: DataFrame,
-                   touched: Seq[Int]): Manifest.State = {
-    val chained = st.deltas.flatMap(_.buckets).distinct
+                   key: TField, images: DataFrame, n: Column): Manifest.State = {
     val landed =
-      if (touched.isEmpty) st
-      else if (st.statsV.isEmpty && st.deltas.isEmpty)
-        st.copy(statsV = Manifest.writeRepin(
-          toPhysical(images.filter(!col("_del")), schema),
-          "rows", root, vNew, touched, st.statsV))
-      else if (st.deltas.nonEmpty && st.deltaKey != key.id)
-        fold(spark, root,
-          fold(spark, root, st, vNew, schema, chained).copy(deltaKey = key.id),
-          vNew, schema, touched, Seq(images))
-      else if (st.deltas.size + 1 >= ChainCap)
-        fold(spark, root, st, vNew, schema, (chained ++ touched).distinct,
-          Seq(images))
-      else {
+      if (st.deltas.nonEmpty && st.deltaKey != key.id) {
+        val rows = images.localCheckpoint(eager = false) // drained by the guard
+        val touched = guardPass(spark, rows, key.name, n)
+        if (touched.isEmpty) st
+        else fold(spark, root,
+          fold(spark, root, st, vNew, schema, st.deltas.flatMap(_.buckets).distinct)
+            .copy(deltaKey = key.id),
+          vNew, schema, touched, Seq(rows))
+      } else {
+        val first = st.statsV.isEmpty && st.deltas.isEmpty
         val tok = Manifest.attemptVersion(vNew)
-        toPhysical(images, schema, "_del")
-          .write.mode("overwrite").parquet(s"$root/delta/v=$tok")
-        st.copy(deltas = st.deltas :+ Manifest.Delta(tok, touched.sorted),
-          deltaKey = key.id)
+        val dir = s"$root/${if (first) "rows" else "delta"}/v=$tok"
+        val obs = Observation()
+        val m = guardMetrics(key.name)
+        val seen = images.withColumn("_n", n).observe(obs, m.head, m.tail: _*)
+          .drop("_n")
+        if (first)
+          toPhysical(seen.filter(!col("_del")), schema)
+            .write.partitionBy("bkt").mode("overwrite").parquet(dir)
+        else
+          toPhysical(seen, schema, "_del").write.mode("overwrite").parquet(dir)
+        val touched = requireGuard(spark,
+          scala.concurrent.Await.result(obs.future, ObserveTimeout),
+          key.name, Some(dir))
+        if (first) {
+          val present = Manifest.writtenBuckets(spark, dir)
+          if (present.isEmpty) deleteDir(spark, dir)
+          st.copy(statsV = present.map(_ -> tok).toMap)
+        } else if (touched.isEmpty) { deleteDir(spark, dir); st }
+        else {
+          val chained = st.copy(
+            deltas = st.deltas :+ Manifest.Delta(tok, touched.sorted),
+            deltaKey = key.id)
+          if (chained.deltas.size < ChainCap) chained
+          else fold(spark, root, chained, vNew, schema,
+            chained.deltas.flatMap(_.buckets).distinct)
+        }
       }
     landed.copy(version = vNew, batchId = batchId)
   }
@@ -451,8 +531,9 @@ object TxTableStack {
   /** TRANSACTIONAL UPSERT — the batch's rows are AFTER-IMAGES:
     * each replaces its key's stored row wholesale (or inserts); rows
     * the batch never named ride through verbatim. The batch must carry
-    * each key exactly once (REQUIREd). Lagging writers null-fill (see
-    * [[align]]). Exactly-once by batch id. */
+    * each key exactly once (REQUIREd, on the commit's one write — see
+    * [[land]]). Lagging writers null-fill (see [[align]]). Exactly-once
+    * by batch id. */
   def commitBatch(spark: SparkSession, root: String, batch: DataFrame,
                   batchId: Long, keyCol: String, buckets: Int,
                   publish: Boolean = true): Boolean =
@@ -464,16 +545,16 @@ object TxTableStack {
       val key = keyField(schema, keyCol)
       val rows = align(batch, schema)
         .withColumn("bkt", bktOf(col(key.name), buckets))
-        .localCheckpoint(eager = false) // materialized by the fused guard
-      val touched = requireKeyedBatchBuckets(rows, key.name)
       land(spark, root, st, vNew, batchId, schema, key,
-        rows.withColumn("_del", lit(false)), touched)
+        rows.withColumn("_del", lit(false)), keyRows(key.name))
     }
 
   /** TRANSACTIONAL DELETE — drop the keys' rows: one key-only tombstone
     * per distinct key; absent keys are no-ops (replay- and
     * double-delete-exact). Keys are cast to the key column's type
-    * before they are bucketed, as upserted rows are. */
+    * before they are bucketed, as upserted rows are. The distinct keys
+    * are one per non-null key by construction, so the guard reads a
+    * constant `_n` and adds no shuffle by key. */
   def commitDelete(spark: SparkSession, root: String, keys: DataFrame,
                    batchId: Long, keyCol: String, buckets: Int,
                    publish: Boolean = true): Boolean =
@@ -486,16 +567,11 @@ object TxTableStack {
       val ids = keys.select(col(keyCol).cast(key.dataType).as(key.name))
         .filter(col(key.name).isNotNull).distinct()
         .withColumn("bkt", bktOf(col(key.name), buckets))
-        // lazy: the election collect drains the frame and materializes
-        // the checkpoint in the same action (guide §2.4)
-        .localCheckpoint(eager = false)
-      val touched = ids.select("bkt").distinct()
-        .collect().map(_.getInt(0)).toSeq
       val tombstones = ids.select(schema.fields.map(f =>
         if (f.id == key.id) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)) ++
         Seq(col("bkt"), lit(true).as("_del")): _*)
-      land(spark, root, st, vNew, batchId, schema, key, tombstones, touched)
+      land(spark, root, st, vNew, batchId, schema, key, tombstones, lit(1L))
     }
 
   /** Resolve each merge rule/predicate against the aliased s ⋈ b
@@ -556,8 +632,8 @@ object TxTableStack {
           s"${unknown.mkString(", ")} — evolveSchema first")
       val rows = align(batch, schema)
         .withColumn("bkt", bktOf(col(key), buckets))
-        .localCheckpoint(eager = false) // materialized by the fused guard
-      val touched = requireKeyedBatchBuckets(rows, key)
+        .localCheckpoint(eager = false) // drained by the guard pass
+      val touched = guardPass(spark, rows, key, keyRows(key))
       if (touched.isEmpty) st.copy(version = vNew, batchId = batchId)
       else {
         val sKey = col(s"s.$key")
@@ -585,7 +661,7 @@ object TxTableStack {
                   .otherwise(bC)))
               .cast(f.dataType).as(f.name)
           } ++ Seq(col("b.bkt").as("bkt"), del.as("_del")): _*)
-        land(spark, root, st, vNew, batchId, schema, keyF, images, touched)
+        land(spark, root, st, vNew, batchId, schema, keyF, images, lit(1L))
       }
     }
 
@@ -732,7 +808,10 @@ object TxTableStack {
     * and delta either cut holds is read ONCE, flagged with the cuts
     * that hold it, and one aggregation by key takes each cut's newest
     * row (ranked as in [[readRows]]) — no full-outer join of two
-    * separately resolved cuts. An evolution-only window reads and emits
+    * separately resolved cuts. A cut whose chain is keyed by another
+    * column than `keyCol` is the exception: its tombstones carry only
+    * that column, so each cut of the read set is resolved by its own
+    * chain's key first. An evolution-only window reads and emits
     * nothing. */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Long, keyCol: String): DataFrame = {
@@ -763,7 +842,17 @@ object TxTableStack {
     // every write either cut holds, read once, tagged with the cuts
     // holding it
     val pins = pinsF.toSeq ++ pinsT
-    val rows = ((if (pins.isEmpty) Nil
+    val rows = if (Seq(stF, stT).exists(s => s.deltas.nonEmpty &&
+        s.deltaKey != keyF.id)) {
+      // a chain keyed by another column names the keys of its
+      // tombstones in that column alone: resolve each cut by its own
+      // chain's key, then diff the two (one live row per key and cut)
+      Seq(stF -> true, stT -> false).map { case (st, inF) =>
+        readRows(spark, root, st, target, Some(read)).select(col("*"),
+          lit(0L).as("_v"), lit(false).as("_del"), lit(inF).as("_inF"),
+          lit(!inF).as("_inT"))
+      }.reduce(_.unionByName(_))
+    } else ((if (pins.isEmpty) Nil
       else Seq(readBase(spark, root, pins, target, p =>
         Seq("_inF" -> pinsF.get(p._1).contains(p._2),
           "_inT" -> pinsT.get(p._1).contains(p._2)))

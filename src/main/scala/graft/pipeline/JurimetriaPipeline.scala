@@ -140,11 +140,13 @@ object JurimetriaPipeline {
   }
 
   /** A1/F7/O2: the reference's one analytical query — filing-hour
-    * histogram in São Paulo wall-clock (plot_horario :271-296). */
+    * histogram in São Paulo wall-clock (plot_horario :271-296). At most
+    * 24 rows, so they are sorted in ONE partition: a global `orderBy`
+    * would add a range-sampling job and a sort shuffle for them. */
   def hourHistogram(processos: DataFrame): DataFrame =
     processos
       .filter(col("data_ajuizamento").isNotNull)
       .groupBy(TimeFns.hourSp(col("data_ajuizamento")).as("hora"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("hora")
+      .coalesce(1).sortWithinPartitions("hora")
 }

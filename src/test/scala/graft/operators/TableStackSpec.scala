@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * (5) the change feed classifies across the evolution boundary
   *     (before projected onto the after schema) and an
   *     evolution-only window emits nothing;
-  * (6) vacuum retires below the floor, the head keeps serving. */
+  * (6) vacuum retires below the floor, the head keeps serving;
+  * (7) an upsert or delete into a loaded table runs one SQL action, its
+  *     write; a refused one leaves no directory behind. */
 class TableStackSpec extends SparkSpec {
   import spark.implicits._
 
@@ -433,8 +435,16 @@ class TableStackSpec extends SparkSpec {
     "content-identically; unelected buckets keep their pins") {
     val root = newRoot()
     TxTableStack.init(spark, root, "k LONG, lang STRING")
-    // three upserts into the same buckets → multi-file pinned dirs
-    for (i <- 0 to 2)
+    // the first load writes the bases from its shuffle by key; with
+    // AQE's partition coalescing off that shuffle keeps its 4
+    // partitions, each writing a file into most buckets → multi-file
+    // pinned dirs; two more upserts append deltas to the same buckets
+    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalescing, "false")
+    try assert(TxTableStack.commitBatch(spark, root,
+      (0L to 40L).map(k => (k, "v0")).toDF("k", "lang"), 0L, "k", B))
+    finally spark.conf.unset(coalescing)
+    for (i <- 1 to 2)
       assert(TxTableStack.commitBatch(spark, root,
         (0L to 40L).map(k => (k, s"v$i")).toDF("k", "lang"),
         i.toLong, "k", B))
@@ -569,16 +579,127 @@ class TableStackSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The `v=` dirs of the table's base and delta families. */
+  private def versionDirs(root: String): Set[String] =
+    Seq("rows", "delta").flatMap(f =>
+      Option(new java.io.File(s"$root/$f").listFiles()).toSeq.flatten
+        .filter(_.isDirectory).map(d => s"$f/${d.getName}")).toSet
+
+  test("on a loaded table an upsert and a delete each run one SQL " +
+    "action: the write") {
+    val root = mk()
+    val sc = spark.sparkContext
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def add(qe: org.apache.spark.sql.execution.QueryExecution) =
+        actions.add(qe.logical.nodeName)
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        add(qe)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = add(qe)
+    }
+    def actionsOf(commit: => Boolean): Seq[String] = {
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      actions.clear()
+      assert(commit)
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      actions.toArray.toSeq.map(_.toString)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val up = actionsOf(TxTableStack.commitBatch(spark, root,
+        Seq((2L, "de"), (4L, "fr")).toDF("k", "lang"), 1L, "k", B))
+      assert(up.size == 1 && up.head.contains("Insert"),
+        s"the upsert ran ${up.size} SQL actions: $up")
+      val del = actionsOf(TxTableStack.commitDelete(spark, root,
+        Seq(3L, 99L).toDF("k"), 2L, "k", B))
+      assert(del.size == 1 && del.head.contains("Insert"),
+        s"the delete ran ${del.size} SQL actions: $del")
+    } finally spark.listenerManager.unregister(listener)
+    assert(Manifest.read(spark, root).get.deltas.size == 2)
+    assert(rows(root).map(t => (t._1, t._2)) ==
+      Seq((1L, "pt"), (2L, "de"), (4L, "fr")))
+  }
+
+  test("a refused upsert leaves the table as it was and no directory " +
+    "behind") {
+    val dup = Seq((2L, "de"), (2L, "fr")).toDF("k", "lang")
+    val nul = Seq((Some(2L), "de"), (None, "fr")).toDF("k", "lang")
+    def refuses(root: String, batch: DataFrame): Unit = {
+      val st = Manifest.read(spark, root).get
+      val dirs = versionDirs(root)
+      val before = rows(root)
+      intercept[IllegalArgumentException] {
+        TxTableStack.commitBatch(spark, root, batch, st.batchId + 1, "k", B)
+      }
+      assert(Manifest.read(spark, root).get == st,
+        "a refused commit moved the manifest")
+      assert(versionDirs(root) == dirs,
+        s"a refused commit left ${versionDirs(root) -- dirs} behind")
+      assert(rows(root) == before)
+    }
+    val loaded = mk() // refused deltas
+    refuses(loaded, dup)
+    refuses(loaded, nul)
+    val empty = newRoot() // refused first loads
+    TxTableStack.init(spark, empty, "k LONG, lang STRING")
+    refuses(empty, dup)
+    refuses(empty, nul)
+    assert(TxTableStack.commitBatch(spark, empty,
+      Seq((5L, "it")).toDF("k", "lang"), 0L, "k", B))
+    assert(rows(empty).map(t => (t._1, t._2)) == Seq((5L, "it")))
+  }
+
+  test("an empty upsert and a delete of absent keys commit without " +
+    "waiting on their observation and pin nothing") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    def pinsNothing(root: String)(commit: Long => Boolean): Unit = {
+      val st = Manifest.read(spark, root).get
+      val dirs = versionDirs(root)
+      val done = Future(commit(st.batchId + 1))(ExecutionContext.global)
+      assert(Await.result(done, 120.seconds))
+      val st2 = Manifest.read(spark, root).get
+      assert(st2.version == st.version + 1 && st2.batchId == st.batchId + 1,
+        "the commit must advance version and batch")
+      assert(st2.statsV == st.statsV && st2.deltas == st.deltas,
+        "a commit with nothing to land must pin nothing")
+      assert(versionDirs(root) == dirs,
+        s"a commit with nothing to land left ${versionDirs(root) -- dirs}")
+    }
+    val noRows = Seq.empty[(Long, String)].toDF("k", "lang")
+    val loaded = mk()
+    val before = rows(loaded)
+    pinsNothing(loaded)(b =>
+      TxTableStack.commitBatch(spark, loaded, noRows, b, "k", B))
+    pinsNothing(loaded)(b => TxTableStack.commitDelete(spark, loaded,
+      Seq(Option.empty[Long]).toDF("k"), b, "k", B))
+    assert(rows(loaded) == before)
+    val empty = newRoot() // every key is absent from a table with no rows
+    TxTableStack.init(spark, empty, "k LONG, lang STRING")
+    pinsNothing(empty)(b => TxTableStack.commitDelete(spark, empty,
+      Seq(1L, 2L).toDF("k"), b, "k", B))
+    pinsNothing(empty)(b =>
+      TxTableStack.commitBatch(spark, empty, noRows, b, "k", B))
+    assert(rows(empty).isEmpty)
+  }
+
   test("seeded model: random upsert/delete/merge/compact/evolve " +
     "sequences resolve and feed like an in-memory fold") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val rnd = new scala.util.Random(6011L)
     val root = newRoot()
-    TxTableStack.init(spark, root, "k LONG, lang STRING, n BIGINT")
+    // `k2` mirrors `k` on every row (same type, so the same bucket):
+    // the "up2"/"del2" ops commit keyed by it, which folds a pending
+    // chain keyed by `k` (and back) without changing the model
+    TxTableStack.init(spark, root, "k LONG, lang STRING, n BIGINT, k2 LONG")
     // the model: field id -> name per cut, and key -> (field id -> value)
     type Rec = Map[Int, Any]
-    var names: Seq[(Int, String)] = Seq(1 -> "k", 2 -> "lang", 3 -> "n")
+    var names: Seq[(Int, String)] =
+      Seq(1 -> "k", 2 -> "lang", 3 -> "n", 4 -> "k2")
     var table = Map.empty[Long, Rec]
     val cuts = scala.collection.mutable.Map[Long, (Seq[(Int, String)],
       Map[Long, Rec])]()
@@ -588,7 +709,7 @@ class TableStackSpec extends SparkSpec {
     def nameOf(id: Int) = names.find(_._1 == id).get._2
     def frame(recs: Seq[Rec], ids: Seq[Int]): DataFrame = {
       val types = Map(1 -> LongType, 2 -> StringType, 3 -> LongType,
-        4 -> DoubleType)
+        4 -> LongType, 5 -> DoubleType)
       spark.createDataFrame(
         spark.sparkContext.parallelize(
           recs.map(r => Row.fromSeq(ids.map(r.getOrElse(_, null)))), 2),
@@ -598,32 +719,38 @@ class TableStackSpec extends SparkSpec {
       rnd.shuffle((0L until 64L).toList).take(n)
     val langs = Seq("pt", "en", "es", "de")
     val plan = Seq("up", "up", "merge", "del", "up", "evolve", "merge",
-      "up", "del", "up", "rename", "up", "compact", "merge", "del", "up")
+      "up", "del", "up", "rename", "up", "compact", "merge", "del", "up",
+      "up2", "del2", "up", "up2", "merge", "del", "del2")
+    // the folds a commit (not compact) made: at the chain cap, and on a
+    // key differing from the pending chain's
+    var capFolds, keyFolds = 0
     var batch = 0L
     plan.foreach { op =>
       batch += 1
+      val pre = Manifest.read(spark, root).get
+      val keyId = if (op.endsWith("2")) 4 else 1
       op match {
-        case "up" =>
-          val withQ = names.exists(_._1 == 4) && rnd.nextBoolean()
+        case "up" | "up2" =>
+          val withQ = names.exists(_._1 == 5) && rnd.nextBoolean()
           val recs = someKeys(1 + rnd.nextInt(12)).map { k =>
             Map[Int, Any](1 -> k, 2 -> langs(rnd.nextInt(4)),
-              3 -> rnd.nextInt(100).toLong) ++
-              (if (withQ) Map(4 -> k * 0.5) else Map.empty) }
-          val ids = Seq(1, 2, 3) ++ (if (withQ) Seq(4) else Nil)
+              3 -> rnd.nextInt(100).toLong, 4 -> k) ++
+              (if (withQ) Map(5 -> k * 0.5) else Map.empty) }
+          val ids = Seq(1, 2, 3, 4) ++ (if (withQ) Seq(5) else Nil)
           assert(TxTableStack.commitBatch(spark, root, frame(recs, ids),
-            batch, "k", B))
+            batch, nameOf(keyId), B))
           recs.foreach(r => table += r(1).asInstanceOf[Long] -> r)
-        case "del" =>
+        case "del" | "del2" =>
           val ks = someKeys(1 + rnd.nextInt(6))
           assert(TxTableStack.commitDelete(spark, root,
-            ks.toDF("k"), batch, "k", B))
+            ks.toDF(nameOf(keyId)), batch, nameOf(keyId), B))
           table --= ks
         case "merge" =>
           val recs = someKeys(1 + rnd.nextInt(10)).map { k =>
             Map[Int, Any](1 -> k, 2 -> langs(rnd.nextInt(4)),
-              3 -> rnd.nextInt(100).toLong) }
+              3 -> rnd.nextInt(100).toLong, 4 -> k) }
           assert(TxTableStack.commitMerge(spark, root,
-            frame(recs, Seq(1, 2, 3)), batch, "k", B,
+            frame(recs, Seq(1, 2, 3, 4)), batch, "k", B,
             onMatched = Map(nameOf(3) -> s"s.${nameOf(3)} + b.${nameOf(3)}"),
             deleteWhen = Some(s"s.${nameOf(3)} >= 90")))
           recs.foreach { b =>
@@ -638,15 +765,23 @@ class TableStackSpec extends SparkSpec {
           }
         case "evolve" =>
           assert(TxTableStack.evolveSchema(spark, root, "q DOUBLE"))
-          names :+= 4 -> "q"
+          names :+= 5 -> "q"
         case "rename" =>
           assert(TxTableStack.evolveRename(spark, root, "lang", "language"))
           names = names.map(f => if (f._1 == 2) 2 -> "language" else f)
         case "compact" =>
           TxTableStack.compact(spark, root)
       }
+      val post = Manifest.read(spark, root).get
+      if (pre.deltas.nonEmpty && post.deltas.isEmpty && op != "compact") {
+        if (pre.deltaKey != keyId) keyFolds += 1
+        else if (pre.deltas.size + 1 == TxTableStack.ChainCap) capFolds += 1
+      }
       record()
     }
+    assert(capFolds > 0 && keyFolds > 0,
+      s"the plan must reach both commit folds: $capFolds at the chain " +
+        s"cap, $keyFolds on a key change")
     assert(cuts.size == plan.size + 1, "every op must have committed")
     def render(ns: Seq[(Int, String)], r: Rec): Seq[Any] =
       ns.map(f => r.getOrElse(f._1, null))

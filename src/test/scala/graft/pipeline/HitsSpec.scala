@@ -166,5 +166,18 @@ class HitsSpec extends SparkSpec {
     val h = JurimetriaPipeline.hourHistogram(out
       .withColumn("data_ajuizamento", $"data_ajuizamento")).head()
     assert(h.getLong(0) == 0L && h.getLong(1) == 1L)
+    // several hours, out of order across 4 input partitions (and a null
+    // date, which has no hour), come back one row per hour, ascending
+    val utcHours = Seq(23, 5, 14, 3, 8, 20, 0, 11, 5, 23, 14, 5)
+    val filed = spark.sparkContext.parallelize(
+      utcHours.map(h => Some(f"2023-01-10 $h%02d:00:00")) :+ None, 4)
+      .toDF("s").select(to_timestamp($"s").as("data_ajuizamento"))
+    assert(filed.rdd.getNumPartitions == 4)
+    val got = JurimetriaPipeline.hourHistogram(filed).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val want = utcHours.map(h => ((h + 21) % 24).toLong)
+      .groupBy(identity).map { case (h, hs) => (h, hs.size.toLong) }
+      .toSeq.sorted
+    assert(got == want, s"got $got")
   }
 }
