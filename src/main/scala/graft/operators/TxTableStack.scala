@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
@@ -219,7 +220,10 @@ object TxTableStack {
       .find { f => val n = f.getName
         n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") }
       .getOrElse(throw new IllegalStateException(s"no parquet file under $dir"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    // options built from `conf`: the default builder makes a fresh Hadoop
+    // Configuration, which re-parses the default XML on every call
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
     val written = try Option(reader.getFooter.getFileMetaData
         .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
@@ -432,7 +436,9 @@ object TxTableStack {
     * and each bucket lands as ONE file under a fresh pin through
     * [[Manifest.writeRepin]]; the chain empties. `buckets` must cover
     * every bucket the chain and `extra` touch (more is a
-    * defragmentation of those too). */
+    * defragmentation of those too). A base row whose chain key is null
+    * (written under another key) passes through as itself: no delta can
+    * name a null key, so each such row is a group of its own. */
   private def fold(spark: SparkSession, root: String, st: Manifest.State,
                    vNew: Long, schema: TableSchema, buckets: Seq[Int],
                    extra: Seq[DataFrame] = Nil): Manifest.State = {
@@ -443,13 +449,16 @@ object TxTableStack {
         base.drop("_v").repartition(col("bkt"))
       else {
         val cols = schema.fields.map(_.name) :+ "_del"
+        val key = col(chainKey(st, schema))
         (base.withColumn("_del", lit(false)) +:
           (if (st.deltas.isEmpty) Nil
            else Seq(readDeltas(spark, root, st.deltas, schema, Some(bs)))) ++:
           extra.map(_.withColumn("_v", lit(Long.MaxValue))))
           .reduce(_.unionByName(_))
           .repartition(col("bkt"))
-          .groupBy(col("bkt"), col(chainKey(st, schema)))
+          // after the shuffle, so the id only has to be unique, not stable
+          .withColumn("_nk", when(key.isNull, monotonically_increasing_id()))
+          .groupBy(col("bkt"), key, col("_nk"))
           .agg(max_by(struct(cols.map(col): _*), col("_v")).as("_row"))
           .select(col("bkt") +: cols.map(c => col(s"_row.$c").as(c)): _*)
           .filter(!col("_del"))

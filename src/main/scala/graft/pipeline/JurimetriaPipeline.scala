@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 import graft.functions.TimeFns
@@ -9,16 +11,18 @@ import graft.functions.TimeFns
   * one declarative Spark plan:
   *
   * {{{
-  * for each tribunal: source → flatten → date filter → limit
-  * → union → municipio broadcast-lookup → movimentos JSON → sinks
+  * one scan of every court's dir (tribunal ← the row's dir) → flatten
+  * → date filter → per-court limit (a window over tribunal)
+  * → municipio broadcast-lookup → movimentos JSON → sinks
   * }}}
   *
   * The reference fetches courts sequentially in one thread
   * (/root/reference/src/jurimetria_pipeline.py:217-233); here each court's
-  * file set is just input partitions of one scan and the fan-out
-  * parallelizes for free. The date filter is part of the plan, so Catalyst
-  * pushes it to the scan (the reference applies it client-side after
-  * downloading everything — SURVEY.md §4's anti-pattern).
+  * file set is just input partitions of one scan, whose splits Spark
+  * plans over the whole input, and the fan-out parallelizes for free.
+  * The date filter is part of the plan, so Catalyst pushes it to the scan
+  * (the reference applies it client-side after downloading everything —
+  * SURVEY.md §4's anti-pattern).
   *
   * Config mirrors the CLI surface (:306-341). */
 final case class PipelineConfig(
@@ -35,26 +39,49 @@ object JurimetriaPipeline {
   private def spMidnightUtc(d: String): Column =
     to_utc_timestamp(to_timestamp(lit(d)), TimeFns.SpTz)
 
-  /** Transform tail over already-flattened per-court frames: W2 class
+  /** Transform tail over the flattened frame of every court: W2 class
     * filter, W1 date window (null dates pass, bounds optional), L1 limit
-    * (deterministic under the source's cursor order), U1 union. */
-  def transformTail(perCourt: Seq[DataFrame], conf: PipelineConfig): Option[DataFrame] =
-    Relational.unionAll(perCourt.map { df =>
-      val classed = conf.classeNome.fold(df)(n => df.filter(col("classe") === n))
-      // both bounds are SP-midnight INSTANTS and the window is inclusive
-      // of exactly those instants — the reference compares against the
-      // midnight itself, not end-of-day (:198-199, :208-215)
-      val de = conf.de.map(spMidnightUtc).getOrElse(lit(null).cast("timestamp"))
-      val ate = conf.ate.map(spMidnightUtc).getOrElse(lit(null).cast("timestamp"))
-      val windowed = classed.filter(
-        Relational.withinPeriod(col("data_ajuizamento"), de, ate))
-      // reference counts the limit post-filter, in cursor order (:225-231)
-      conf.maxProcessos.fold(windowed)(n =>
-        windowed.orderBy(col("sort").asc_nulls_last, col("numero_processo")).limit(n))
-    })
+    * PER COURT, deterministic under the source's cursor order. The limit
+    * is `row_number() over (partition by tribunal order by sort asc nulls
+    * last, numero_processo) <= n`, which Spark's WindowGroupLimit applies
+    * to each court's rows before the shuffle. */
+  def transformTail(df: DataFrame, conf: PipelineConfig): DataFrame = {
+    val classed = conf.classeNome.fold(df)(n => df.filter(col("classe") === n))
+    // both bounds are SP-midnight INSTANTS and the window is inclusive
+    // of exactly those instants — the reference compares against the
+    // midnight itself, not end-of-day (:198-199, :208-215)
+    val de = conf.de.map(spMidnightUtc).getOrElse(lit(null).cast("timestamp"))
+    val ate = conf.ate.map(spMidnightUtc).getOrElse(lit(null).cast("timestamp"))
+    val windowed = classed.filter(
+      Relational.withinPeriod(col("data_ajuizamento"), de, ate))
+    // reference counts the limit post-filter, in cursor order (:225-231)
+    conf.maxProcessos.fold(windowed) { n =>
+      val cursor = Window.partitionBy(col("tribunal"))
+        .orderBy(col("sort").asc_nulls_last, col("numero_processo"))
+      windowed.withColumn("_rank", row_number().over(cursor))
+        .filter(col("_rank") <= n).drop("_rank")
+    }
+  }
+
+  /** The court of each scanned row: the one whose directory (qualified,
+    * as the FileSystem reports it) prefixes the row's file. Spark's
+    * `_metadata.file_path` is the URL-encoded URI (`file:/a%20b/x.json`);
+    * decoded, it reads as the file's `Path.toString`. A URI path keeps
+    * `+` literal, but the decoder reads `+` as a space, so it is escaped
+    * first. */
+  private def courtOf(courts: Seq[(String, Path)]): Column = {
+    val file = url_decode(replace(col("_metadata.file_path"), lit("+"), lit("%2B")))
+    val branches = courts.map { case (trib, dir) => (file.startsWith(s"$dir/"), lit(trib)) }
+    branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+      case (w, (hit, trib)) => w.when(hit, trib) }
+  }
 
   /** Full run over raw hit files (one dir per tribunal) + municipio dim.
     * `municipios` must have columns (CD_MUN: long, NM_MUN: string).
+    * Every court's directory is one root of ONE JSON scan, so Spark plans
+    * its splits over the whole input, and each row's `tribunal` comes
+    * from the directory its file lies in. Two courts naming one
+    * directory are refused: their rows could not be told apart.
     *
     * W6 error tolerance: a court whose directory is absent contributes
     * zero rows and the run continues — the reference treats a court
@@ -64,30 +91,34 @@ object JurimetriaPipeline {
     * fully-nullable schema. */
   def run(spark: SparkSession, hitDirs: Map[String, String],
           municipios: DataFrame, conf: PipelineConfig): DataFrame = {
-    // existence is checked through the Hadoop FileSystem of each path —
-    // the FS Spark will actually read with — so hdfs://, s3a:// and glob
-    // paths behave the same as local dirs instead of being silently
+    // directories are qualified and checked through the Hadoop FileSystem
+    // of each path — the FS Spark will actually read with — so hdfs:// and
+    // s3a:// paths behave the same as local dirs instead of being silently
     // dropped by a driver-local java.nio check
-    def exists(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val courts = hitDirs.toSeq.sortBy(_._1).map { case (trib, dir) =>
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      (trib, fs.makeQualified(p), fs)
     }
-    val perCourt = hitDirs.toSeq.sortBy(_._1)
-      .filter { case (_, dir) => exists(dir) }
-      .map { case (trib, dir) =>
-        val raw = spark.read.schema(Hits.hitSchema).json(dir)
+    courts.groupBy(_._2).foreach { case (dir, named) =>
+      require(named.size == 1,
+        s"courts ${named.map(_._1).mkString(", ")} all name the directory $dir")
+    }
+    val present = courts.collect { case (trib, dir, fs) if fs.exists(dir) => (trib, dir) }
+    val flat =
+      if (present.isEmpty)
+        Hits.parseHits(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Hits.hitSchema), lit(""))
+      else {
+        val raw = spark.read.schema(Hits.hitSchema).json(present.map(_._2.toString): _*)
         // W2 on the numeric class code happens PRE-flatten (the flattened
         // frame keeps only classe.nome) — the ES `term` on classe.codigo;
-        // Catalyst pushes it into the JSON scan
+        // Catalyst pushes it down to the JSON scan
         val classed = conf.classeCodigo.fold(raw)(cc =>
           raw.filter(col("_source.classe.codigo") === cc))
-        Hits.parseHits(classed, lit(trib))
+        Hits.parseHits(classed, courtOf(present))
       }
-    val emptyRaw = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Hits.hitSchema)
-    val unioned = transformTail(perCourt, conf)
-      .getOrElse(Hits.parseHits(emptyRaw, lit("")))
-    enrichMunicipio(unioned, municipios)
+    enrichMunicipio(transformTail(flat, conf), municipios)
       .withColumn("movimentos", Hits.movimentosJson(col("movimentos")))
   }
 

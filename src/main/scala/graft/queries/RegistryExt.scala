@@ -376,10 +376,10 @@ object RegistryExt {
       ).as("_source"),
       array(unix_millis(col("o_orderdate"))).as("sort"))
     val parsed = Hits.parseHits(raw, lit("TJX"))
-    val tail = JurimetriaPipeline.transformTail(Seq(parsed), PipelineConfig(
+    val tail = JurimetriaPipeline.transformTail(parsed, PipelineConfig(
       classeNome = Some("1-URGENT"),
       de = Some("1996-01-01"), ate = Some("1996-12-31"),
-      maxProcessos = Some(300))).get
+      maxProcessos = Some(300)))
     val dim = Tables.customer(s, d)
       .filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey").as("CD_MUN"), col("c_name").as("NM_MUN"))

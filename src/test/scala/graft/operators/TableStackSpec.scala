@@ -515,6 +515,39 @@ class TableStackSpec extends SparkSpec {
     }
   }
 
+  test("folds keep base rows whose chain key is null: a key change " +
+    "loses none, and compaction leaves resolve as it was") {
+    // rows loaded under k whose k2 is null: no k2-keyed delta can name
+    // them, so a fold by k2 must pass each one through
+    def load(): String = {
+      val root = newRoot()
+      TxTableStack.init(spark, root, "k LONG, k2 LONG, v STRING")
+      assert(TxTableStack.commitBatch(spark, root,
+        Seq((1L, Option(1L), "a"), (2L, None, "b"), (3L, None, "c"))
+          .toDF("k", "k2", "v"), 0L, "k", 1))
+      root
+    }
+    def up(root: String, r: (Long, Long, String), batch: Long, key: String) =
+      assert(TxTableStack.commitBatch(spark, root,
+        Seq((r._1, Option(r._2), r._3)).toDF("k", "k2", "v"), batch, key, 1))
+    def all(root: String) = TxTableStack.resolve(spark, root)
+      .orderBy("k").collect().toSeq
+    // a k-keyed delta pending, then a k2-keyed upsert: the key change
+    // folds the chain by k, then its own images by k2
+    val rekeyed = load()
+    up(rekeyed, (4L, 4L, "d"), 1L, "k")
+    up(rekeyed, (5L, 5L, "e"), 2L, "k2")
+    assert(all(rekeyed).map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L, 5L))
+    // a k2-keyed chain compacted over the same rows
+    val chained = load()
+    up(chained, (6L, 1L, "f"), 1L, "k2") // replaces the row with k2 = 1
+    val before = all(chained)
+    assert(before.map(_.getLong(0)) == Seq(2L, 3L, 6L))
+    assert(TxTableStack.compact(spark, chained).nonEmpty)
+    assert(Manifest.read(spark, chained).get.deltas.isEmpty)
+    assert(all(chained) == before)
+  }
+
   test("a delta written without its swap stays invisible; the replay " +
     "converges bit-identically; vacuum reclaims the orphan") {
     val straight = mk()

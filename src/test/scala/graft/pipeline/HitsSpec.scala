@@ -149,6 +149,74 @@ class HitsSpec extends SparkSpec {
     assert(out.count() == 3) // malformed rows survive as null records, not crashes
   }
 
+  /** A court directory `name` under `root` holding one page file of `hits`
+    * (numeroProcesso, sort; a null sort is left out). */
+  private def court(root: java.io.File, name: String,
+                    hits: (String, Option[Long])*): String = {
+    val d = new java.io.File(root, name); d.mkdirs()
+    val w = new java.io.PrintWriter(new java.io.File(d, "page-0.json"), "UTF-8")
+    hits.foreach { case (n, sort) =>
+      w.println(s"""{"_source":{"numeroProcesso":"$n","grau":"G1"}""" +
+        sort.fold("}")(v => s""","sort":[$v]}"""))
+    }
+    w.close()
+    d.getAbsolutePath
+  }
+
+  private def labelled(out: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    out.select("tribunal", "numero_processo").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+
+  test("run: one scan over three courts labels each row with its own court") {
+    val root = Files.createTempDirectory("courts").toFile
+    val dirs = Map(
+      "TJA" -> court(root, "TJA", "a1" -> Some(1L), "a2" -> Some(2L)),
+      "TJB" -> court(root, "TJB", "b1" -> Some(3L)),
+      // a court whose name prefixes another's: only its own dir counts
+      "TJ" -> court(root, "TJ", "t1" -> Some(4L), "t2" -> None),
+      "TJGONE" -> new java.io.File(root, "TJGONE").getAbsolutePath) // absent
+    val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
+    assert(labelled(out) == Set("TJA" -> "a1", "TJA" -> "a2", "TJB" -> "b1",
+      "TJ" -> "t1", "TJ" -> "t2"))
+  }
+
+  test("run: court dirs named with a space, %, + and non-ASCII characters") {
+    val root = Files.createTempDirectory("odd courts").toFile
+    // a JVM whose file-name charset (the locale's; ASCII under LANG=C)
+    // cannot encode a name can neither create nor read such a directory
+    val nameable = java.nio.charset.Charset.forName(
+      System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_: String)
+    val names = Seq("TJ São Paulo", "TJ 100%", "TJ%20X", "TJ+1", "TJ 1")
+      .filter(nameable)
+    val dirs = names.zipWithIndex.map { case (n, i) =>
+      n -> court(root, n, s"p$i" -> Some(i.toLong)) }.toMap
+    val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
+    assert(labelled(out) == names.zipWithIndex.map { case (n, i) => n -> s"p$i" }.toSet)
+  }
+
+  test("run: maxProcessos is a per-court limit in cursor order") {
+    val root = Files.createTempDirectory("limit").toFile
+    val dirs = Map(
+      "TJA" -> court(root, "TJA", "a1" -> Some(5L), "a2" -> None, "a3" -> Some(2L)),
+      // a null sort ranks last; a tie on sort falls to numero_processo
+      "TJB" -> court(root, "TJB", "b0" -> None, "b2" -> Some(7L), "b1" -> Some(7L)))
+    val out = JurimetriaPipeline.run(spark, dirs, municipios,
+      PipelineConfig(maxProcessos = Some(1)))
+    assert(labelled(out) == Set("TJA" -> "a3", "TJB" -> "b1"))
+    val two = JurimetriaPipeline.run(spark, dirs, municipios,
+      PipelineConfig(maxProcessos = Some(2)))
+    assert(labelled(two) == Set("TJA" -> "a3", "TJA" -> "a1", "TJB" -> "b1", "TJB" -> "b2"))
+  }
+
+  test("run: a directory named by two courts is refused") {
+    val root = Files.createTempDirectory("twice").toFile
+    val d = court(root, "TJA", "a1" -> Some(1L))
+    intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
+      Map("TJA" -> d, "TJB" -> s"$d/"), municipios, PipelineConfig()))
+    intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
+      Map("TJA" -> d, "TJB" -> s"file:$d"), municipios, PipelineConfig()))
+  }
+
   test("typed Dataset face: Processo encoder round-trips the flattened frame") {
     val raw = spark.read.schema(Hits.hitSchema).json(dir)
     val ds = Hits.typed(Hits.parseHits(raw, lit("TJSP")))

@@ -43,5 +43,23 @@ class JurimetriaCliSpec extends SparkSpec {
       PipelineConfig(classeCodigo = Some(12729L)))
     val rows = out.collect()
     assert(rows.length == 1 && rows.head.getAs[String]("numero_processo") == "1")
+    // over several courts too, and the filter sits on the scan, below the
+    // flatten's projection
+    val tj2 = new java.io.File(root, "TJCE"); tj2.mkdirs()
+    val w2 = new java.io.PrintWriter(new java.io.File(tj2, "p1.json"), "UTF-8")
+    w2.println("""{"_source":{"numeroProcesso":"3","classe":{"codigo":12729,"nome":"ANPP"}},"sort":[3]}""")
+    w2.println("""{"_source":{"numeroProcesso":"4","classe":{"codigo":98,"nome":"ANPP"}},"sort":[4]}""")
+    w2.close()
+    val both = JurimetriaPipeline.run(spark,
+      Map("TJSP" -> tj.getAbsolutePath, "TJCE" -> tj2.getAbsolutePath), municipios,
+      PipelineConfig(classeCodigo = Some(12729L)))
+    assert(both.select("tribunal", "numero_processo").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet == Set("TJSP" -> "1", "TJCE" -> "3"))
+    val onScan = both.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.sql.contains("codigo") => f.child }
+    assert(onScan.nonEmpty && onScan.forall(
+      _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
+      both.queryExecution.optimizedPlan.treeString)
   }
 }
