@@ -43,10 +43,6 @@ object TextFns {
     aggregate(regexTokens(text), lit(0L),
       (acc, t) => acc + ((length(t) + lit(3)) / lit(4)).cast("long"))
 
-  /** Stopword-hit count against a small lexicon (used by language ID). */
-  def stopwordHits(ws: Column, lexicon: Seq[String]): Column =
-    size(filter(ws, w => w.isin(lexicon: _*))).cast("long")
-
   /** English / Portuguese lexicons for the n-gram-free language heuristic.
     * (The reference corpus is pt-BR judicial text; the harness `documents`
     * table is en-ish synthetic — the heuristic is what's under test.) */

@@ -31,6 +31,17 @@ import org.apache.spark.sql.functions._
   * own O(query) serve — nothing scales with the corpus. */
 object Catalog {
 
+  /** The catalog's one asset: the pin table at `globalV`. */
+  private[operators] val families: Seq[Manifest.Family] =
+    Seq(Manifest.Versioned("pins", _.globalV))
+
+  /** The committed head of the catalog at `root`, refusing a root with
+    * none (`what` names it in the error). */
+  private def head(spark: SparkSession, root: String,
+                   what: String): Manifest.State =
+    Manifest.read(spark, root).getOrElse(
+      throw new IllegalStateException(s"no committed $what at $root"))
+
   /** Publish a catalog cut pinning `pins` (stack, root, version) rows;
     * returns the new catalog version. The caller passes versions its
     * own stack commits just returned (or read back) — the catalog
@@ -101,15 +112,11 @@ object Catalog {
   def fastForward(spark: SparkSession, mainRoot: String,
                   stagingRoot: String): Long =
     Manifest.withCommitLock(spark, mainRoot) {
-      val stg = Manifest.read(spark, stagingRoot).getOrElse(
-        throw new IllegalStateException(
-          s"no committed staging catalog at $stagingRoot"))
+      val stg = head(spark, stagingRoot, "staging catalog")
       require(stg.baseV >= 0,
         s"staging catalog at $stagingRoot has no recorded fork point " +
           "— was it created by branch?")
-      val mainV = Manifest.read(spark, mainRoot).getOrElse(
-        throw new IllegalStateException(
-          s"no committed catalog at $mainRoot")).version
+      val mainV = head(spark, mainRoot, "catalog").version
       if (mainV != stg.baseV)
         throw Manifest.CommitConflict(mainRoot, stg.baseV + 1, mainV)
       val staged = pins(spark, stagingRoot).collect()
@@ -126,9 +133,7 @@ object Catalog {
     * branch, and fat-fingering it here must fail loudly, not delete
     * the table readers resolve through. */
   def dropBranch(spark: SparkSession, stagingRoot: String): Unit = {
-    val stg = Manifest.read(spark, stagingRoot).getOrElse(
-      throw new IllegalStateException(
-        s"no committed staging catalog at $stagingRoot"))
+    val stg = head(spark, stagingRoot, "staging catalog")
     require(stg.baseV >= 0,
       s"catalog at $stagingRoot has no fork point — refusing to drop " +
         "what is not a branch")
@@ -215,9 +220,7 @@ object Catalog {
     * break. */
   def vacuumRetain(spark: SparkSession, catRoot: String, stack: String,
                    stackRoot: String, catRetainVersions: Int = 0): Int = {
-    val catHead = Manifest.read(spark, catRoot).getOrElse(
-      throw new IllegalStateException(
-        s"no committed catalog at $catRoot")).version
+    val catHead = head(spark, catRoot, "catalog").version
     val floorCat = math.max(0L, catHead - catRetainVersions)
     val cuts =
       ((floorCat to catHead) ++ taggedVersions(spark, catRoot)).distinct
@@ -228,11 +231,9 @@ object Catalog {
           .select("version").collect().map(_.getLong(0))
       }
     }
-    val head = Manifest.read(spark, stackRoot).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $stackRoot")).version
+    val stackHead = Manifest.stateAt(spark, stackRoot, None).version
     if (pinned.isEmpty) 0
-    else math.max(0L, head - pinned.min).toInt
+    else math.max(0L, stackHead - pinned.min).toInt
   }
 
   /** Retire the CATALOG'S OWN history — superseded pin tables and
@@ -250,17 +251,12 @@ object Catalog {
   def vacuum(spark: SparkSession, catRoot: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
     Manifest.withCommitLock(spark, catRoot) {
-      val head = Manifest.read(spark, catRoot).getOrElse(
-        throw new IllegalStateException(
-          s"no committed catalog at $catRoot")).version
+      val cur = head(spark, catRoot, "catalog").version
       val floor = (taggedVersions(spark, catRoot) :+
-        math.max(0L, head - retainVersions)).min
-      val keep = (floor to head)
-        .flatMap(v => Manifest.readAt(spark, catRoot, v))
-        .map(st => s"v=${st.globalV}").toSet
-      val (deleted, retired, kept) = Manifest.sweepUnpinned(spark,
-        catRoot, floor, Seq(Manifest.SweepFamily("pins", 1, keep)))
-      TxServeStack.VacuumStats(deleted, retired, kept)
+        math.max(0L, cur - retainVersions)).min
+      Manifest.sweep(spark, catRoot, floor,
+        (floor to cur).flatMap(v => Manifest.readAt(spark, catRoot, v)),
+        families)
     }
 
   /** Resolve one stack's pinned version under a catalog cut — the

@@ -30,29 +30,6 @@ object Dedup {
       graft.expressions.WordShingles(
         org.apache.spark.sql.GraftExpr.expr(text), k))
 
-  /** MinHash signature: `numHashes` permutations derived as 8-hex-char
-    * slices of ⌈numHashes/4⌉ salted md5 digests — min(substr(md5(⌊j/4⌋ +
-    * ":" + shingle), (j%4)*8+1, 8)). Non-overlapping 32-bit slices of one
-    * digest are independent uniform hashes, so one md5 feeds 4
-    * permutations (4× less digest work than one md5 per permutation);
-    * the lexicographic min of a hex slice is a uniform min-hash,
-    * identical in every engine. */
-  def minhashSignature(shingleArr: Column, numHashes: Int = 8): Column =
-    array((0 until numHashes).map { j =>
-      array_min(transform(shingleArr, s =>
-        substring(md5(concat(lit(s"${j / 4}:"), s)), (j % 4) * 8 + 1, 8)))
-    }: _*)
-
-  /** LSH band keys: signature split into `bands` bands of
-    * numHashes/bands rows each, one md5 key per band. Empty shingle sets
-    * produce null keys, which never join (null != null). */
-  def bandKeys(sig: Column, numHashes: Int = 8, bands: Int = 4): Column = {
-    val rows = numHashes / bands
-    array((0 until bands).map { b =>
-      md5(concat((0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*))
-    }: _*)
-  }
-
   /** MinHash+LSH candidate pairs: (a_id, b_id) with a < b for documents
     * sharing at least one band. The self-join shuffles on (band index,
     * band key) — at 100 TB this is the only way the pair search scales. */

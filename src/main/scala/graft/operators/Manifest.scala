@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** MANIFEST commit protocol for multi-asset serve stacks — the
   * transactional face the plain drains document as their crash
@@ -94,7 +96,7 @@ object Manifest {
   /** Thrown by [[commit]] when the committed pointer is no longer at
     * the version the state was derived from — the optimistic-CAS
     * writer fence. The loser's versioned asset writes are crash-orphan
-    * garbage ([[sweepUnpinned]] reclaims them); the clean retry is to
+    * garbage ([[vacuum]] reclaims them); the clean retry is to
     * RE-DERIVE the whole commit from the advanced head (every TxStack
     * commit* re-reads the manifest at entry, so calling it again IS
     * the retry). */
@@ -202,12 +204,17 @@ object Manifest {
   /** Resolve the current committed state; None before the first
     * commit. Reads ONE small file — the serve-side cost of the
     * protocol is a single metadata read per query batch. */
-  def read(spark: SparkSession, dir: String): Option[State] = {
+  def read(spark: SparkSession, dir: String): Option[State] =
+    readState(spark, dir, "manifest")
+
+  /** The state the file `name` under `dir` renders; None when absent. */
+  private def readState(spark: SparkSession, dir: String,
+                        name: String): Option[State] = {
     val (f, base) = fs(spark, dir)
-    val m = new org.apache.hadoop.fs.Path(base, "manifest")
-    if (!f.exists(m)) None
+    val p = new org.apache.hadoop.fs.Path(base, name)
+    if (!f.exists(p)) None
     else {
-      val in = f.open(m)
+      val in = f.open(p)
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
       Some(parse(txt))
@@ -252,12 +259,10 @@ object Manifest {
     * roll-forward heals the pointer. History files are never torn —
     * the scratch write + atomic link means `manifest.v=N` appears
     * complete or not at all (scratch leftovers match the
-    * `manifest.tmp-` sweep prefix [[sweepUnpinned]] reclaims). */
-  def commit(spark: SparkSession, dir: String, state: State): Unit = {
-    val (f, base) = fs(spark, dir)
-    val lock = commitLocks.computeIfAbsent(
-      f.makeQualified(base).toString, _ => new Object)
-    lock.synchronized {
+    * `manifest.tmp-` prefix [[vacuum]] reclaims). */
+  def commit(spark: SparkSession, dir: String, state: State): Unit =
+    withCommitLock(spark, dir) {
+      val (f, base) = fs(spark, dir)
       // WRITER FENCE (optimistic CAS): this state was derived from the
       // cut at version - 1; if the pointer has advanced past it, a
       // concurrent committer (drain vs compactor vs vacuum cadence)
@@ -291,7 +296,6 @@ object Manifest {
         }
       swapPointer(spark, f, base, pointerBytes, state.version)
     }
-  }
 
   /** Publish `bytes` at `hist` create-EXCLUSIVE: scratch write + atomic
     * no-overwrite move. Returns false when `hist` already exists (the
@@ -403,23 +407,13 @@ object Manifest {
     * exactly the stack as of that commit, concurrent with any number
     * of later commits. Refuses versions ABOVE the committed pointer
     * (a crashed batch's torn history file must stay invisible) and
-    * versions whose history file [[TxServeStack.vacuum]] has already
+    * versions whose history file [[vacuum]] has already
     * retired (time travel is bounded by the retention policy, the
     * standard table-format trade). */
   def readAt(spark: SparkSession, dir: String,
-             version: Long): Option[State] = {
-    read(spark, dir).filter(_.version >= version).flatMap { _ =>
-      val (f, base) = fs(spark, dir)
-      val h = new org.apache.hadoop.fs.Path(base, s"manifest.v=$version")
-      if (!f.exists(h)) None
-      else {
-        val in = f.open(h)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        Some(parse(txt))
-      }
-    }
-  }
+             version: Long): Option[State] =
+    read(spark, dir).filter(_.version >= version)
+      .flatMap(_ => readState(spark, dir, s"manifest.v=$version"))
 
   /** TIME TRAVEL BY BATCH ID — resolve the LATEST committed cut whose
     * high-water mark is at or below `batchId` (the logical clock
@@ -465,11 +459,8 @@ object Manifest {
     * standard snapshot trade. */
   def pinPage(spark: SparkSession, lexRoot: String,
               vecRoot: String): PagePin =
-    PagePin(
-      read(spark, lexRoot).getOrElse(throw new IllegalStateException(
-        s"no committed manifest at $lexRoot")).version,
-      read(spark, vecRoot).getOrElse(throw new IllegalStateException(
-        s"no committed manifest at $vecRoot")).version)
+    PagePin(stateAt(spark, lexRoot, None).version,
+      stateAt(spark, vecRoot, None).version)
 
   /** The delta directories a committed state makes visible for a
     * row-append asset family (`family/base/v=V` if a compaction has
@@ -490,26 +481,104 @@ object Manifest {
     (consolidated ++ deltas).filter(f.exists).map(_.toString)
   }
 
-  /** [[visibleDeltaDirs]] for the BM25 stack's posting family. */
-  def visiblePostingDirs(spark: SparkSession, dir: String,
-                         state: State): Seq[String] =
-    visibleDeltaDirs(spark, dir, state, "postings")
+  /** One asset family of a stack, named by its on-disk layout — the
+    * closed set every stack's `families` declaration picks from. The
+    * shared readers below read a family; [[vacuum]] derives its keep
+    * set from the retained states through the declaration, so a family
+    * a stack does not declare is never swept. */
+  sealed trait Family { def dir: String }
 
-  /** The stats bucket directories a committed state pins — each
-    * bucket at ITS version (`stats/v=V/bkt=B`): a batch that replaced
-    * buckets {2, 7} at v5 left every other bucket pinned at older
-    * versions, and the union of pinned paths IS the ledger. */
-  def visibleStatsDirs(spark: SparkSession, dir: String,
-                       state: State): Seq[String] = {
-    val (_, base) = fs(spark, dir)
-    state.statsV.toSeq.sorted.map { case (b, v) =>
-      new org.apache.hadoop.fs.Path(base, s"stats/v=$v/bkt=$b").toString
-    }
+  /** `dir/v=V/bkt=B`: per-bucket MVCC, each bucket pinned at the
+    * version `pins` gives it. */
+  final case class Bucketed(dir: String, pins: State => Map[Int, Long])
+    extends Family
+
+  /** `dir/base/v=baseV` plus `dir/batch=N` for N in
+    * (baseBatch, batchId]: a row-append family under the state's base
+    * pointer and batch window ([[visibleDeltaDirs]]). */
+  final case class Appended(dir: String) extends Family
+
+  /** `dir/v=V`: one whole-version directory, pinned at `v`. */
+  final case class Versioned(dir: String, v: State => Long) extends Family
+
+  /** `dir/v=<token>`: the merge-on-read delta chain, [[State.deltas]]. */
+  final case class Chain(dir: String) extends Family
+
+  /** A reader's empty frame — `schema`'s columns, no rows, no job — for
+    * a cut that pins nothing of a family. */
+  private def emptyFrame(spark: SparkSession,
+                         schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** The pinned rows of a [[Bucketed]] family, each bucket read at ITS
+    * version (`family/v=V/bkt=B` — a batch that replaced buckets {2, 7}
+    * at v5 left every other bucket pinned at older versions, and the
+    * union of pinned paths IS the family) and projected to `schema`'s
+    * columns. `restrict` prunes at the PATH level: an unelected
+    * bucket's directory is never listed. */
+  private[operators] def readBucketed(spark: SparkSession, root: String,
+      family: String, pins: Map[Int, Long], restrict: Option[Seq[Int]],
+      schema: StructType): DataFrame = {
+    val pinned = restrict.fold(pins)(bs => pins.filter(p => bs.contains(p._1)))
+    if (pinned.isEmpty) emptyFrame(spark, schema)
+    else spark.read.option("basePath", s"$root/$family")
+      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
+        s"$root/$family/v=$v/bkt=$b" }: _*)
+      .select(schema.fieldNames.toSeq.map(col): _*)
   }
 
-  /** The pinned global-ledger directory. */
-  def globalDir(dir: String, state: State): String =
-    s"$dir/global/v=${state.globalV}"
+  /** The visible rows of an [[Appended]] family: `schema`'s columns
+    * plus `_b`, each row's BATCH PROVENANCE — `batch=N` for a delta,
+    * `baseBatch` for the base, which consolidates live rows as of that
+    * batch. Provenance is what makes the tombstone rule ([[liveOnly]])
+    * ordered. Base and deltas live under different partition-path
+    * shapes (`base/v=V/...` vs `batch=N/...`), so they read in two
+    * groups and union on the shared columns — one frame, still only
+    * manifest-pinned paths. */
+  private[operators] def readAppended(spark: SparkSession, root: String,
+      st: State, family: String, schema: StructType): DataFrame = {
+    val (baseDirs, deltaDirs) = visibleDeltaDirs(spark, root, st, family)
+      .partition(_.contains("/base/"))
+    def part(dirs: Seq[String], basePath: String, b: Column) =
+      if (dirs.isEmpty) None
+      else Some(spark.read.option("basePath", basePath).parquet(dirs: _*)
+        .select(schema.fieldNames.toSeq.map(col) :+ b.as("_b"): _*))
+    val parts = part(baseDirs, s"$root/$family/base", lit(st.baseBatch)) ++
+      part(deltaDirs, s"$root/$family", col("batch").cast("long"))
+    if (parts.isEmpty) emptyFrame(spark, schema.add("_b", LongType))
+    else parts.reduce(_ unionByName _)
+  }
+
+  /** The tombstones of the `deletes` family a cut makes visible, as
+    * (`idCol`, asof) — `asof` is the tombstoning batch's id, folded to
+    * the LATEST per id. A tombstone at asof = N kills rows with
+    * provenance `_b` < N and nothing born at or after N, which is what
+    * lets an upsert retire an id's old rows and land its replacement in
+    * the SAME batch, and a post-delete re-ingest land with no era
+    * restriction. The window retires when a compaction moves the base
+    * pointer (the base consolidates live rows only). Tiny by contract:
+    * one row per retired id per window. */
+  private[operators] def readTombstones(spark: SparkSession, root: String,
+      st: State, idCol: String): DataFrame = {
+    val dirs = visibleDeltaDirs(spark, root, st, "deletes")
+    if (dirs.isEmpty)
+      emptyFrame(spark, new StructType().add(idCol, LongType)
+        .add("asof", LongType))
+    else spark.read.option("basePath", s"$root/deletes")
+      .parquet(dirs: _*)
+      .groupBy(idCol)
+      .agg(max(col("batch").cast("long")).as("asof"))
+  }
+
+  /** The ordered-liveness rule, applied: keep `rows` (carrying `idCol`
+    * + `_b` provenance) no visible tombstone kills (`_b < asof`). The
+    * tombstone side broadcasts — its size is bounded by the compaction
+    * cadence, the same contract as Lucene's in-RAM live-docs. */
+  private[operators] def liveOnly(rows: DataFrame, tomb: DataFrame,
+                                  idCol: String): DataFrame =
+    rows.join(broadcast(tomb), Seq(idCol), "left_outer")
+      .filter(col("asof").isNull || col("_b") >= col("asof"))
+      .drop("asof")
 
   /** Resolve the state a reader pins: the committed pointer, or a
     * [[readAt]] snapshot when `version` is given — the shared
@@ -609,33 +678,52 @@ object Manifest {
       .map(_ -> atV).toMap
   }
 
-  /** The retention set every vacuum keeps: (floor, the states of every
-    * retained history version plus the pointer itself — the pointer
-    * ALWAYS retains, so a stack whose history files predate the
-    * snapshot feature still keeps its live pins). */
-  private[operators] def retainedStates(spark: SparkSession, root: String,
-                                        retainVersions: Int): (Long, Seq[State]) = {
-    val cur = read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
-    val floor = cur.version - retainVersions.toLong
-    (floor, ((floor to cur.version)
-      .flatMap(v => readAt(spark, root, v)) :+ cur).distinct)
-  }
+  /** What a vacuum did: asset directories deleted (superseded
+    * versions, compacted-away batch deltas, crash orphans), history
+    * manifests retired (bounding time travel), and asset directories
+    * kept because some retained manifest still pins them. */
+  case class VacuumStats(deletedDirs: Int, deletedManifests: Int,
+                         keptDirs: Int)
 
-  /** One asset family for [[sweepUnpinned]]: list `subdir` at `depth`
-    * directory levels below it (1 = version dirs, 2 = version/bucket
-    * dirs) and keep entries whose relative name — `v=V` at depth 1,
-    * `v=V/bkt=B` at depth 2 — passes `keep`. */
-  private[operators] case class SweepFamily(subdir: String, depth: Int,
-                                            keep: String => Boolean)
+  /** GARBAGE COLLECTION for a stack of `families` — the executable form
+    * of "collectable by listing against the manifest". Versioned writes
+    * never delete anything, so three kinds of garbage accumulate:
+    * superseded versions (a bucket's old `v=` dirs once a later commit
+    * re-pins it; the pre-compaction `batch=` deltas once the base
+    * pointer moves past them), crash orphans (asset writes whose
+    * manifest swap never happened), and stale `manifest.tmp-*` scratch
+    * files. None is ever readable through a committed manifest, so
+    * deletion is invisible to every pinned reader: vacuum lists each
+    * family, keeps exactly the paths some RETAINED manifest references,
+    * and deletes the rest.
+    *
+    * `retainVersions` keeps the last N history manifests below the
+    * current one alive (and every asset they pin), bounding [[readAt]]
+    * time travel — the standard table-format retention trade: retain 0
+    * reclaims everything unpinned NOW; retain N pays N versions of
+    * storage for N versions of snapshot reads. It holds the commit lock
+    * (an in-process committer's un-swapped fresh-version writes would
+    * otherwise look like orphans); like every table format's vacuum it
+    * must not run concurrently with another process's in-flight commit
+    * — run it from the same maintenance cadence as compaction. */
+  private[operators] def vacuum(spark: SparkSession, root: String,
+      retainVersions: Int, families: Seq[Family]): VacuumStats =
+    withCommitLock(spark, root) {
+      val cur = stateAt(spark, root, None)
+      val floor = cur.version - retainVersions.toLong
+      // the pointer ALWAYS retains, so a stack whose history files
+      // predate the snapshot feature still keeps its live pins
+      sweep(spark, root, floor, ((floor to cur.version)
+        .flatMap(v => readAt(spark, root, v)) :+ cur).distinct, families)
+    }
 
-  /** Shared vacuum core for manifest-protocol stacks: delete every
-    * listed asset directory its family does not keep, retire history
-    * manifests below the retention `floor`, drop `manifest.tmp-*`
-    * scratch files, and clean version dirs a depth-2 sweep emptied.
-    * Returns (deletedDirs, retiredManifests, keptDirs). */
-  private[operators] def sweepUnpinned(spark: SparkSession, dir: String,
-      floor: Long, families: Seq[SweepFamily]): (Int, Int, Int) = {
+  /** The vacuum core: delete every directory of `families` no
+    * `retained` state pins, retire history manifests below `floor`,
+    * drop `manifest.tmp-*` scratch files, and remove the version dirs a
+    * bucket sweep emptied. */
+  private[operators] def sweep(spark: SparkSession, dir: String,
+      floor: Long, retained: Seq[State],
+      families: Seq[Family]): VacuumStats = {
     import org.apache.hadoop.fs.Path
     val root = new Path(dir)
     val f = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -646,23 +734,36 @@ object Manifest {
       if (!f.exists(p)) Seq.empty
       else f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
     var deleted = 0; var kept = 0
-    families.foreach { fam =>
-      val top = new Path(root, fam.subdir)
-      val entries = fam.depth match {
-        case 1 => ls(top).map(p => p -> p.getName)
-        case 2 => ls(top).flatMap(v => ls(v).map(b =>
-          b -> s"${v.getName}/${b.getName}"))
+    // delete the dirs under `top` whose name `keep` refuses; the kept ones
+    def sweepIn(top: Path, keep: String => Boolean): Seq[Path] =
+      ls(top).filter { p =>
+        if (keep(p.getName)) { kept += 1; true }
+        else { f.delete(p, true); deleted += 1; false }
       }
-      entries.foreach { case (p, rel) =>
-        if (fam.keep(rel)) kept += 1
-        else { f.delete(p, true); deleted += 1 }
-      }
-      if (fam.depth == 2)
+    def versions(vs: Seq[Long]): Set[String] = vs.map(v => s"v=$v").toSet
+    families.foreach {
+      case Bucketed(d, pins) =>
+        // (version, bucket) granularity: one commit's version dir can
+        // hold both live and superseded buckets
+        val keep = retained.flatMap(pins(_).map { case (b, v) =>
+          s"v=$v/bkt=$b" }).toSet
+        val top = new Path(root, d)
+        ls(top).foreach(v => sweepIn(v, b => keep(s"${v.getName}/$b")))
         // a version dir whose buckets were all swept is spent even if
         // a write marker remains — remove the husk (not counted: its
         // content was already counted bucket by bucket)
-        ls(top).filter(v => ls(v).isEmpty)
-          .foreach(v => f.delete(v, true))
+        ls(top).filter(v => ls(v).isEmpty).foreach(v => f.delete(v, true))
+      case Appended(d) =>
+        val batches = retained.flatMap(st =>
+          (st.baseBatch + 1) to st.batchId).map(b => s"batch=$b").toSet
+        sweepIn(new Path(root, d), n => n == "base" || batches(n))
+          .filter(_.getName == "base").foreach(sweepIn(_,
+            versions(retained.filter(_.baseV >= 0).map(_.baseV))))
+      case Versioned(d, v) =>
+        sweepIn(new Path(root, d), versions(retained.map(v)))
+      case Chain(d) =>
+        sweepIn(new Path(root, d), versions(retained.flatMap(_.deltas
+          .map(_.token))))
     }
     // history manifests and scratch leftovers are FILES — list the
     // root unfiltered (the dir-only `ls` above is for asset sweeps),
@@ -687,7 +788,7 @@ object Manifest {
       else if (n.startsWith(".manifest.tmp-") && n.endsWith(".crc"))
         raw.delete(p, false) // an orphan sidecar, not a manifest
     }
-    (deleted, retired, kept)
+    VacuumStats(deleted, retired, kept)
   }
 }
 
@@ -732,101 +833,60 @@ object Manifest {
 object TxServeStack {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types.StructType
 
-  /** Resolve the committed assets for serving: (postings, termStats,
-    * global), each read ONLY through the manifest's pinned paths.
-    * `statsBuckets` restricts the stats read to an elected bucket set
-    * (the serve-side O(query) pruning — here it is PATH-level: an
-    * unelected bucket's directory is never even listed). */
-  /** Read the committed postings (doc_id, term, tf, dl, bkt, _b)
-    * through the manifest — `_b` is each row's BATCH PROVENANCE,
-    * derived from the partition path it lives under (`batch=N` for
-    * deltas; the base consolidates live rows as of `baseBatch`, so
-    * its rows carry that). Provenance is what makes the tombstone
-    * liveness rule ([[livePostings]]) ordered: a tombstone at batch N
-    * kills rows born BEFORE N and nothing after. The consolidated
-    * base and the per-batch deltas live under DIFFERENT
-    * partition-path shapes (`base/v=V/bkt=M` vs `batch=N/bkt=M`), so
-    * they read in two groups and union on the shared columns — one
-    * frame, still only manifest-pinned paths. */
+  /** The stack's asset families: term stats per bucket, the 1-row
+    * global ledger, and postings, positions and tombstones under the
+    * base pointer + batch window. */
+  private[operators] val families: Seq[Manifest.Family] = Seq(
+    Manifest.Bucketed("stats", _.statsV),
+    Manifest.Versioned("global", _.globalV),
+    Manifest.Appended("postings"), Manifest.Appended("positions"),
+    Manifest.Appended("deletes"))
+
+  /** What a vacuum did — [[Manifest.VacuumStats]], under the name every
+    * stack's `vacuum` has always returned. */
+  type VacuumStats = Manifest.VacuumStats
+
+  private val PostingCols =
+    StructType.fromDDL("doc_id BIGINT, term STRING, tf BIGINT, dl BIGINT, bkt INT")
+  private val PositionCols =
+    StructType.fromDDL("doc_id BIGINT, term STRING, positions ARRAY<INT>, bkt INT")
+  private val StatsCols = StructType.fromDDL("term STRING, df BIGINT, cf BIGINT")
+
+  /** The committed postings (doc_id, term, tf, dl, bkt, _b) — `_b` the
+    * batch provenance [[livePostings]]' tombstone rule orders by. */
   private def readPostings(spark: SparkSession, root: String,
-                           st: Manifest.State): DataFrame = {
-    val cols = Seq(col("doc_id"), col("term"), col("tf"), col("dl"),
-      col("bkt"))
-    val dirs = Manifest.visiblePostingDirs(spark, root, st)
-    val (baseDirs, deltaDirs) = dirs.partition(_.contains("/base/"))
-    val parts =
-      (if (baseDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/postings/base")
-         .parquet(baseDirs: _*)
-         .select(cols :+ lit(st.baseBatch).as("_b"): _*))) ++
-      (if (deltaDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/postings")
-         .parquet(deltaDirs: _*)
-         .select(cols :+ col("batch").cast("long").as("_b"): _*)))
-    if (parts.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit("").as("term"),
-          lit(0L).as("tf"), lit(0L).as("dl"), lit(0).as("bkt"),
-          lit(0L).as("_b")).limit(0)
-    else parts.reduce(_ unionByName _)
-  }
+                           st: Manifest.State): DataFrame =
+    Manifest.readAppended(spark, root, st, "postings", PostingCols)
 
-  /** The tombstones a committed state makes visible, as
-    * (doc_id, asof) — `asof` is the tombstoning batch's id, derived
-    * from the partition path, folded to the LATEST per doc. A
-    * tombstone at asof = N kills posting rows with provenance
-    * `_b` < N and nothing born at or after N — which is what lets
-    * [[commitUpsert]] retire a document's old rows and land its
-    * replacement in the SAME batch, and lets a post-delete re-ingest
-    * land as a new document with no era restriction. The window
-    * retires at the next compaction (the base consolidates live rows
-    * only, so its pointer move subsumes every visible tombstone).
-    * Tiny by contract: one id row per retired document per window. */
-  private def readDeletes(spark: SparkSession, root: String,
-                          st: Manifest.State): DataFrame = {
-    val dirs = Manifest.visibleDeltaDirs(spark, root, st, "deletes")
-    if (dirs.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0L).as("asof")).limit(0)
-    else spark.read.option("basePath", s"$root/deletes")
-      .parquet(dirs: _*)
-      .groupBy("doc_id")
-      .agg(max(col("batch").cast("long")).as("asof"))
-  }
-
-  /** The ordered-liveness rule, applied: keep `rows` (carrying
-    * doc_id + `_b` provenance) not killed by a visible tombstone
-    * (`_b < asof`). The tombstone side broadcasts — its size is
-    * bounded by the compaction cadence, the same contract as
-    * Lucene's in-RAM live-docs. */
-  private def liveOnly(rows: DataFrame, tomb: DataFrame): DataFrame =
-    rows.join(broadcast(tomb), Seq("doc_id"), "left_outer")
-      .filter(col("asof").isNull || col("_b") >= col("asof"))
-      .drop("asof")
+  /** The `rows` (doc_id + `_b`) no tombstone visible at `st` kills. */
+  private def live(spark: SparkSession, root: String, st: Manifest.State,
+                   rows: DataFrame): DataFrame =
+    Manifest.liveOnly(rows, Manifest.readTombstones(spark, root, st,
+      "doc_id"), "doc_id")
 
   /** The LIVE posting rows of a committed state. */
   private def livePostings(spark: SparkSession, root: String,
                            st: Manifest.State): DataFrame =
-    liveOnly(readPostings(spark, root, st), readDeletes(spark, root, st))
+    live(spark, root, st, readPostings(spark, root, st))
 
+  /** The pinned 1-row global ledger; zeros before the first commit. */
+  private def readGlobal(spark: SparkSession, root: String,
+                         st: Manifest.State): DataFrame =
+    if (st.globalV < 0) {
+      import spark.implicits._
+      Seq((0L, 0L)).toDF("n_docs", "sum_dl")
+    } else spark.read.parquet(s"$root/global/v=${st.globalV}")
 
   /** The pinned term-stats content of `buckets` (each bucket read at
     * ITS version) — the O(touched) `prev` leg every stats fold
     * re-derives from. */
   private def readPinnedStats(spark: SparkSession, root: String,
                               st: Manifest.State,
-                              buckets: Seq[Int]): DataFrame = {
-    val pinned = st.statsV.filter { case (b, _) => buckets.contains(b) }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame
-        .select(lit("").as("term"), lit(0L).as("df"), lit(0L).as("cf"))
-        .limit(0)
-    else spark.read.option("basePath", s"$root/stats")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/stats/v=$v/bkt=$b" }: _*)
-      .select(col("term"), col("df"), col("cf"))
-  }
+                              buckets: Seq[Int]): DataFrame =
+    Manifest.readBucketed(spark, root, "stats", st.statsV, Some(buckets),
+      StatsCols)
 
   /** Write the re-derived content of the touched stats buckets at
     * version `vNew` and return the UPDATED pin map: buckets with
@@ -850,10 +910,9 @@ object TxServeStack {
   private def liveRemovedTf(spark: SparkSession, root: String,
                             st: Manifest.State, ids: DataFrame,
                             docBuckets: Int): DataFrame =
-    liveOnly(
+    live(spark, root, st,
       Ledger.prunedToBatch(readPostings(spark, root, st), ids,
-        "doc_id", docBuckets),
-      readDeletes(spark, root, st))
+        "doc_id", docBuckets))
       .join(ids, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("term"), col("tf"))
       .localCheckpoint()
@@ -868,27 +927,8 @@ object TxServeStack {
     * families in its one swap). Empty when the drain never carried
     * positions. */
   private def readPositions(spark: SparkSession, root: String,
-                            st: Manifest.State): DataFrame = {
-    val cols = Seq(col("doc_id"), col("term"), col("positions"),
-      col("bkt"))
-    val dirs = Manifest.visibleDeltaDirs(spark, root, st, "positions")
-    val (baseDirs, deltaDirs) = dirs.partition(_.contains("/base/"))
-    val parts =
-      (if (baseDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/positions/base")
-         .parquet(baseDirs: _*)
-         .select(cols :+ lit(st.baseBatch).as("_b"): _*))) ++
-      (if (deltaDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/positions")
-         .parquet(deltaDirs: _*)
-         .select(cols :+ col("batch").cast("long").as("_b"): _*)))
-    if (parts.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit("").as("term"),
-          array().cast("array<int>").as("positions"), lit(0).as("bkt"),
-          lit(0L).as("_b")).limit(0)
-    else parts.reduce(_ unionByName _)
-  }
+                            st: Manifest.State): DataFrame =
+    Manifest.readAppended(spark, root, st, "positions", PositionCols)
 
   /** Resolve the committed LIVE positional rows for a phrase/NEAR/
     * snippet serve, path-pruned to `termBucketsOf`'s elected buckets
@@ -904,10 +944,15 @@ object TxServeStack {
       case None => raw
       case Some(bs) => raw.filter(col("bkt").isin(bs: _*))
     }
-    liveOnly(pruned, readDeletes(spark, root, st))
+    live(spark, root, st, pruned)
       .select(col("doc_id"), col("term"), col("positions"))
   }
 
+  /** Resolve the committed assets for serving: (postings, termStats,
+    * global), each read ONLY through the manifest's pinned paths.
+    * `statsBuckets` restricts the stats read to an elected bucket set
+    * (the serve-side O(query) pruning — here it is PATH-level: an
+    * unelected bucket's directory is never even listed). */
   def resolve(spark: SparkSession, root: String,
               statsBuckets: Option[Seq[Int]] = None,
               version: Option[Long] = None)
@@ -915,21 +960,9 @@ object TxServeStack {
     val st = Manifest.stateAt(spark, root, version)
     val postings = livePostings(spark, root, st)
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-    val pinned = statsBuckets match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
-    }
-    val sdirs = pinned.toSeq.sorted.map { case (b, v) =>
-      s"$root/stats/v=$v/bkt=$b" }
-    val stats =
-      if (sdirs.isEmpty)
-        spark.emptyDataFrame
-          .select(lit("").as("term"), lit(0L).as("df"), lit(0L).as("cf"))
-          .limit(0)
-      else spark.read.option("basePath", s"$root/stats")
-        .parquet(sdirs: _*)
-        .select(col("term"), col("df"), col("cf"))
-    val global = spark.read.parquet(Manifest.globalDir(root, st))
+    val stats = Manifest.readBucketed(spark, root, "stats", st.statsV,
+      statsBuckets, StatsCols)
+    val global = spark.read.parquet(s"$root/global/v=${st.globalV}")
     (postings, stats, global)
   }
 
@@ -968,17 +1001,14 @@ object TxServeStack {
     val stT = Manifest.stateAt(spark, root, Some(toVersion))
     require(stT.batchId >= stF.batchId,
       s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
-    val basePath = new org.apache.hadoop.fs.Path(root)
-    val f = basePath.getFileSystem(spark.sessionState.newHadoopConf())
-    def windowDirs(family: String): Seq[String] =
-      ((stF.batchId + 1) to stT.batchId)
-        .map(b => new org.apache.hadoop.fs.Path(basePath,
-          s"$family/batch=$b"))
-        .filter(f.exists).map(_.toString)
+    // the window's batch dirs are what a cut with no base, its batch
+    // window opening at the from-cut, makes visible
+    val window = Manifest.State(-1L, stT.batchId, -1L, Map.empty,
+      baseBatch = stF.batchId)
     def emptyIds = spark.emptyDataFrame
       .select(lit(0L).as("doc_id")).limit(0)
     def idsIn(family: String): DataFrame = {
-      val dirs = windowDirs(family)
+      val dirs = Manifest.visibleDeltaDirs(spark, root, window, family)
       if (dirs.isEmpty) emptyIds
       // explicit schema: a batch whose delta ABSORBED whole (or whose
       // delete matched nothing) leaves a zero-file directory that
@@ -1010,10 +1040,8 @@ object TxServeStack {
         // token totals per class) needs no snapshot diff and no raw
         // pass — dl_before/dl_after ARE the delta's operands
         def liveAt(st: Manifest.State): DataFrame =
-          liveOnly(
-            readPostings(spark, root, st)
-              .filter(col("bkt").isin(cBkts: _*)),
-            readDeletes(spark, root, st))
+          live(spark, root, st, readPostings(spark, root, st)
+              .filter(col("bkt").isin(cBkts: _*)))
             .join(candidates.select("doc_id"), Seq("doc_id"),
               "left_semi")
             .groupBy("doc_id").agg(max(col("dl")).as("dl"))
@@ -1054,12 +1082,11 @@ object TxServeStack {
     // delta vs the COMMITTED LIVE postings only (orphans invisible,
     // tombstoned docs re-ingestable) — bucket-pruned to the batch's
     // doc buckets like every drain
-    val storedLive = liveOnly(
+    val storedLive = live(spark, root, st,
       Ledger.prunedToBatch(
         readPostings(spark, root, st)
           .select(col("doc_id"), col("bkt"), col("_b")),
-        batch, idCol, docBuckets),
-      readDeletes(spark, root, st))
+        batch, idCol, docBuckets))
     val delta = Retrieval.bm25IndexAppend(
       storedLive.select(col("doc_id")), batch, idCol, textCol,
       deltaOnly = true).localCheckpoint()
@@ -1083,12 +1110,7 @@ object TxServeStack {
           idCol, textCol, termBuckets)
     }, () => {
       // global: pinned 1-row read + integer increment, fresh version
-      val gPrev =
-        if (st.globalV < 0) {
-          import spark.implicits._
-          Seq((0L, 0L)).toDF("n_docs", "sum_dl")
-        } else spark.read.parquet(Manifest.globalDir(root, st))
-      Retrieval.bm25GlobalStatsAppend(gPrev, delta)
+      Retrieval.bm25GlobalStatsAppend(readGlobal(spark, root, st), delta)
         .write.mode("overwrite").parquet(s"$root/global/v=$gv")
     }, () => {
       // term stats: touched buckets re-derived from their pinned
@@ -1133,8 +1155,7 @@ object TxServeStack {
                    docBuckets: Int, termBuckets: Int,
                    publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
     val ids = removals.select(col(idCol).as("doc_id")).distinct()
     val removedTf = liveRemovedTf(spark, root, st, ids, docBuckets)
     // three order-free asset legs off the checkpointed removedTf —
@@ -1144,8 +1165,7 @@ object TxServeStack {
       removedTf.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$root/deletes/batch=$batchId")
     }, () => {
-      val gPrev = spark.read.parquet(Manifest.globalDir(root, st))
-      Retrieval.bm25GlobalStatsRemove(gPrev, removedTf)
+      Retrieval.bm25GlobalStatsRemove(readGlobal(spark, root, st), removedTf)
         .write.mode("overwrite").parquet(s"$root/global/v=$gv")
     }, () => {
       // term stats: the removed terms' buckets re-derived from their
@@ -1192,8 +1212,7 @@ object TxServeStack {
                    publish: Boolean = true,
                    positions: Boolean = false): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
     // stack-derived, like commitBatch: an upsert on a positional stack
     // that omitted the flag would retire the old positional rows via
     // the shared tombstone and land NO replacements — phrase serves
@@ -1225,13 +1244,8 @@ object TxServeStack {
         writePositions(spark, root, batchId, batch, idCol, textCol,
           termBuckets)
     }, () => {
-      val gPrev =
-        if (st.globalV < 0) {
-          import spark.implicits._
-          Seq((0L, 0L)).toDF("n_docs", "sum_dl")
-        } else spark.read.parquet(Manifest.globalDir(root, st))
-      Retrieval.bm25GlobalStatsAppend(
-          Retrieval.bm25GlobalStatsRemove(gPrev, removedTf), delta)
+      Retrieval.bm25GlobalStatsAppend(Retrieval.bm25GlobalStatsRemove(
+          readGlobal(spark, root, st), removedTf), delta)
         .write.mode("overwrite").parquet(s"$root/global/v=$gv")
     }, () => {
       // stats: net fold over the union of both sides' terms' buckets
@@ -1267,9 +1281,9 @@ object TxServeStack {
   def compactPostings(spark: SparkSession, root: String,
                       publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
-    if (Manifest.visiblePostingDirs(spark, root, st).isEmpty) return false
+    val st = Manifest.stateAt(spark, root, None)
+    if (Manifest.visibleDeltaDirs(spark, root, st, "postings").isEmpty)
+      return false
     val vNew = st.version + 1
     // both legs read only the COMMITTED state and write disjoint base
     // directories published by the one swap — order-free, overlap them
@@ -1282,8 +1296,7 @@ object TxServeStack {
       // the positional family (when the drain carried one) compacts in
       // the SAME swap — one base pointer covers both row-append assets
       if (Manifest.visibleDeltaDirs(spark, root, st, "positions").nonEmpty)
-        liveOnly(readPositions(spark, root, st),
-            readDeletes(spark, root, st))
+        live(spark, root, st, readPositions(spark, root, st))
           .select(col("doc_id"), col("term"), col("positions"), col("bkt"))
           .repartition(col("bkt"))
           .write.partitionBy("bkt").mode("overwrite")
@@ -1316,9 +1329,8 @@ object TxServeStack {
     Manifest.withCommitLock(spark, root) {
     require(newDocBuckets > 0 && newTermBuckets > 0,
       "bucket counts must be positive")
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
-    if (Manifest.visiblePostingDirs(spark, root, st).isEmpty &&
+    val st = Manifest.stateAt(spark, root, None)
+    if (Manifest.visibleDeltaDirs(spark, root, st, "postings").isEmpty &&
       st.statsV.isEmpty) return false
     val vNew = st.version + 1
     // three order-free legs: all read only the COMMITTED state and
@@ -1334,8 +1346,7 @@ object TxServeStack {
     () =>
       if (Manifest.visibleDeltaDirs(spark, root, st, "positions").nonEmpty)
         Ledger.withHashBucket(
-            liveOnly(readPositions(spark, root, st),
-                readDeletes(spark, root, st))
+            live(spark, root, st, readPositions(spark, root, st))
               .select(col("doc_id"), col("term"), col("positions")),
             "term", newTermBuckets)
           .repartition(col("bkt"))
@@ -1354,63 +1365,13 @@ object TxServeStack {
     true
   }
 
-  /** What [[vacuum]] did: asset directories deleted (superseded
-    * versions, compacted-away batch deltas, crash orphans), history
-    * manifests retired (bounding time travel), and asset directories
-    * kept because some retained manifest still pins them. */
-  case class VacuumStats(deletedDirs: Int, deletedManifests: Int,
-                         keptDirs: Int)
-
-  /** GARBAGE COLLECTION — the executable form of what the protocol's
-    * scaladoc calls "collectable by listing against the manifest".
-    * Versioned writes never delete anything, so three kinds of
-    * garbage accumulate: superseded versions (a stats bucket's old
-    * `v=` dirs once a later commit re-pins it; the pre-compaction
-    * `batch=` deltas once the base pointer moves past them), crash
-    * orphans (asset writes whose manifest swap never happened), and
-    * stale `manifest.tmp-*` scratch files. None is ever readable
-    * through a committed manifest, so deletion is invisible to every
-    * pinned reader — vacuum lists each asset family, keeps exactly
-    * the paths some RETAINED manifest references, and deletes the
-    * rest.
-    *
-    * `retainVersions` keeps the last N history manifests below the
-    * current one alive (and every asset they pin), bounding
-    * [[Manifest.readAt]] time travel — the standard table-format
-    * retention trade: retain 0 reclaims everything unpinned NOW;
-    * retain N pays N versions of storage for N versions of snapshot
-    * reads. Like every table format's vacuum, this must not run
-    * concurrently with an in-flight writer whose commit has not yet
-    * swapped (its fresh-version writes look like orphans); run it
-    * from the same maintenance cadence as compaction. */
+  /** Garbage-collect what no retained cut pins — [[Manifest.vacuum]]
+    * over [[families]]: superseded stats buckets and globals,
+    * compacted-away posting/position deltas and tombstones, crash
+    * orphans, and history manifests below the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-    val (floor, retained) =
-      Manifest.retainedStates(spark, root, retainVersions)
-    // every (family, identifier) some retained manifest still pins;
-    // stats sweep at (version, bucket) granularity — one commit's
-    // version dir can hold both live and superseded buckets
-    val keepStats = retained.flatMap(_.statsV.map { case (b, v) =>
-      s"v=$v/bkt=$b" }).toSet
-    val keepGlobal = retained.map(st => s"v=${st.globalV}").toSet
-    val keepBase = retained.filter(_.baseV >= 0)
-      .map(st => s"v=${st.baseV}").toSet
-    val keepBatch = retained.flatMap(st =>
-      (st.baseBatch + 1) to st.batchId).map(b => s"batch=$b").toSet
-    val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-      floor, Seq(
-        Manifest.SweepFamily("stats", 2, keepStats),
-        Manifest.SweepFamily("global", 1, keepGlobal),
-        Manifest.SweepFamily("postings/base", 1, keepBase),
-        Manifest.SweepFamily("postings", 1,
-          n => n == "base" || keepBatch(n)),
-        Manifest.SweepFamily("positions/base", 1, keepBase),
-        Manifest.SweepFamily("positions", 1,
-          n => n == "base" || keepBatch(n)),
-        Manifest.SweepFamily("deletes", 1, keepBatch)))
-    VacuumStats(deleted, retired, kept)
-  }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }
 
 /** The IVF-PQ serve stack's TRANSACTIONAL face — the [[Manifest]]
@@ -1432,9 +1393,7 @@ object TxServeStack {
   *    manifest pins codes and quantizer to the same cut, so the
   *    mixed state is unobservable by construction.
   *
-  * State mapping onto [[Manifest.State]]: `globalV` pins the
-  * quantizer version, `baseV`/`baseBatch` the codes base pointer,
-  * `statsV` is unused (empty). QUANTIZER REFRESH — the FAISS
+  * QUANTIZER REFRESH — the FAISS
   * retrain-and-reindex lifecycle [[Similarity.pqIndexReencode]]
   * documents as "write to a new path, then switch readers" — becomes
   * a first-class transaction here: re-encode into a fresh codes BASE
@@ -1443,6 +1402,15 @@ object TxServeStack {
 object TxVectorStack {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
+
+  /** The quantizer pair at `globalV`; codes and tombstones under the
+    * base pointer + batch window. */
+  private[operators] val families: Seq[Manifest.Family] = Seq(
+    Manifest.Versioned("quant", _.globalV), Manifest.Appended("codes"),
+    Manifest.Appended("deletes"))
+
+  private val CodeCols = org.apache.spark.sql.types.StructType.fromDDL(
+    "vec_id BIGINT, cell INT, codes ARRAY<INT>, bkt INT")
 
   /** Create the stack: commit a trained quantizer (centroids +
     * codebook) with no codes yet. Deployment order is quantizer
@@ -1467,54 +1435,23 @@ object TxVectorStack {
       .write.mode("overwrite").parquet(s"$root/quant/v=$v/codebook")
   }
 
-  /** Committed codes with BATCH PROVENANCE (`_b`, from the partition
-    * path; base rows carry `baseBatch`) — what makes the tombstone
-    * rule ordered, exactly as [[TxServeStack]]'s postings. */
-  private def readCodes(spark: SparkSession, root: String,
-                        st: Manifest.State): DataFrame = {
-    val cols = Seq(col("vec_id"), col("cell"), col("codes"), col("bkt"))
-    val dirs = Manifest.visibleDeltaDirs(spark, root, st, "codes")
-    val (baseDirs, deltaDirs) = dirs.partition(_.contains("/base/"))
-    val parts =
-      (if (baseDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/codes/base")
-         .parquet(baseDirs: _*)
-         .select(cols :+ lit(st.baseBatch).as("_b"): _*))) ++
-      (if (deltaDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/codes")
-         .parquet(deltaDirs: _*)
-         .select(cols :+ col("batch").cast("long").as("_b"): _*)))
-    if (parts.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("vec_id"),
-        lit(0).as("cell"), array().cast("array<int>").as("codes"),
-        lit(0).as("bkt"), lit(0L).as("_b")).limit(0)
-    else parts.reduce(_ unionByName _)
-  }
+  /** The pinned quantizer pair (centroids, codebook). */
+  private def readQuant(spark: SparkSession, root: String,
+                        st: Manifest.State): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"$root/quant/v=${st.globalV}/centroids"),
+      spark.read.parquet(s"$root/quant/v=${st.globalV}/codebook"))
 
-  /** Visible tombstones as (vec_id, asof), latest per id — a
-    * tombstone at asof = N kills code rows born before N and nothing
-    * after ([[TxServeStack]]'s ordered rule), so [[commitUpsert]]
-    * replaces in one commit and a post-delete re-ingest just lands.
-    * The window retires at the next [[refresh]]. */
-  private def readDeletes(spark: SparkSession, root: String,
-                          st: Manifest.State): DataFrame = {
-    val dirs = Manifest.visibleDeltaDirs(spark, root, st, "deletes")
-    if (dirs.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("asof")).limit(0)
-    else spark.read.option("basePath", s"$root/deletes")
-      .parquet(dirs: _*)
-      .groupBy("vec_id")
-      .agg(max(col("batch").cast("long")).as("asof"))
-  }
-
+  /** The LIVE committed codes (vec_id, cell, codes, bkt, _b): batch
+    * provenance `_b` orders the tombstone rule exactly as
+    * [[TxServeStack]]'s postings — a tombstone at asof = N kills rows
+    * born before N and nothing after, so [[commitUpsert]] replaces in
+    * one commit and a post-delete re-ingest just lands. The window
+    * retires at the next [[refresh]]. */
   private def liveCodes(spark: SparkSession, root: String,
                         st: Manifest.State): DataFrame =
-    readCodes(spark, root, st)
-      .join(broadcast(readDeletes(spark, root, st)),
-        Seq("vec_id"), "left_outer")
-      .filter(col("asof").isNull || col("_b") >= col("asof"))
-      .drop("asof")
+    Manifest.liveOnly(
+      Manifest.readAppended(spark, root, st, "codes", CodeCols),
+      Manifest.readTombstones(spark, root, st, "vec_id"), "vec_id")
 
   /** Tombstone the batch ids that still have live code rows at
     * `deletes/batch=N` — [[commitDelete]]'s whole write and
@@ -1536,9 +1473,9 @@ object TxVectorStack {
               version: Option[Long] = None)
       : (DataFrame, DataFrame, DataFrame) = {
     val st = Manifest.stateAt(spark, root, version)
-    (liveCodes(spark, root, st).select("vec_id", "cell", "codes"),
-      spark.read.parquet(s"$root/quant/v=${st.globalV}/centroids"),
-      spark.read.parquet(s"$root/quant/v=${st.globalV}/codebook"))
+    val codes = liveCodes(spark, root, st).select("vec_id", "cell", "codes")
+    val (cent, cb) = readQuant(spark, root, st)
+    (codes, cent, cb)
   }
 
   /** TRANSACTIONAL DELETE for the vector index
@@ -1554,8 +1491,7 @@ object TxVectorStack {
                    removals: DataFrame, batchId: Long, idCol: String,
                    buckets: Int = 16, publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
       writeTombstones(spark, root, st,
         removals.select(col(idCol).as("vec_id")).distinct(),
         buckets, batchId)
@@ -1574,8 +1510,7 @@ object TxVectorStack {
       throw new IllegalStateException(
         s"vector stack not initialized at $root — call init first")
     ) { (st, vNew) =>
-      val cent = spark.read.parquet(s"$root/quant/v=${st.globalV}/centroids")
-      val cb = spark.read.parquet(s"$root/quant/v=${st.globalV}/codebook")
+      val (cent, cb) = readQuant(spark, root, st)
       val stored = Ledger.prunedToBatch(
           liveCodes(spark, root, st).select(col("vec_id"), col("bkt")),
           batch.select(col(idCol).as("vec_id")), "vec_id", buckets)
@@ -1599,8 +1534,7 @@ object TxVectorStack {
                    batchId: Long, idCol: String, vecCol: String,
                    buckets: Int = 16, publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
       // tombstone and replacement-codes legs read only the committed
       // cut and the batch, write disjoint directories, and publish in
       // the one swap — order-free, overlap them (Par scaladoc)
@@ -1609,10 +1543,7 @@ object TxVectorStack {
           batch.select(col(idCol).as("vec_id")).distinct(),
           buckets, batchId),
         {
-          val cent =
-            spark.read.parquet(s"$root/quant/v=${st.globalV}/centroids")
-          val cb =
-            spark.read.parquet(s"$root/quant/v=${st.globalV}/codebook")
+          val (cent, cb) = readQuant(spark, root, st)
           val delta = Similarity.pqIndexBuild(batch, cent, cb, idCol,
             vecCol)
           Ledger.withBucket(delta, "vec_id", buckets)
@@ -1637,8 +1568,7 @@ object TxVectorStack {
               idCol: String, vecCol: String, buckets: Int = 16,
               publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
+    val st = Manifest.stateAt(spark, root, None)
     val vNew = st.version + 1
     // live membership only — the refresh is also the tombstone purge
     val reenc = Similarity.pqIndexReencode(
@@ -1661,25 +1591,8 @@ object TxVectorStack {
   /** [[TxServeStack.vacuum]]'s twin for the vector stack: reclaim
     * superseded quantizer versions (each refresh strands one),
     * refreshed-away codes deltas, crash orphans, and history
-    * manifests below the retention floor. Same writer caveat: not
-    * concurrent with an in-flight commit. */
+    * manifests below the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-    val (floor, retained) =
-      Manifest.retainedStates(spark, root, retainVersions)
-    val keepQuant = retained.map(st => s"v=${st.globalV}").toSet
-    val keepBase = retained.filter(_.baseV >= 0)
-      .map(st => s"v=${st.baseV}").toSet
-    val keepBatch = retained.flatMap(st =>
-      (st.baseBatch + 1) to st.batchId).map(b => s"batch=$b").toSet
-    val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-      floor, Seq(
-        Manifest.SweepFamily("quant", 1, keepQuant),
-        Manifest.SweepFamily("codes/base", 1, keepBase),
-        Manifest.SweepFamily("codes", 1,
-          n => n == "base" || keepBatch(n)),
-        Manifest.SweepFamily("deletes", 1, keepBatch)))
-    TxServeStack.VacuumStats(deleted, retired, kept)
-  }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The kNN-GRAPH ledger under the [[Manifest]] commit protocol — the
   * transactional face of `streaming_graph_ingest`'s drain, closing the
@@ -50,6 +51,14 @@ import org.apache.spark.sql.functions._
   */
 object TxGraphStack {
 
+  /** Edges per bucket in `statsV`, node tombstones in `auxV`. */
+  private[operators] val families: Seq[Manifest.Family] = Seq(
+    Manifest.Bucketed("edges", _.statsV), Manifest.Bucketed("tomb", _.auxV))
+
+  private val EdgeCols = StructType.fromDDL(
+    "src_id BIGINT, nbr_id BIGINT, cos DOUBLE, b BIGINT, bkt INT")
+  private val TombCols = StructType.fromDDL("id BIGINT, asof BIGINT, bkt INT")
+
   private def bktOf(c: org.apache.spark.sql.Column, buckets: Int) =
     pmod(c, lit(buckets.toLong)).cast("int")
 
@@ -88,40 +97,16 @@ object TxGraphStack {
     * Tombstoned rows included — [[liveEdges]] applies the rule. */
   private def readEdges(spark: SparkSession, root: String,
                         st: Manifest.State,
-                        restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("src_id"),
-        lit(0L).as("nbr_id"), lit(0.0).as("cos"), lit(0L).as("b"),
-        lit(0).as("bkt"))
-        .limit(0)
-    else spark.read.option("basePath", s"$root/edges")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/edges/v=$v/bkt=$b" }: _*)
-      .select(col("src_id"), col("nbr_id"), col("cos"), col("b"),
-        col("bkt"))
-  }
+                        restrict: Option[Seq[Int]]): DataFrame =
+    Manifest.readBucketed(spark, root, "edges", st.statsV, restrict,
+      EdgeCols)
 
   /** Visible node tombstones (id, asof), each bucket at its pinned
     * version — tiny by the compaction-cadence contract. */
   private def readTombstones(spark: SparkSession, root: String,
                              st: Manifest.State,
-                             restrict: Option[Seq[Int]] = None): DataFrame = {
-    val pinned = restrict match {
-      case None => st.auxV
-      case Some(bs) => st.auxV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("id"), lit(0L).as("asof"),
-        lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/tomb")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/tomb/v=$v/bkt=$b" }: _*)
-      .select(col("id"), col("asof"), col("bkt"))
-  }
+                             restrict: Option[Seq[Int]] = None): DataFrame =
+    Manifest.readBucketed(spark, root, "tomb", st.auxV, restrict, TombCols)
 
   /** The ordered two-endpoint rule, parameterized: `keepLive = true`
     * keeps edges NEITHER endpoint's tombstone postdates (the serve
@@ -255,8 +240,7 @@ object TxGraphStack {
                    removals: DataFrame, batchId: Long, idCol: String,
                    buckets: Int, publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
     val rm = removals.select(col(idCol).as("id")).distinct()
       // lazy: the bucket election drains the frame and materializes
       // the checkpoint in the same action (guide §2.4)
@@ -292,8 +276,7 @@ object TxGraphStack {
     require(maxDegree >= k,
       "maxDegree must be >= k (repairs add k edges per side)")
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
     val raw = readEdges(spark, root, st, None)
     // lazy: first materialized by the orphans truncate (guide §2.4)
     val tomb = readTombstones(spark, root, st).localCheckpoint(eager = false)
@@ -368,8 +351,7 @@ object TxGraphStack {
   def compactEdges(spark: SparkSession, root: String,
                    publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
+    val st = Manifest.stateAt(spark, root, None)
     if (st.statsV.isEmpty) return false
     val vNew = st.version + 1
     liveEdges(readEdges(spark, root, st, None),
@@ -406,8 +388,7 @@ object TxGraphStack {
                publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
     require(newBuckets > 0, "newBuckets must be positive")
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
+    val st = Manifest.stateAt(spark, root, None)
     if (st.statsV.isEmpty) return false
     val vNew = st.version + 1
     val pins = Manifest.moveFamily(
@@ -423,23 +404,8 @@ object TxGraphStack {
 
   /** [[TxServeStack.vacuum]]'s twin for the graph stack: reclaim
     * superseded bucket versions on BOTH families (edges, tombstones),
-    * crash orphans, and history manifests below the retention floor.
-    * Same writer caveat: not concurrent with an in-flight commit
-    * ([[Manifest.commit]]'s fence protects the pointer, not un-swapped
-    * fresh-version writes). */
+    * crash orphans, and history manifests below the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-    val (floor, retained) =
-      Manifest.retainedStates(spark, root, retainVersions)
-    val keepEdges = retained.flatMap(_.statsV.map { case (b, v) =>
-      s"v=$v/bkt=$b" }).toSet
-    val keepTomb = retained.flatMap(_.auxV.map { case (b, v) =>
-      s"v=$v/bkt=$b" }).toSet
-    val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-      floor, Seq(
-        Manifest.SweepFamily("edges", 2, keepEdges),
-        Manifest.SweepFamily("tomb", 2, keepTomb)))
-    TxServeStack.VacuumStats(deleted, retired, kept)
-  }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

@@ -50,27 +50,16 @@ import org.apache.spark.sql.functions._
   */
 object TxJoinViewStack {
 
+  private[operators] val families: Seq[Manifest.Family] =
+    Seq(Manifest.Bucketed("members", _.statsV))
+
+  /** Member rows (doc_id, split, dl, bkt); split and dl are null on
+    * the side no upstream claims. */
+  private val MemberCols = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, split STRING, dl BIGINT, bkt INT")
+
   private def bktOf(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
-
-  /** Committed member rows (doc_id, split, dl, bkt), each bucket at
-    * its pinned version; `restrict` prunes at the PATH level. */
-  private def readMembers(spark: SparkSession, root: String,
-                          st: Manifest.State,
-                          restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("doc_id"),
-        lit(null).cast("string").as("split"),
-        lit(null).cast("long").as("dl"), lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/members")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/members/v=$v/bkt=$b" }: _*)
-      .select(col("doc_id"), col("split"), col("dl"), col("bkt"))
-  }
 
   /** The indexed documents of a lexical cut, with their norms:
     * (doc_id, dl) — dl rides every posting row (norms-in-the-index),
@@ -143,7 +132,8 @@ object TxJoinViewStack {
           if (touched.isEmpty) st
           else {
             val keepCol = if (setCol == "dl") "split" else "dl"
-            val replaced = readMembers(spark, viewRoot, st, Some(touched))
+            val replaced = Manifest.readBucketed(spark, viewRoot,
+                "members", st.statsV, Some(touched), MemberCols)
               .drop("bkt")
               .withColumnRenamed(setCol, "_old")
               .join(f.select(col("doc_id"), col("change"),
@@ -202,8 +192,9 @@ object TxJoinViewStack {
     * `version`. */
   def members(spark: SparkSession, root: String,
               version: Option[Long] = None): DataFrame =
-    readMembers(spark, root, Manifest.stateAt(spark, root, version),
-      None).drop("bkt")
+    Manifest.readBucketed(spark, root, "members",
+      Manifest.stateAt(spark, root, version).statsV, None, MemberCols)
+      .drop("bkt")
 
   /** The INNER-join rollup the view exists to serve: per split,
     * document and token totals over members BOTH sides claim —
@@ -231,17 +222,8 @@ object TxJoinViewStack {
         coalesce(sum(col("dl")), lit(0L)).as("n_tokens"))
 
   /** Garbage-collect unpinned member versions and retire history below
-    * the retention floor — [[Manifest.sweepUnpinned]] on the single
-    * family. */
+    * the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-      val (floor, retained) = Manifest.retainedStates(spark, root,
-        retainVersions)
-      val live = retained.flatMap(_.statsV.map { case (b, v) =>
-        s"v=$v/bkt=$b" }).toSet
-      val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-        floor, Seq(Manifest.SweepFamily("members", 2, live)))
-      TxServeStack.VacuumStats(deleted, retired, kept)
-    }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

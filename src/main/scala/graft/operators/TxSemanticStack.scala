@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The SEMANTIC-DEDUP family under the [[Manifest]] commit protocol —
   * the transactional face of `streaming_semantic_ingest`'s drain,
@@ -35,6 +36,17 @@ import org.apache.spark.sql.functions._
   * sized ([[Dedup.connectedComponentsIncrementalDelta]]).
   */
 object TxSemanticStack {
+
+  /** The by-id label view per bucket in `statsV`, the by-cluster view
+    * in `auxV`; block-index rows and takedown tombstones under the base
+    * pointer + batch window. */
+  private[operators] val families: Seq[Manifest.Family] = Seq(
+    Manifest.Bucketed("labels", _.statsV),
+    Manifest.Bucketed("labels_by_cluster", _.auxV),
+    Manifest.Appended("blkidx"), Manifest.Appended("deletes"))
+
+  private val LabelCols = StructType.fromDDL("id BIGINT, cluster BIGINT, bkt INT")
+  private val BlockCols = StructType.fromDDL("id BIGINT, blk STRING, bkt INT")
 
   private def ibktOf(buckets: Int) =
     pmod(col("id"), lit(buckets.toLong)).cast("int")
@@ -86,19 +98,9 @@ object TxSemanticStack {
     * `restrict`'s buckets when given. */
   private def readPinned(spark: SparkSession, root: String,
                          family: String, pins: Map[Int, Long],
-                         restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => pins
-      case Some(bs) => pins.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("id"),
-        lit(0L).as("cluster"), lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/$family")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/$family/v=$v/bkt=$b" }: _*)
-      .select(col("id"), col("cluster"), col("bkt"))
-  }
+                         restrict: Option[Seq[Int]]): DataFrame =
+    Manifest.readBucketed(spark, root, family, pins, restrict,
+      LabelCols)
 
   /** Resolve the committed label ledger (id, cluster) — the
     * authoritative by-id view, optionally path-pruned to `idBuckets`
@@ -120,47 +122,6 @@ object TxSemanticStack {
       Manifest.stateAt(spark, root, version).auxV, clusterBuckets)
       .select("id", "cluster")
 
-  /** Raw committed block-index rows with BATCH PROVENANCE (`_b` from
-    * the partition path; base rows carry `baseBatch`) — what makes the
-    * takedown tombstones ordered, exactly as [[TxServeStack]]'s
-    * postings: a tombstone at asof = N kills block rows born before N
-    * and nothing after, so a takedown-then-re-ingest of the same id
-    * just lands (the re-ingest's block row is born later). */
-  private def readBlockIndex(spark: SparkSession, root: String,
-                             st: Manifest.State): DataFrame = {
-    val dirs = Manifest.visibleDeltaDirs(spark, root, st, "blkidx")
-    val (baseDirs, deltaDirs) = dirs.partition(_.contains("/base/"))
-    val parts =
-      (if (baseDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/blkidx/base")
-         .parquet(baseDirs: _*)
-         .select(col("id"), col("blk"), col("bkt"),
-           lit(st.baseBatch).as("_b")))) ++
-      (if (deltaDirs.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", s"$root/blkidx")
-         .parquet(deltaDirs: _*)
-         .select(col("id"), col("blk"), col("bkt"),
-           col("batch").cast("long").as("_b"))))
-    if (parts.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("id"), lit("").as("blk"),
-        lit(0).as("bkt"), lit(0L).as("_b")).limit(0)
-    else parts.reduce(_ unionByName _)
-  }
-
-  /** Visible takedown tombstones as (id, asof), latest per id. Tiny by
-    * contract (one row per removed id per retention window). */
-  private def readDeletes(spark: SparkSession, root: String,
-                          st: Manifest.State): DataFrame = {
-    val dirs = Manifest.visibleDeltaDirs(spark, root, st, "deletes")
-    if (dirs.isEmpty)
-      spark.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("asof")).limit(0)
-    else spark.read.option("basePath", s"$root/deletes")
-      .parquet(dirs: _*)
-      .groupBy("id")
-      .agg(max(col("batch").cast("long")).as("asof"))
-  }
-
   /** The committed LIVE block index (id, blk), path-pruned to
     * `keyBuckets` (the batch's block keys' buckets) when given — the
     * ordered-liveness rule applied after the prune (a semantic no-op
@@ -170,14 +131,16 @@ object TxSemanticStack {
                         keyBuckets: Option[Seq[Int]] = None,
                         version: Option[Long] = None): DataFrame = {
     val st = Manifest.stateAt(spark, root, version)
-    val all = readBlockIndex(spark, root, st)
+    // block rows carry batch provenance `_b`, so the takedown
+    // tombstones are ORDERED like [[TxServeStack]]'s: a
+    // takedown-then-re-ingest of an id just lands
+    val all = Manifest.readAppended(spark, root, st, "blkidx", BlockCols)
     val pruned = keyBuckets match {
       case None => all
       case Some(bs) => all.filter(col("bkt").isin(bs.map(Int.box): _*))
     }
-    pruned.join(broadcast(readDeletes(spark, root, st)),
-        Seq("id"), "left_outer")
-      .filter(col("asof").isNull || col("_b") >= col("asof"))
+    Manifest.liveOnly(pruned, Manifest.readTombstones(spark, root, st, "id"),
+        "id")
       .select("id", "blk")
   }
 
@@ -319,8 +282,7 @@ object TxSemanticStack {
                    idCol: String, vecCol: String, threshold: Double,
                    buckets: Int, publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(s"no committed manifest at $root")
-    ) { (st, vNew) =>
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
     // LAZY: rm materializes inside its own bucket election; rmLabels
     // and touchedCl materialize inside tcbOld's election one line down
     // (guide §2.4). rm then has multiple consumers but is already
@@ -402,25 +364,5 @@ object TxSemanticStack {
     * the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-    val (floor, retained) =
-      Manifest.retainedStates(spark, root, retainVersions)
-    val keepId = retained.flatMap(_.statsV.map { case (b, v) =>
-      s"v=$v/bkt=$b" }).toSet
-    val keepCl = retained.flatMap(_.auxV.map { case (b, v) =>
-      s"v=$v/bkt=$b" }).toSet
-    val keepBase = retained.filter(_.baseV >= 0)
-      .map(st => s"v=${st.baseV}").toSet
-    val keepBatch = retained.flatMap(st =>
-      (st.baseBatch + 1) to st.batchId).map(b => s"batch=$b").toSet
-    val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-      floor, Seq(
-        Manifest.SweepFamily("labels", 2, keepId),
-        Manifest.SweepFamily("labels_by_cluster", 2, keepCl),
-        Manifest.SweepFamily("blkidx/base", 1, keepBase),
-        Manifest.SweepFamily("blkidx", 1,
-          n => n == "base" || keepBatch(n)),
-        Manifest.SweepFamily("deletes", 1, keepBatch)))
-    TxServeStack.VacuumStats(deleted, retired, kept)
-  }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

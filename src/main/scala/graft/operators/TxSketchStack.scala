@@ -39,6 +39,12 @@ import org.apache.spark.sql.functions._
   * given value set, so gates pin it with an exact-twin witness. */
 object TxSketchStack {
 
+  private[operators] val families: Seq[Manifest.Family] =
+    Seq(Manifest.Bucketed("sketch", _.statsV))
+
+  private val SketchCols = org.apache.spark.sql.types.StructType.fromDDL(
+    "key STRING, n_rows BIGINT, sk BINARY, th BINARY, bkt INT")
+
   private def bktOf(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
 
@@ -63,21 +69,9 @@ object TxSketchStack {
     * same slot/sample union, so one merge pass carries both. */
   private def readSketches(spark: SparkSession, root: String,
                            st: Manifest.State,
-                           restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit("").as("key"),
-        lit(0L).as("n_rows"), lit(Array.empty[Byte]).as("sk"),
-        lit(Array.empty[Byte]).as("th"), lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/sketch")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/sketch/v=$v/bkt=$b" }: _*)
-      .select(col("key"), col("n_rows"), col("sk"), col("th"),
-        col("bkt"))
-  }
+                           restrict: Option[Seq[Int]]): DataFrame =
+    Manifest.readBucketed(spark, root, "sketch", st.statsV, restrict,
+      SketchCols)
 
   /** One arrival batch through the protocol: aggregate the batch to
     * (key, count, sketch) — one partial-merge shuffle on the key —
@@ -359,8 +353,7 @@ object TxSketchStack {
                newBuckets: Int, publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
     require(newBuckets > 0, "newBuckets must be positive")
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
+    val st = Manifest.stateAt(spark, root, None)
     if (st.statsV.isEmpty) return false
     val vNew = st.version + 1
     val pins = Manifest.moveFamily(
@@ -377,13 +370,5 @@ object TxSketchStack {
     * versions, crash orphans, and history manifests below the floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-      val (floor, retained) =
-        Manifest.retainedStates(spark, root, retainVersions)
-      val keep = retained.flatMap(_.statsV.map { case (b, v) =>
-        s"v=$v/bkt=$b" }).toSet
-      val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-        floor, Seq(Manifest.SweepFamily("sketch", 2, keep)))
-      TxServeStack.VacuumStats(deleted, retired, kept)
-    }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** STICKY dataset-split ledger under the [[Manifest]] commit protocol
   * — the stability face [[Sampling.assignSplitLeakFree]]'s scaladoc
@@ -35,6 +36,15 @@ import org.apache.spark.sql.functions._
   * of a silent leak or a silent re-shuffle. */
 object TxSplitStack {
 
+  /** Assignments per bucket in `statsV`, conflicts in `auxV`. */
+  private[operators] val families: Seq[Manifest.Family] = Seq(
+    Manifest.Bucketed("assign", _.statsV),
+    Manifest.Bucketed("conflict", _.auxV))
+
+  private val AssignCols = StructType.fromDDL("doc_id BIGINT, split STRING, bkt INT")
+  private val ConflictCols =
+    StructType.fromDDL("doc_id BIGINT, split STRING, cl BIGINT, bkt INT")
+
   private def bktOf(c: org.apache.spark.sql.Column, buckets: Int) =
     pmod(c, lit(buckets.toLong)).cast("int")
 
@@ -49,19 +59,9 @@ object TxSplitStack {
 
   private def readAssigned(spark: SparkSession, root: String,
                            st: Manifest.State,
-                           restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("doc_id"),
-        lit("").as("split"), lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/assign")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/assign/v=$v/bkt=$b" }: _*)
-      .select(col("doc_id"), col("split"), col("bkt"))
-  }
+                           restrict: Option[Seq[Int]]): DataFrame =
+    Manifest.readBucketed(spark, root, "assign", st.statsV, restrict,
+      AssignCols)
 
   /** The committed assignment (doc_id, split), optionally pinned to a
     * snapshot `version` — the exact split an old eval ran against is
@@ -112,19 +112,9 @@ object TxSplitStack {
     * like the assignment family, pinned in [[Manifest.State.auxV]]. */
   private def readConflicts(spark: SparkSession, root: String,
                             st: Manifest.State,
-                            restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.auxV
-      case Some(bs) => st.auxV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit(0L).as("doc_id"),
-        lit("").as("split"), lit(0L).as("cl"), lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/conflict")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/conflict/v=$v/bkt=$b" }: _*)
-      .select(col("doc_id"), col("split"), col("cl"), col("bkt"))
-  }
+                            restrict: Option[Seq[Int]]): DataFrame =
+    Manifest.readBucketed(spark, root, "conflict", st.auxV, restrict,
+      ConflictCols)
 
   /** Assign `arrivals` (a frame with `idCol`) under the CURRENT
     * near-dup `labels` ((id, cluster) — [[Dedup.connectedComponents]]
@@ -313,8 +303,7 @@ object TxSplitStack {
                newBuckets: Int, publish: Boolean = true): Boolean =
     Manifest.withCommitLock(spark, root) {
     require(newBuckets > 0, "newBuckets must be positive")
-    val st = Manifest.read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
+    val st = Manifest.stateAt(spark, root, None)
     if (st.statsV.isEmpty) return false
     val vNew = st.version + 1
     def move(read: DataFrame, family: String): Map[Int, Long] =
@@ -337,16 +326,5 @@ object TxSplitStack {
   /** [[TxServeStack.vacuum]]'s twin for the assignment ledger. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-      val (floor, retained) =
-        Manifest.retainedStates(spark, root, retainVersions)
-      val keep = retained.flatMap(_.statsV.map { case (b, v) =>
-        s"v=$v/bkt=$b" }).toSet
-      val keepC = retained.flatMap(_.auxV.map { case (b, v) =>
-        s"v=$v/bkt=$b" }).toSet
-      val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-        floor, Seq(Manifest.SweepFamily("assign", 2, keep),
-          Manifest.SweepFamily("conflict", 2, keepC)))
-      TxServeStack.VacuumStats(deleted, retired, kept)
-    }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

@@ -174,8 +174,15 @@ object TxTableStack {
     }
   }
 
+  /** The base rows per bucket in `statsV`; the delta chain. */
+  private[operators] val families: Seq[Manifest.Family] =
+    Seq(Manifest.Bucketed("rows", _.statsV), Manifest.Chain("delta"))
+
   private def bktOf(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
+
+  private def notInitialized(root: String) = new IllegalStateException(
+    s"table not initialized at $root — call init first")
 
   private def schemaOf(st: Manifest.State): TableSchema =
     TableSchema.decode(st.schema)
@@ -547,9 +554,7 @@ object TxTableStack {
                   batchId: Long, keyCol: String, buckets: Int,
                   publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"table not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw notInitialized(root)) { (st, vNew) =>
       val schema = schemaOf(st)
       val key = keyField(schema, keyCol)
       val rows = align(batch, schema)
@@ -568,9 +573,7 @@ object TxTableStack {
                    batchId: Long, keyCol: String, buckets: Int,
                    publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"table not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw notInitialized(root)) { (st, vNew) =>
       val schema = schemaOf(st)
       val key = keyField(schema, keyCol)
       val ids = keys.select(col(keyCol).cast(key.dataType).as(key.name))
@@ -626,9 +629,7 @@ object TxTableStack {
                   deleteWhen: Option[String] = None,
                   publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"table not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw notInitialized(root)) { (st, vNew) =>
       val schema = schemaOf(st)
       val keyF = keyField(schema, keyCol)
       val key = keyF.name
@@ -681,8 +682,7 @@ object TxTableStack {
                     (derive: TableSchema => TableSchema): Boolean =
     Manifest.withCommitLock(spark, root) {
       val st = Manifest.read(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"table not initialized at $root — call init first"))
+        throw notInitialized(root))
       val next = derive(schemaOf(st))
       require(st.deltas.isEmpty || next.fields.exists(_.id == st.deltaKey),
         "the pending delta chain is keyed by the column this evolution " +
@@ -910,8 +910,7 @@ object TxTableStack {
     Manifest.withCommitLock(spark, root) {
       require(newBuckets > 0, "newBuckets must be positive")
       val st = Manifest.read(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"table not initialized at $root — call init first"))
+        throw notInitialized(root))
       if (st.statsV.isEmpty && st.deltas.isEmpty) false
       else {
         val schema = schemaOf(st)
@@ -946,8 +945,7 @@ object TxTableStack {
     Manifest.withCommitLock(spark, root) {
       require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
       val st = Manifest.read(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"table not initialized at $root — call init first"))
+        throw notInitialized(root))
       val conf = spark.sessionState.newHadoopConf()
       val fsys = new Path(root).getFileSystem(conf)
       val fragmented = st.statsV.toSeq.filter { case (b, v) =>
@@ -965,15 +963,5 @@ object TxTableStack {
     * chains, and retire history below the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-      val (floor, retained) = Manifest.retainedStates(spark, root,
-        retainVersions)
-      val live = retained.flatMap(_.statsV.map { case (b, v) =>
-        s"v=$v/bkt=$b" }).toSet
-      val chained = retained.flatMap(_.deltas.map(d => s"v=${d.token}")).toSet
-      val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-        floor, Seq(Manifest.SweepFamily("rows", 2, live),
-          Manifest.SweepFamily("delta", 1, chained)))
-      TxServeStack.VacuumStats(deleted, retired, kept)
-    }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

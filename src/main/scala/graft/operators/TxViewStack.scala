@@ -49,6 +49,12 @@ import org.apache.spark.sql.functions._
   * designs, independently implemented. */
 object TxViewStack {
 
+  private[operators] val families: Seq[Manifest.Family] =
+    Seq(Manifest.Bucketed("members", _.statsV))
+
+  private val MemberCols = org.apache.spark.sql.types.StructType.fromDDL(
+    "grp STRING, key STRING, n_rows BIGINT, sk BINARY, th BINARY, bkt INT")
+
   private def bktOf(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
 
@@ -57,21 +63,9 @@ object TxViewStack {
     * level. */
   private def readMembers(spark: SparkSession, root: String,
                           st: Manifest.State,
-                          restrict: Option[Seq[Int]]): DataFrame = {
-    val pinned = restrict match {
-      case None => st.statsV
-      case Some(bs) => st.statsV.filter { case (b, _) => bs.contains(b) }
-    }
-    if (pinned.isEmpty)
-      spark.emptyDataFrame.select(lit("").as("grp"), lit("").as("key"),
-        lit(0L).as("n_rows"), lit(Array.empty[Byte]).as("sk"),
-        lit(Array.empty[Byte]).as("th"), lit(0).as("bkt")).limit(0)
-    else spark.read.option("basePath", s"$root/members")
-      .parquet(pinned.toSeq.sorted.map { case (b, v) =>
-        s"$root/members/v=$v/bkt=$b" }: _*)
-      .select(col("grp"), col("key"), col("n_rows"), col("sk"),
-        col("th"), col("bkt"))
-  }
+                          restrict: Option[Seq[Int]]): DataFrame =
+    Manifest.readBucketed(spark, root, "members", st.statsV, restrict,
+      MemberCols)
 
   /** One-time full materialization at an upstream cut (default: its
     * head): mirror the upstream's rows under the view's group
@@ -195,17 +189,8 @@ object TxViewStack {
           .cast("long").as("est"))
 
   /** Garbage-collect unpinned member versions and retire history below
-    * the retention floor — [[Manifest.sweepUnpinned]] on the single
-    * family. */
+    * the retention floor. */
   def vacuum(spark: SparkSession, root: String,
              retainVersions: Int = 0): TxServeStack.VacuumStats =
-    Manifest.withCommitLock(spark, root) {
-      val (floor, retained) = Manifest.retainedStates(spark, root,
-        retainVersions)
-      val live = retained.flatMap(_.statsV.map { case (b, v) =>
-        s"v=$v/bkt=$b" }).toSet
-      val (deleted, retired, kept) = Manifest.sweepUnpinned(spark, root,
-        floor, Seq(Manifest.SweepFamily("members", 2, live)))
-      TxServeStack.VacuumStats(deleted, retired, kept)
-    }
+    Manifest.vacuum(spark, root, retainVersions, families)
 }

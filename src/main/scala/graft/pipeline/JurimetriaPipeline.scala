@@ -76,6 +76,22 @@ object JurimetriaPipeline {
       case (w, (hit, trib)) => w.when(hit, trib) }
   }
 
+  /** Refuse a local court directory whose path the JVM's file-name
+    * charset (`sun.jnu.encoding`, fixed from the locale at start-up;
+    * ASCII under the POSIX locale) cannot encode: Hadoop's local
+    * FileSystem would fail on it with an `InvalidPathException` that
+    * names neither the court nor the cure. */
+  private def requireNameable(trib: String, dir: Path): Unit =
+    Option(System.getProperty("sun.jnu.encoding"))
+      .filter(_ => dir.toUri.getScheme == "file")
+      .map(java.nio.charset.Charset.forName)
+      .foreach { cs =>
+        require(cs.newEncoder().canEncode(dir.toUri.getPath),
+          s"court $trib: the JVM's file-name charset $cs cannot encode " +
+            s"its directory $dir; start the JVM under a UTF-8 locale " +
+            "(e.g. LC_ALL=C.UTF-8)")
+      }
+
   /** Full run over raw hit files (one dir per tribunal) + municipio dim.
     * `municipios` must have columns (CD_MUN: long, NM_MUN: string).
     * Every court's directory is one root of ONE JSON scan, so Spark plans
@@ -98,7 +114,9 @@ object JurimetriaPipeline {
     val courts = hitDirs.toSeq.sortBy(_._1).map { case (trib, dir) =>
       val p = new Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (trib, fs.makeQualified(p), fs)
+      val q = fs.makeQualified(p)
+      requireNameable(trib, q)
+      (trib, q, fs)
     }
     courts.groupBy(_._2).foreach { case (dir, named) =>
       require(named.size == 1,

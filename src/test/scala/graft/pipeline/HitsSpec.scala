@@ -194,6 +194,24 @@ class HitsSpec extends SparkSpec {
     assert(labelled(out) == names.zipWithIndex.map { case (n, i) => n -> s"p$i" }.toSet)
   }
 
+  test("run: a court dir the file-name charset cannot encode is refused, naming the fix") {
+    val root = Files.createTempDirectory("unnameable").toFile
+    val name = "TJ São Paulo"
+    if (java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+        .newEncoder().canEncode(name)) {
+      val dirs = Map(name -> court(root, name, "sp1" -> Some(1L)))
+      val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
+      assert(labelled(out) == Set(name -> "sp1"))
+    } else {
+      // under an ASCII charset (the POSIX locale) the JVM cannot even
+      // create the directory; the run refuses it before looking for it
+      val e = intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
+        Map(name -> new java.io.File(root, name).getAbsolutePath), municipios,
+        PipelineConfig()))
+      assert(e.getMessage.contains(name) && e.getMessage.contains("LC_ALL=C.UTF-8"))
+    }
+  }
+
   test("run: maxProcessos is a per-court limit in cursor order") {
     val root = Files.createTempDirectory("limit").toFile
     val dirs = Map(
