@@ -60,22 +60,28 @@ object Catalog {
     * [[fastForward]] checks against. */
   private def publishWith(spark: SparkSession, catRoot: String,
                           pins: Seq[(String, String, Long)],
-                          fork: Option[Long]): Long =
-    Manifest.withCommitLock(spark, catRoot) {
-      import spark.implicits._
-      require(pins.map(_._1).distinct.length == pins.length,
-        s"duplicate stack names in catalog pins: ${pins.map(_._1)}")
-      val st = Manifest.read(spark, catRoot)
-        .getOrElse(Manifest.State(-1L, -1L, -1L, Map.empty))
-      val vNew = st.version + 1
-      val tok = Manifest.attemptVersion(vNew)
-      pins.toDF("stack", "root", "version").coalesce(1)
-        .write.mode("overwrite").parquet(s"$catRoot/pins/v=$tok")
-      Manifest.commit(spark, catRoot,
-        Manifest.State(vNew, vNew, tok, Map.empty,
-          baseV = fork.getOrElse(st.baseV)))
-      vNew
+                          fork: Option[Long]): Long = {
+    var published = -1L
+    Manifest.transact(spark, catRoot, publish = true)(
+      Manifest.State(-1L, -1L, -1L, Map.empty)) { (st, vNew) =>
+      published = vNew
+      Some(cut(spark, catRoot, pins, vNew, fork.getOrElse(st.baseV)))
     }
+    published
+  }
+
+  /** Write the pin table of catalog version `v` at a fresh attempt
+    * token and return the cut that pins it, `fork` its fork point. */
+  private def cut(spark: SparkSession, catRoot: String,
+      pins: Seq[(String, String, Long)], v: Long, fork: Long): Manifest.State = {
+    import spark.implicits._
+    require(pins.map(_._1).distinct.length == pins.length,
+      s"duplicate stack names in catalog pins: ${pins.map(_._1)}")
+    val tok = Manifest.attemptVersion(v)
+    pins.toDF("stack", "root", "version").coalesce(1)
+      .write.mode("overwrite").parquet(s"$catRoot/pins/v=$tok")
+    Manifest.State(v, v, tok, Map.empty, baseV = fork)
+  }
 
   /** Fork a STAGING catalog from `mainRoot`'s head — the
     * write-audit-publish entry point: the pipeline wave publishes its
@@ -88,16 +94,15 @@ object Catalog {
     * audit ran. Returns the staging catalog's version 0. */
   def branch(spark: SparkSession, mainRoot: String,
              stagingRoot: String): Long =
-    Manifest.withCommitLock(spark, stagingRoot) {
-      require(Manifest.read(spark, stagingRoot).isEmpty,
-        s"staging catalog already exists at $stagingRoot")
+    Manifest.create(spark, stagingRoot,
+        s"staging catalog already exists at $stagingRoot") {
       val mainV = Manifest.read(spark, mainRoot).getOrElse(
         throw new IllegalStateException(
           s"no committed catalog at $mainRoot to branch from")).version
       val inherited = pins(spark, mainRoot).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      publishWith(spark, stagingRoot, inherited, Some(mainV))
-    }
+      cut(spark, stagingRoot, inherited, 0L, mainV)
+    }.version
 
   /** Publish the staging catalog's HEAD pin set to main — the
     * write-audit-publish commit point, one atomic main-catalog swap

@@ -37,13 +37,6 @@ object Ledger {
       lit(buckets.toLong)).cast("int")
   }
 
-  /** The bucket set a key frame elects — a driver `collect` bounded by
-    * min(B, distinct keys), regardless of batch or corpus size. */
-  private def electedBuckets(keys: DataFrame, keyCol: String,
-                             buckets: Int, hashed: Boolean): Seq[Int] =
-    keys.select(bucketCol(keyCol, buckets, hashed).as("bkt"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-
   /** `bkt = pmod(key, buckets)` — the write-side column every
     * bucket-partitioned ledger derives before `partitionBy("bkt")`. */
   def withBucket(df: DataFrame, keyCol: String, buckets: Int): DataFrame =
@@ -54,7 +47,7 @@ object Ledger {
     * batch or corpus size). */
   def batchBuckets(batch: DataFrame, keyCol: String,
                    buckets: Int): Seq[Int] =
-    electedBuckets(batch, keyCol, buckets, hashed = false)
+    Manifest.elect(batch, bucketCol(keyCol, buckets, hashed = false)).sorted
 
   /** Prune a stored bucket-partitioned ledger to the buckets `batch`'s
     * keys elect: the anti-join read leg of an idempotent append scans
@@ -85,7 +78,7 @@ object Ledger {
     * for arriving batches. */
   def keyHashBuckets(keys: DataFrame, keyCol: String,
                      buckets: Int): Seq[Int] =
-    electedBuckets(keys, keyCol, buckets, hashed = true)
+    Manifest.elect(keys, bucketCol(keyCol, buckets, hashed = true)).sorted
 
   /** Prune a HASH-bucketed stored ledger to the buckets `keys` elect —
     * the SERVE-side pruning law: a query's key-equi join against the

@@ -127,11 +127,13 @@ object Manifest {
     * committers both derive vNew = head + 1 and would write the SAME
     * version-keyed asset directories, so the loser's
     * mode("overwrite") could clobber the winner's just-committed
-    * files BEFORE its own swap hits the fence. Every TxStack
-    * commit/compact/refresh/vacuum wraps its whole body (vacuum too:
-    * an in-flight committer's un-swapped fresh-version writes would
-    * otherwise look like reclaimable orphans). Re-entrant — the
-    * inner [[commit]] synchronizes on the same monitor.
+    * files BEFORE its own swap hits the fence. The commit shells —
+    * [[transact]] for every face that advances a stack, [[create]] for
+    * every face that starts one — hold it for the face's whole body,
+    * and so does [[vacuum]] (an in-flight committer's un-swapped
+    * fresh-version writes would otherwise look like reclaimable
+    * orphans). Re-entrant — the inner [[commit]] synchronizes on the
+    * same monitor.
     *
     * Cross-PROCESS, [[commit]]'s history-file CAS closes the POINTER
     * lost-update (exactly one process publishes version N), and the
@@ -154,28 +156,49 @@ object Manifest {
     lock.synchronized(body)
   }
 
-  /** The shared BATCH-COMMIT shell every Tx*Stack batch face wraps:
-    * hold the root's commit lock, resolve the head (or `orElse` before
-    * the first commit), skip whole when `batchId` is at or below the
-    * high-water mark (exactly-once by batch id), run
-    * `derive(head, head.version + 1)` — the versioned asset writes —
-    * and publish the state it returns unless `publish` is false (the
-    * crash face: everything derive wrote stays an invisible orphan).
-    * Centralizing the shell keeps the fence → skip → derive → swap
-    * choreography in ONE place instead of a hand-rolled copy per face
-    * — the copy that drifts (a present-set ordering bug once lived in
-    * exactly one of them). */
+  /** THE commit shell every face that advances a stack runs in: hold
+    * the root's commit lock, resolve the head (or `orElse` — a first
+    * state, or the face's own head-missing refusal), run
+    * `derive(head, head.version + 1)` — the face's versioned asset
+    * writes and its fold into the next state — and publish the state it
+    * returns unless `publish` is false (the crash face: everything
+    * derive wrote stays an invisible orphan). `None` is "nothing to do"
+    * or a replay: nothing commits and the shell returns false. One
+    * shell keeps the fence → derive → swap choreography in ONE place
+    * instead of a hand-rolled copy per face — the copy that drifts (a
+    * present-set ordering bug once lived in exactly one of them). */
+  private[operators] def transact(spark: SparkSession, root: String,
+      publish: Boolean)(orElse: => State)
+      (derive: (State, Long) => Option[State]): Boolean =
+    withCommitLock(spark, root) {
+      val st = read(spark, root).getOrElse(orElse)
+      val next = derive(st, st.version + 1)
+      if (publish) next.foreach(commit(spark, root, _))
+      next.isDefined
+    }
+
+  /** [[transact]] for a BATCH face: a `batchId` at or below the
+    * high-water mark is a replay and skips whole (exactly-once by batch
+    * id). */
   private[operators] def commitGuard(spark: SparkSession, root: String,
       batchId: Long, publish: Boolean)(orElse: => State)
       (derive: (State, Long) => State): Boolean =
+    transact(spark, root, publish)(orElse) { (st, vNew) =>
+      Option.when(batchId > st.batchId)(derive(st, vNew))
+    }
+
+  /** The shell every face that STARTS a stack runs in (init, build,
+    * branch): hold the commit lock, refuse a root that already holds a
+    * manifest (`refusal` is the message), then commit the first state
+    * `body` writes and returns — and return it, so a face can answer
+    * from it. */
+  private[operators] def create(spark: SparkSession, root: String,
+      refusal: String)(body: => State): State =
     withCommitLock(spark, root) {
-      val st = read(spark, root).getOrElse(orElse)
-      if (batchId <= st.batchId) false // replayed: already committed
-      else {
-        val newSt = derive(st, st.version + 1)
-        if (publish) commit(spark, root, newSt)
-        true
-      }
+      require(read(spark, root).isEmpty, refusal)
+      val st = body
+      commit(spark, root, st)
+      st
     }
 
   /** RETRY SHELL for optimistic-concurrency losers: run `body` (a
@@ -593,6 +616,28 @@ object Manifest {
           s"version $v at $root is uncommitted or vacuumed"))
     }
 
+  /** The refusal a face throws when `root` holds no `stack` yet. */
+  private[operators] def notInitialized(stack: String, root: String) =
+    new IllegalStateException(
+      s"$stack not initialized at $root — call init first")
+
+  /** The two cuts of a change feed, each resolved as a snapshot — a
+    * window whose batch high-water runs backwards is refused. */
+  private[operators] def changeWindow(spark: SparkSession, root: String,
+      from: Long, to: Long): (State, State) = {
+    val stF = stateAt(spark, root, Some(from))
+    val stT = stateAt(spark, root, Some(to))
+    require(stT.batchId >= stF.batchId,
+      s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
+    (stF, stT)
+  }
+
+  /** The buckets `df` holds under `bkt` — one driver collect, bounded
+    * by the bucket count. A frame checkpointed lazily just before is
+    * materialized by this same action. */
+  private[operators] def elect(df: DataFrame, bkt: Column): Seq[Int] =
+    df.select(bkt).distinct().collect().map(_.getInt(0)).toSeq
+
   /** The buckets whose pin differs between two cuts of one
     * per-bucket-MVCC family — a change feed's read set: a bucket
     * pinned IDENTICALLY at both cuts cannot contain a changed row
@@ -632,21 +677,26 @@ object Manifest {
                                     touched: Seq[Int],
                                     pins: Map[Int, Long]): Map[Int, Long] = {
     val tok = attemptVersion(vNew)
-    replaced.write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$root/$family/v=$tok")
+    val dir = s"$root/$family/v=$tok"
+    writeBuckets(replaced, dir)
     // present = the bkt= dirs the ONE write just produced (partitionBy
-    // writes no directory for an empty bucket) — a driver-side listing
-    // instead of the former checkpoint + distinct().collect() pair,
-    // which re-ran the plan as two extra Spark actions per commit
-    val present = writtenBuckets(replaced.sparkSession,
-      s"$root/$family/v=$tok")
+    // writes no directory for an empty bucket) — a driver-side listing,
+    // not a second Spark action
+    val present = writtenBuckets(replaced.sparkSession, dir)
     pins -- touched.filterNot(present) ++
       touched.filter(present).map(_ -> tok)
   }
 
-  /** The bkt= partition values a just-finished partitionBy("bkt") write
-    * landed under `dir` — read from the directory names, no Spark job.
-    * An all-empty write leaves a markers-only dir: empty set. */
+  /** THE bucketed write every family shares: `df`, carrying `bkt`,
+    * overwrites `dir` as one `bkt=` directory per bucket it holds (an
+    * empty bucket writes none). [[writtenBuckets]] lists what landed,
+    * for the callers that pin it. */
+  private[operators] def writeBuckets(df: DataFrame, dir: String): Unit =
+    df.write.partitionBy("bkt").mode("overwrite").parquet(dir)
+
+  /** The bkt= partition values a just-finished [[writeBuckets]] landed
+    * under `dir` — read from the directory names, no Spark job. An
+    * all-empty write leaves a markers-only dir: empty set. */
   private[operators] def writtenBuckets(spark: SparkSession,
                                         dir: String): Set[Int] = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -668,14 +718,11 @@ object Manifest {
     * (replayable batch faces like resize). */
   private[operators] def moveFamily(bucketed: DataFrame, family: String,
                                     root: String, atV: Long): Map[Int, Long] = {
-    bucketed
-      .repartition(org.apache.spark.sql.functions.col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$root/$family/v=$atV")
+    val dir = s"$root/$family/v=$atV"
+    writeBuckets(bucketed.repartition(col("bkt")), dir)
     // pin what the ONE write landed (driver listing — see writeRepin):
     // buckets the frame left empty produced no bkt= dir and don't pin
-    writtenBuckets(bucketed.sparkSession, s"$root/$family/v=$atV")
-      .map(_ -> atV).toMap
+    writtenBuckets(bucketed.sparkSession, dir).map(_ -> atV).toMap
   }
 
   /** What a vacuum did: asset directories deleted (superseded
@@ -997,10 +1044,7 @@ object TxServeStack {
   def docChanges(spark: SparkSession, root: String, fromVersion: Long,
                  toVersion: Long, docBuckets: Int,
                  stats: Boolean = false): DataFrame = {
-    val stF = Manifest.stateAt(spark, root, Some(fromVersion))
-    val stT = Manifest.stateAt(spark, root, Some(toVersion))
-    require(stT.batchId >= stF.batchId,
-      s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
+    val (stF, stT) = Manifest.changeWindow(spark, root, fromVersion, toVersion)
     // the window's batch dirs are what a cut with no base, its batch
     // window opening at the from-cut, makes visible
     val window = Manifest.State(-1L, stT.batchId, -1L, Map.empty,
@@ -1026,8 +1070,7 @@ object TxServeStack {
     val candidates = Ledger.withBucket(
       idsIn("postings").unionByName(idsIn("deletes")).distinct(),
       "doc_id", docBuckets).localCheckpoint(eager = false)
-    val cBkts = candidates.select("bkt").distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val cBkts = Manifest.elect(candidates, col("bkt"))
     val emptyFeed = emptyIds.select(col("doc_id"), lit("").as("change"),
       lit(0L).as("dl_before"), lit(0L).as("dl_after")).limit(0)
     val classified =
@@ -1096,10 +1139,8 @@ object TxServeStack {
     // the crash contract, so they overlap (guide §2.6 / Par scaladoc)
     val gv = Manifest.attemptVersion(vNew)
     val statsV = Par.all[Any](() => {
-      Ledger.withBucket(Retrieval.withDocNorms(delta), "doc_id",
-          docBuckets)
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/postings/batch=$batchId")
+      Manifest.writeBuckets(Ledger.withBucket(Retrieval.withDocNorms(delta),
+        "doc_id", docBuckets), s"$root/postings/batch=$batchId")
       // positions (optional fourth asset): the SAME fresh-docs decision
       // the posting delta made — absorbed docs contribute no rows here
       // either, so the two assets can never disagree on membership
@@ -1188,11 +1229,9 @@ object TxServeStack {
                              batchId: Long, docs: DataFrame,
                              idCol: String, textCol: String,
                              termBuckets: Int): Unit =
-    Ledger.withHashBucket(
+    Manifest.writeBuckets(Ledger.withHashBucket(
         Retrieval.positionalIndexBuild(docs, idCol, textCol),
-        "term", termBuckets)
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$root/positions/batch=$batchId")
+        "term", termBuckets), s"$root/positions/batch=$batchId")
 
   /** TRANSACTIONAL UPSERT — replace documents in ONE commit (the
     * re-crawl face: a page's new version supersedes the old): the
@@ -1234,10 +1273,8 @@ object TxServeStack {
       removedTf.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$root/deletes/batch=$batchId")
     }, () => {
-      Ledger.withBucket(Retrieval.withDocNorms(delta), "doc_id",
-          docBuckets)
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/postings/batch=$batchId")
+      Manifest.writeBuckets(Ledger.withBucket(Retrieval.withDocNorms(delta),
+        "doc_id", docBuckets), s"$root/postings/batch=$batchId")
       // positions: the replacements' rows land whole; the shared
       // tombstone retires the old rows on the positional read too
       if (withPos)
@@ -1280,32 +1317,26 @@ object TxServeStack {
     * to compact. */
   def compactPostings(spark: SparkSession, root: String,
                       publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
-    val st = Manifest.stateAt(spark, root, None)
-    if (Manifest.visibleDeltaDirs(spark, root, st, "postings").isEmpty)
-      return false
-    val vNew = st.version + 1
-    // both legs read only the COMMITTED state and write disjoint base
-    // directories published by the one swap — order-free, overlap them
-    // (guide §2.6 / Par scaladoc)
-    Par.both(
-      livePostings(spark, root, st).drop("_b")
-        .repartition(col("bkt"))
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/postings/base/v=$vNew"),
-      // the positional family (when the drain carried one) compacts in
-      // the SAME swap — one base pointer covers both row-append assets
-      if (Manifest.visibleDeltaDirs(spark, root, st, "positions").nonEmpty)
-        live(spark, root, st, readPositions(spark, root, st))
-          .select(col("doc_id"), col("term"), col("positions"), col("bkt"))
-          .repartition(col("bkt"))
-          .write.partitionBy("bkt").mode("overwrite")
-          .parquet(s"$root/positions/base/v=$vNew"))
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
-        baseV = vNew, baseBatch = st.batchId))
-    true
-  }
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+    Option.when(
+        Manifest.visibleDeltaDirs(spark, root, st, "postings").nonEmpty) {
+      // both legs read only the COMMITTED state and write disjoint base
+      // directories published by the one swap — order-free, overlap
+      // them (guide §2.6 / Par scaladoc)
+      Par.both(
+        Manifest.writeBuckets(livePostings(spark, root, st).drop("_b")
+          .repartition(col("bkt")), s"$root/postings/base/v=$vNew"),
+        // the positional family (when the drain carried one) compacts in
+        // the SAME swap — one base pointer covers both row-append assets
+        if (Manifest.visibleDeltaDirs(spark, root, st, "positions").nonEmpty)
+          Manifest.writeBuckets(
+            live(spark, root, st, readPositions(spark, root, st))
+              .select(col("doc_id"), col("term"), col("positions"), col("bkt"))
+              .repartition(col("bkt")), s"$root/positions/base/v=$vNew"))
+      st.copy(version = vNew, baseV = vNew, baseBatch = st.batchId)
+    }
+    }
 
   /** Transactional RE-BUCKET for the lexical stack —
     * [[TxGraphStack.rebucket]]'s twin, moving BOTH keyspaces in one
@@ -1325,44 +1356,40 @@ object TxServeStack {
     * "3 buckets of 16" stops pruning (3 of 16 is 19% of a ledger that
     * should have been 3 of 512 = 0.6%). */
   def rebucket(spark: SparkSession, root: String, newDocBuckets: Int,
-               newTermBuckets: Int, publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
+               newTermBuckets: Int, publish: Boolean = true): Boolean = {
     require(newDocBuckets > 0 && newTermBuckets > 0,
       "bucket counts must be positive")
-    val st = Manifest.stateAt(spark, root, None)
-    if (Manifest.visibleDeltaDirs(spark, root, st, "postings").isEmpty &&
-      st.statsV.isEmpty) return false
-    val vNew = st.version + 1
-    // three order-free legs: all read only the COMMITTED state and
-    // write disjoint directories (postings/base, positions/base,
-    // stats/v=N) published by the one swap — overlap them (guide §2.6)
-    val statsPins = Par.all[Any](() =>
-      Ledger.withBucket(
-          livePostings(spark, root, st).drop("_b", "bkt"),
-          "doc_id", newDocBuckets)
-        .repartition(col("bkt"))
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/postings/base/v=$vNew"),
-    () =>
-      if (Manifest.visibleDeltaDirs(spark, root, st, "positions").nonEmpty)
-        Ledger.withHashBucket(
-            live(spark, root, st, readPositions(spark, root, st))
-              .select(col("doc_id"), col("term"), col("positions")),
-            "term", newTermBuckets)
-          .repartition(col("bkt"))
-          .write.partitionBy("bkt").mode("overwrite")
-          .parquet(s"$root/positions/base/v=$vNew"),
-    () =>
-      if (st.statsV.isEmpty) st.statsV
-      else Manifest.moveFamily(
-        Ledger.withHashBucket(
-          readPinnedStats(spark, root, st, st.statsV.keys.toSeq),
-          "term", newTermBuckets),
-        "stats", root, vNew))(2).asInstanceOf[Map[Int, Long]]
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
-        baseV = vNew, baseBatch = st.batchId, statsV = statsPins))
-    true
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+    Option.when(
+        Manifest.visibleDeltaDirs(spark, root, st, "postings").nonEmpty ||
+          st.statsV.nonEmpty) {
+      // three order-free legs: all read only the COMMITTED state and
+      // write disjoint directories (postings/base, positions/base,
+      // stats/v=N) published by the one swap — overlap them (guide §2.6)
+      val statsPins = Par.all[Any](() =>
+        Manifest.writeBuckets(Ledger.withBucket(
+            livePostings(spark, root, st).drop("_b", "bkt"),
+            "doc_id", newDocBuckets).repartition(col("bkt")),
+          s"$root/postings/base/v=$vNew"),
+      () =>
+        if (Manifest.visibleDeltaDirs(spark, root, st, "positions").nonEmpty)
+          Manifest.writeBuckets(Ledger.withHashBucket(
+              live(spark, root, st, readPositions(spark, root, st))
+                .select(col("doc_id"), col("term"), col("positions")),
+              "term", newTermBuckets).repartition(col("bkt")),
+            s"$root/positions/base/v=$vNew"),
+      () =>
+        if (st.statsV.isEmpty) st.statsV
+        else Manifest.moveFamily(
+          Ledger.withHashBucket(
+            readPinnedStats(spark, root, st, st.statsV.keys.toSeq),
+            "term", newTermBuckets),
+          "stats", root, vNew))(2).asInstanceOf[Map[Int, Long]]
+      st.copy(version = vNew, baseV = vNew, baseBatch = st.batchId,
+        statsV = statsPins)
+    }
+    }
   }
 
   /** Garbage-collect what no retained cut pins — [[Manifest.vacuum]]
@@ -1419,13 +1446,11 @@ object TxVectorStack {
     * frozen-quantizer invariant). */
   def init(spark: SparkSession, root: String, centroids: DataFrame,
            codebooks: DataFrame): Unit =
-    Manifest.withCommitLock(spark, root) {
-    require(Manifest.read(spark, root).isEmpty,
-      s"vector stack already initialized at $root")
-    writeQuant(root, 0L, centroids, codebooks)
-    Manifest.commit(spark, root,
-      Manifest.State(0L, -1L, 0L, Map.empty))
-  }
+    Manifest.create(spark, root,
+        s"vector stack already initialized at $root") {
+      writeQuant(root, 0L, centroids, codebooks)
+      Manifest.State(0L, -1L, 0L, Map.empty)
+    }
 
   private def writeQuant(root: String, v: Long, centroids: DataFrame,
                          codebooks: DataFrame): Unit = {
@@ -1507,18 +1532,15 @@ object TxVectorStack {
                   batchId: Long, idCol: String, vecCol: String,
                   buckets: Int = 16, publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"vector stack not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("vector stack", root)) { (st, vNew) =>
       val (cent, cb) = readQuant(spark, root, st)
       val stored = Ledger.prunedToBatch(
           liveCodes(spark, root, st).select(col("vec_id"), col("bkt")),
           batch.select(col(idCol).as("vec_id")), "vec_id", buckets)
       val delta = Similarity.pqIndexAppend(stored, batch, cent, cb,
         idCol, vecCol, deltaOnly = true)
-      Ledger.withBucket(delta, "vec_id", buckets)
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/codes/batch=$batchId")
+      Manifest.writeBuckets(Ledger.withBucket(delta, "vec_id", buckets),
+        s"$root/codes/batch=$batchId")
       st.copy(version = vNew, batchId = batchId)
     }
 
@@ -1546,9 +1568,8 @@ object TxVectorStack {
           val (cent, cb) = readQuant(spark, root, st)
           val delta = Similarity.pqIndexBuild(batch, cent, cb, idCol,
             vecCol)
-          Ledger.withBucket(delta, "vec_id", buckets)
-            .write.partitionBy("bkt").mode("overwrite")
-            .parquet(s"$root/codes/batch=$batchId")
+          Manifest.writeBuckets(Ledger.withBucket(delta, "vec_id", buckets),
+            s"$root/codes/batch=$batchId")
         })
       st.copy(version = vNew, batchId = batchId)
     }
@@ -1567,26 +1588,21 @@ object TxVectorStack {
               centroids: DataFrame, codebooks: DataFrame,
               idCol: String, vecCol: String, buckets: Int = 16,
               publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
-    val st = Manifest.stateAt(spark, root, None)
-    val vNew = st.version + 1
-    // live membership only — the refresh is also the tombstone purge
-    val reenc = Similarity.pqIndexReencode(
-      liveCodes(spark, root, st).select("vec_id", "cell", "codes"),
-      corpus, centroids, codebooks, idCol, vecCol)
-    // fresh codes base and fresh quant version: disjoint directories
-    // under the one swap — overlap the writes (Par scaladoc)
-    Par.both(
-      Ledger.withBucket(reenc, "vec_id", buckets)
-        .repartition(col("bkt"))
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/codes/base/v=$vNew"),
-      writeQuant(root, vNew, centroids, codebooks))
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
-        globalV = vNew, baseV = vNew, baseBatch = st.batchId))
-    true
-  }
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+      // live membership only — the refresh is also the tombstone purge
+      val reenc = Similarity.pqIndexReencode(
+        liveCodes(spark, root, st).select("vec_id", "cell", "codes"),
+        corpus, centroids, codebooks, idCol, vecCol)
+      // fresh codes base and fresh quant version: disjoint directories
+      // under the one swap — overlap the writes (Par scaladoc)
+      Par.both(
+        Manifest.writeBuckets(Ledger.withBucket(reenc, "vec_id", buckets)
+          .repartition(col("bkt")), s"$root/codes/base/v=$vNew"),
+        writeQuant(root, vNew, centroids, codebooks))
+      Some(st.copy(version = vNew, globalV = vNew, baseV = vNew,
+        baseBatch = st.batchId))
+    }
 
   /** [[TxServeStack.vacuum]]'s twin for the vector stack: reclaim
     * superseded quantizer versions (each refresh strands one),

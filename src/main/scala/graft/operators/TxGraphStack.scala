@@ -62,10 +62,6 @@ object TxGraphStack {
   private def bktOf(c: org.apache.spark.sql.Column, buckets: Int) =
     pmod(c, lit(buckets.toLong)).cast("int")
 
-  private def elected(df: DataFrame,
-                      bkt: org.apache.spark.sql.Column): Seq[Int] =
-    df.select(bkt.as("_b")).distinct().collect().map(_.getInt(0)).toSeq
-
   /** Create the stack from a built base graph (src_id, nbr_id, cos):
     * all present buckets land at `edges/v=0` (birth batch −1) and the
     * first manifest pins them. `buckets` fixes the ledger's
@@ -73,22 +69,17 @@ object TxGraphStack {
     * pass. */
   def init(spark: SparkSession, root: String, edges: DataFrame,
            buckets: Int): Unit =
-    Manifest.withCommitLock(spark, root) {
-    require(Manifest.read(spark, root).isEmpty,
-      s"graph stack already initialized at $root")
-    Ledger.withBucket(
-      edges.select(col("src_id"), col("nbr_id"), col("cos"),
-        lit(-1L).as("b")),
-      "src_id", buckets)
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$root/edges/v=0")
-    // pin what the ONE write landed (driver listing — the former
-    // checkpoint + distinct().collect() pair re-ran the plan as two
-    // extra Spark actions; see Manifest.writtenBuckets)
-    Manifest.commit(spark, root, Manifest.State(0L, -1L, -1L,
-      Manifest.writtenBuckets(spark, s"$root/edges/v=0")
-        .map(_ -> 0L).toMap))
-  }
+    Manifest.create(spark, root,
+        s"graph stack already initialized at $root") {
+      val dir = s"$root/edges/v=0"
+      Manifest.writeBuckets(Ledger.withBucket(
+        edges.select(col("src_id"), col("nbr_id"), col("cos"),
+          lit(-1L).as("b")),
+        "src_id", buckets), dir)
+      // pin what the ONE write landed (a driver listing, no Spark action)
+      Manifest.State(0L, -1L, -1L,
+        Manifest.writtenBuckets(spark, dir).map(_ -> 0L).toMap)
+    }
 
   /** RAW committed edge rows (src_id, nbr_id, cos, b, bkt), each
     * bucket read at ITS pinned version; `restrict` prunes the read to
@@ -177,9 +168,7 @@ object TxGraphStack {
                   corpusBuckets: Option[Int] = None,
                   publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"graph stack not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("graph stack", root)) { (st, vNew) =>
     val raw = readEdges(spark, root, st, None)
     // lazy: tombstones are tiny and first materialize inside the
     // recapped delta's truncate action (guide §2.4 — no separate pass)
@@ -199,9 +188,7 @@ object TxGraphStack {
       live, corpus, batch, idCol, vecCol, k = k, beam = beam,
       hops = hops, maxDegree = maxDegree,
       edgeBuckets = Some(buckets), corpusBuckets = corpusBuckets))
-    val touched = recapped
-      .select(bktOf(col("src_id"), buckets).as("bkt")).distinct()
-      .collect().map(_.getInt(0))
+    val touched = Manifest.elect(recapped, bktOf(col("src_id"), buckets))
     val pins =
       if (touched.isEmpty) st.statsV
       else {
@@ -221,7 +208,7 @@ object TxGraphStack {
               live, batchId))
             .unionByName(edgesWhere(rawTb, tomb, keepLive = false)
               .join(srcs, Seq("src_id"), "left_semi")),
-          "edges", root, vNew, touched.toSeq, st.statsV)
+          "edges", root, vNew, touched, st.statsV)
       }
     st.copy(version = vNew, batchId = batchId, statsV = pins)
     }
@@ -245,7 +232,7 @@ object TxGraphStack {
       // lazy: the bucket election drains the frame and materializes
       // the checkpoint in the same action (guide §2.4)
       .localCheckpoint(eager = false)
-    val tb = elected(rm, bktOf(col("id"), buckets))
+    val tb = Manifest.elect(rm, bktOf(col("id"), buckets))
     val replaced = readTombstones(spark, root, st, Some(tb))
       .join(broadcast(rm), Seq("id"), "left_anti")
       .select("id", "asof")
@@ -317,7 +304,7 @@ object TxGraphStack {
       .select(col("src_id"), col("nbr_id"), col("cos"))
       // lazy: the bucket election below materializes it (guide §2.4)
       .localCheckpoint(eager = false)
-    val tbkts = elected(recapped, bktOf(col("src_id"), buckets))
+    val tbkts = Manifest.elect(recapped, bktOf(col("src_id"), buckets))
     // touched buckets' replacement, three legs (commitBatch's shape):
     // untouched sources' RAW rows ride through; touched sources' lists
     // replace with their recapped LIVE content; touched sources' DEAD
@@ -350,25 +337,21 @@ object TxGraphStack {
     * become vacuum-collectable garbage. */
   def compactEdges(spark: SparkSession, root: String,
                    publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
-    val st = Manifest.stateAt(spark, root, None)
-    if (st.statsV.isEmpty) return false
-    val vNew = st.version + 1
-    liveEdges(readEdges(spark, root, st, None),
-        readTombstones(spark, root, st))
-      .select("src_id", "nbr_id", "cos", "b", "bkt")
-      .repartition(col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$root/edges/v=$vNew")
-    // pin what the ONE write landed (driver listing — see
-    // Manifest.writtenBuckets; formerly checkpoint + collect = 2 jobs)
-    val present = Manifest.writtenBuckets(spark, s"$root/edges/v=$vNew")
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+    Option.when(st.statsV.nonEmpty) {
+      val dir = s"$root/edges/v=$vNew"
+      Manifest.writeBuckets(liveEdges(readEdges(spark, root, st, None),
+          readTombstones(spark, root, st))
+        .select("src_id", "nbr_id", "cos", "b", "bkt")
+        .repartition(col("bkt")), dir)
+      // pin what the ONE write landed (a driver listing, no Spark action)
+      val present = Manifest.writtenBuckets(spark, dir)
+      st.copy(version = vNew,
         statsV = st.statsV.keySet.filter(present).map(_ -> vNew).toMap,
-        auxV = Map.empty))
-    true
-  }
+        auxV = Map.empty)
+    }
+    }
 
   /** Transactional RE-BUCKET — [[Similarity.rebucketLedger]]'s
     * migration protocol ("write to a NEW path, then swap readers")
@@ -385,21 +368,18 @@ object TxGraphStack {
     * measured rebucket law: an undersized-B ledger's per-batch writes
     * shrink ~46× at 100× — SCALE.md). */
   def rebucket(spark: SparkSession, root: String, newBuckets: Int,
-               publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
+               publish: Boolean = true): Boolean = {
     require(newBuckets > 0, "newBuckets must be positive")
-    val st = Manifest.stateAt(spark, root, None)
-    if (st.statsV.isEmpty) return false
-    val vNew = st.version + 1
-    val pins = Manifest.moveFamily(
-      liveEdges(readEdges(spark, root, st, None),
-          readTombstones(spark, root, st))
-        .withColumn("bkt", bktOf(col("src_id"), newBuckets)),
-      "edges", root, vNew)
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
-        statsV = pins, auxV = Map.empty))
-    true
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+      Option.when(st.statsV.nonEmpty)(st.copy(version = vNew,
+        statsV = Manifest.moveFamily(
+          liveEdges(readEdges(spark, root, st, None),
+              readTombstones(spark, root, st))
+            .withColumn("bkt", bktOf(col("src_id"), newBuckets)),
+          "edges", root, vNew),
+        auxV = Map.empty))
+    }
   }
 
   /** [[TxServeStack.vacuum]]'s twin for the graph stack: reclaim

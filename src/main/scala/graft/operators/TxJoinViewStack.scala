@@ -78,10 +78,9 @@ object TxJoinViewStack {
   def build(spark: SparkSession, viewRoot: String, lexRoot: String,
             splitRoot: String, buckets: Int,
             atLexVersion: Option[Long] = None,
-            atSplitVersion: Option[Long] = None): (Long, Long) =
-    Manifest.withCommitLock(spark, viewRoot) {
-      require(Manifest.read(spark, viewRoot).isEmpty,
-        s"join view already built at $viewRoot — refresh instead")
+            atSplitVersion: Option[Long] = None): (Long, Long) = {
+    val st = Manifest.create(spark, viewRoot,
+        s"join view already built at $viewRoot — refresh instead") {
       def headOf(root: String): Long =
         Manifest.read(spark, root).getOrElse(
           throw new IllegalStateException(
@@ -95,11 +94,10 @@ object TxJoinViewStack {
         .withColumn("bkt", bktOf(col("doc_id"), buckets))
       val pins = Manifest.moveFamily(members, "members", viewRoot,
         Manifest.attemptVersion(0L))
-      Manifest.commit(spark, viewRoot,
-        Manifest.State(0L, 0L, -1L, pins, baseV = lexV,
-          baseBatch = splV))
-      (lexV, splV)
+      Manifest.State(0L, 0L, -1L, pins, baseV = lexV, baseBatch = splV)
     }
+    (st.baseV, st.baseBatch)
+  }
 
   /** The shared one-sided refresh kernel: apply `feed` (doc_id + this
     * side's after-image columns, classified insert/update/delete) to
@@ -113,46 +111,41 @@ object TxJoinViewStack {
                         buckets: Int, publish: Boolean,
                         replayed: Manifest.State => Boolean,
                         advance: Manifest.State => Manifest.State): Boolean =
-    Manifest.withCommitLock(spark, viewRoot) {
-      val st = Manifest.read(spark, viewRoot).getOrElse(
-        throw new IllegalStateException(
-          s"join view not built at $viewRoot — call build first"))
-      if (replayed(st)) false
-      else {
-        val vNew = st.version + 1
-        // feed-sized; feeds election + merge. LAZY: the election
-        // collect right below drains every partition, so it
-        // materializes the checkpoint in the same action (guide §2.4)
-        val f = feed(st)
-          .withColumn("bkt", bktOf(col("doc_id"), buckets))
-          .localCheckpoint(eager = false)
-        val touched = f.select("bkt").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val next =
-          if (touched.isEmpty) st
-          else {
-            val keepCol = if (setCol == "dl") "split" else "dl"
-            val replaced = Manifest.readBucketed(spark, viewRoot,
-                "members", st.statsV, Some(touched), MemberCols)
-              .drop("bkt")
-              .withColumnRenamed(setCol, "_old")
-              .join(f.select(col("doc_id"), col("change"),
-                col(setCol).as("_new")), Seq("doc_id"), "full_outer")
-              .withColumn(setCol,
-                when(col("change").isNull, col("_old"))
-                  .when(col("change") === "delete",
-                    lit(null).cast(if (setCol == "dl") "long" else "string"))
-                  .otherwise(col("_new")))
-              .filter(col("dl").isNotNull || col(keepCol).isNotNull)
-              .select(col("doc_id"), col("split"), col("dl"))
-              .withColumn("bkt", bktOf(col("doc_id"), buckets))
-            st.copy(statsV = Manifest.writeRepin(replaced, "members",
-              viewRoot, vNew, touched, st.statsV))
-          }
-        val out = advance(next).copy(version = vNew, batchId = vNew)
-        if (publish) Manifest.commit(spark, viewRoot, out)
-        true
-      }
+    Manifest.transact(spark, viewRoot, publish)(
+      throw new IllegalStateException(
+        s"join view not built at $viewRoot — call build first")) {
+      (st, vNew) =>
+        Option.when(!replayed(st)) {
+          // feed-sized; feeds election + merge. LAZY: the election
+          // collect right below drains every partition, so it
+          // materializes the checkpoint in the same action (guide §2.4)
+          val f = feed(st)
+            .withColumn("bkt", bktOf(col("doc_id"), buckets))
+            .localCheckpoint(eager = false)
+          val touched = Manifest.elect(f, col("bkt"))
+          val next =
+            if (touched.isEmpty) st
+            else {
+              val keepCol = if (setCol == "dl") "split" else "dl"
+              val replaced = Manifest.readBucketed(spark, viewRoot,
+                  "members", st.statsV, Some(touched), MemberCols)
+                .drop("bkt")
+                .withColumnRenamed(setCol, "_old")
+                .join(f.select(col("doc_id"), col("change"),
+                  col(setCol).as("_new")), Seq("doc_id"), "full_outer")
+                .withColumn(setCol,
+                  when(col("change").isNull, col("_old"))
+                    .when(col("change") === "delete",
+                      lit(null).cast(if (setCol == "dl") "long" else "string"))
+                    .otherwise(col("_new")))
+                .filter(col("dl").isNotNull || col(keepCol).isNotNull)
+                .select(col("doc_id"), col("split"), col("dl"))
+                .withColumn("bkt", bktOf(col("doc_id"), buckets))
+              st.copy(statsV = Manifest.writeRepin(replaced, "members",
+                viewRoot, vNew, touched, st.statsV))
+            }
+          advance(next).copy(version = vNew, batchId = vNew)
+        }
     }
 
   /** Advance the LEXICAL side to the upstream cut `toVersion` by the

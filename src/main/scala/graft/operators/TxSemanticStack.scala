@@ -55,44 +55,30 @@ object TxSemanticStack {
   private def kbktOf(buckets: Int) =
     pmod(xxhash64(col("blk")), lit(buckets.toLong)).cast("int")
 
-  private def elected(df: DataFrame,
-                      bkt: org.apache.spark.sql.Column): Seq[Int] =
-    df.select(bkt.as("_b")).distinct().collect().map(_.getInt(0)).toSeq
-
   /** Create the stack from a batch-built base: the label ledger
     * (id, cluster) lands in BOTH keyed layouts at v=0 and the block
     * index (id, blk) as the blkidx base; one commit pins all three. */
   def init(spark: SparkSession, root: String, ledger: DataFrame,
            blockIndex: DataFrame, buckets: Int): Unit =
-    Manifest.withCommitLock(spark, root) {
-    require(Manifest.read(spark, root).isEmpty,
-      s"semantic stack already initialized at $root")
-    val l = ledger.select(col("id"), col("cluster")).localCheckpoint()
-    // three disjoint family writes published by the ONE commit below —
-    // order-free, overlap them (guide §2.6); l is EAGER above because
-    // two legs consume it concurrently
-    Par.all[Any](() =>
-      l.withColumn("bkt", ibktOf(buckets))
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/labels/v=0"),
-    () =>
-      l.withColumn("bkt", cbktOf(buckets))
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/labels_by_cluster/v=0"),
-    () =>
-      blockIndex.select(col("id"), col("blk"))
-        .withColumn("bkt", kbktOf(buckets))
-        .write.partitionBy("bkt").mode("overwrite")
-        .parquet(s"$root/blkidx/base/v=0"))
-    // pin what the writes landed (driver listings — formerly two extra
-    // checkpoint + distinct().collect() actions; Manifest.writtenBuckets)
-    Manifest.commit(spark, root, Manifest.State(0L, -1L, -1L,
-      Manifest.writtenBuckets(spark, s"$root/labels/v=0")
-        .map(_ -> 0L).toMap,
-      baseV = 0L, baseBatch = -1L,
-      auxV = Manifest.writtenBuckets(spark, s"$root/labels_by_cluster/v=0")
-        .map(_ -> 0L).toMap))
-  }
+    Manifest.create(spark, root,
+        s"semantic stack already initialized at $root") {
+      val l = ledger.select(col("id"), col("cluster")).localCheckpoint()
+      val (byId, byCluster) = (s"$root/labels/v=0", s"$root/labels_by_cluster/v=0")
+      // three disjoint family writes published by the ONE commit —
+      // order-free, overlap them (guide §2.6); l is EAGER above because
+      // two legs consume it concurrently
+      Par.all[Any](
+        () => Manifest.writeBuckets(l.withColumn("bkt", ibktOf(buckets)), byId),
+        () => Manifest.writeBuckets(l.withColumn("bkt", cbktOf(buckets)),
+          byCluster),
+        () => Manifest.writeBuckets(blockIndex.select(col("id"), col("blk"))
+          .withColumn("bkt", kbktOf(buckets)), s"$root/blkidx/base/v=0"))
+      // pin what the writes landed (driver listings, no Spark action)
+      def pins(dir: String) = Manifest.writtenBuckets(spark, dir)
+        .map(_ -> 0L).toMap
+      Manifest.State(0L, -1L, -1L, pins(byId), baseV = 0L, baseBatch = -1L,
+        auxV = pins(byCluster))
+    }
 
   /** Pinned per-bucket read of one label family, path-pruned to
     * `restrict`'s buckets when given. */
@@ -160,9 +146,7 @@ object TxSemanticStack {
                   prefix: Int, buckets: Int,
                   publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"semantic stack not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("semantic stack", root)) { (st, vNew) =>
     // LAZY checkpoints in this face: each frame's very next bucket
     // election (or an eager downstream checkpoint) drains it, so the
     // materialization fuses into that action (guide §2.4)
@@ -170,7 +154,7 @@ object TxSemanticStack {
       .localCheckpoint(eager = false)
     // seen check: batch ids can only live in their own id-buckets
     val seen = readPinned(spark, root, "labels", st.statsV,
-      Some(elected(bIds, pmod(col(idCol), lit(buckets.toLong)).cast("int"))))
+      Some(Manifest.elect(bIds, pmod(col(idCol), lit(buckets.toLong)).cast("int"))))
       .select(col("id").as(idCol))
     val fresh = batch.join(seen, Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
@@ -178,7 +162,7 @@ object TxSemanticStack {
       idCol, vecCol, prefix).localCheckpoint(eager = false)
     // pair join: only the batch's block keys' buckets are probed
     val sIdx = resolveBlockIndex(spark, root,
-      Some(elected(bIdx, kbktOf(buckets))))
+      Some(Manifest.elect(bIdx, kbktOf(buckets))))
     val incident = Similarity.semanticPqPairsAgainst(bIdx, sIdx,
         corpus, idCol, vecCol, threshold)
       .unionByName(Similarity.semanticPqPairs(fresh, codebooks, idCol,
@@ -188,17 +172,17 @@ object TxSemanticStack {
     val ends = incident.select(col("a_id").as("id"))
       .unionByName(incident.select(col("b_id").as("id"))).distinct()
     val lookup = readPinned(spark, root, "labels", st.statsV,
-      Some(elected(ends, ibktOf(buckets)))).select("id", "cluster")
+      Some(Manifest.elect(ends, ibktOf(buckets)))).select("id", "cluster")
     val (mapping0, fresh0) = Dedup.connectedComponentsIncrementalDelta(
       lookup, fresh.select(col(idCol)), idCol, incident, "a_id", "b_id")
     val mapping = mapping0.localCheckpoint(eager = false)
     val freshLb = fresh0.localCheckpoint(eager = false)
     // touched CLUSTER buckets: old labels, their new labels, and the
     // fresh rows' labels — every bucket whose content changes
-    val tcb = (elected(mapping,
+    val tcb = (Manifest.elect(mapping,
         pmod(col("_old"), lit(buckets.toLong)).cast("int")) ++
-      elected(mapping, pmod(col("_new"), lit(buckets.toLong)).cast("int")) ++
-      elected(freshLb, cbktOf(buckets))).distinct
+      Manifest.elect(mapping, pmod(col("_new"), lit(buckets.toLong)).cast("int")) ++
+      Manifest.elect(freshLb, cbktOf(buckets))).distinct
     var idPins = st.statsV
     var clPins = st.auxV
     if (tcb.nonEmpty) {
@@ -233,8 +217,8 @@ object TxSemanticStack {
           val changedRows = oldCl.join(broadcast(mapping),
               oldCl("cluster") === col("_old"))
             .select(oldCl("id"))
-          val tib = (elected(changedRows, ibktOf(buckets)) ++
-            elected(freshLb, ibktOf(buckets))).distinct
+          val tib = (Manifest.elect(changedRows, ibktOf(buckets)) ++
+            Manifest.elect(freshLb, ibktOf(buckets))).distinct
           Manifest.writeRepin(
             relabel(readPinned(spark, root, "labels", st.statsV,
                 Some(tib)).select("id", "cluster"))
@@ -246,9 +230,8 @@ object TxSemanticStack {
       idPins = id2
     }
     // block-index delta append: O(batch) rows, the positional posture
-    bIdx.withColumn("bkt", kbktOf(buckets))
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"$root/blkidx/batch=$batchId")
+    Manifest.writeBuckets(bIdx.withColumn("bkt", kbktOf(buckets)),
+      s"$root/blkidx/batch=$batchId")
     st.copy(version = vNew, batchId = batchId, statsV = idPins,
       auxV = clPins)
     }
@@ -291,12 +274,12 @@ object TxSemanticStack {
       .localCheckpoint(eager = false)
     // removed ids' committed labels: their own id-buckets only
     val rmLabels = readPinned(spark, root, "labels", st.statsV,
-        Some(elected(rm, ibktOf(buckets))))
+        Some(Manifest.elect(rm, ibktOf(buckets))))
       .join(broadcast(rm), Seq("id"))
       .select("id", "cluster").localCheckpoint(eager = false)
     val touchedCl = rmLabels.select("cluster").distinct()
       .localCheckpoint(eager = false)
-    val tcbOld = elected(touchedCl,
+    val tcbOld = Manifest.elect(touchedCl,
       pmod(col("cluster"), lit(buckets.toLong)).cast("int"))
     // surviving members of touched components, found BY CLUSTER KEY
     val members = readPinned(spark, root, "labels_by_cluster", st.auxV,
@@ -328,7 +311,7 @@ object TxSemanticStack {
       // (2) by-cluster: old touched buckets lose their components'
       // rows (and the removed ids); the rebuilt labels' buckets gain
       // them
-      val wb = (tcbOld ++ elected(relabeled, cbktOf(buckets))).distinct
+      val wb = (tcbOld ++ Manifest.elect(relabeled, cbktOf(buckets))).distinct
       Manifest.writeRepin(
         readPinned(spark, root, "labels_by_cluster", st.auxV, Some(wb))
           .join(broadcast(touchedCl), Seq("cluster"), "left_anti")
@@ -340,8 +323,8 @@ object TxSemanticStack {
       // (3) by-id: removed ids' buckets (rows drop) + relabeled
       // members' buckets (labels update); a bucket emptied by the
       // removal unpins
-      val tib = (elected(rm, ibktOf(buckets)) ++
-        elected(members, ibktOf(buckets))).distinct
+      val tib = (Manifest.elect(rm, ibktOf(buckets)) ++
+        Manifest.elect(members, ibktOf(buckets))).distinct
       val newLb = relabeled.select(col("id"), col("cluster").as("_nc"))
       Manifest.writeRepin(
         readPinned(spark, root, "labels", st.statsV, Some(tib))

@@ -53,12 +53,8 @@ object TxSketchStack {
     * (recorded here only as convention — the protocol state keeps pin
     * maps, not B; callers own B exactly as the graph stack's do). */
   def init(spark: SparkSession, root: String): Unit =
-    Manifest.withCommitLock(spark, root) {
-      require(Manifest.read(spark, root).isEmpty,
-        s"sketch stack already initialized at $root")
-      Manifest.commit(spark, root,
-        Manifest.State(0L, -1L, -1L, Map.empty))
-    }
+    Manifest.create(spark, root, s"sketch stack already initialized at $root")(
+      Manifest.State(0L, -1L, -1L, Map.empty))
 
   /** Raw committed sketch rows (key, n_rows, sk, th, bkt), each bucket
     * at its pinned version; `restrict` prunes at the PATH level (an
@@ -94,9 +90,7 @@ object TxSketchStack {
                   buckets: Int, lgK: Int = 12, thetaLgNom: Int = 12,
                   publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"sketch stack not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("sketch stack", root)) { (st, vNew) =>
     val agg = batch
       .filter(col(keyCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(keyCol).cast("string").as("key"))
@@ -111,8 +105,7 @@ object TxSketchStack {
       // drains every partition, materializing the checkpoint in the
       // same action (guide §2.4 — one pass, not two)
       .localCheckpoint(eager = false)
-    val touched = agg.select(col("bkt")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val touched = Manifest.elect(agg, col("bkt"))
     if (touched.nonEmpty) {
       val old = readSketches(spark, root, st, Some(touched))
         .select(col("key"), col("n_rows").as("_on"),
@@ -151,9 +144,8 @@ object TxSketchStack {
       case Some((ks, buckets)) =>
         val kf = ks.select(col(ks.columns.head).cast("string").as("key"))
           .distinct().localCheckpoint(eager = false) // the election collect materializes
-        val elected = kf.select(bktOf(col("key"), buckets).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        readSketches(spark, root, st, Some(elected))
+        readSketches(spark, root, st,
+            Some(Manifest.elect(kf, bktOf(col("key"), buckets))))
           .join(kf, Seq("key"), "left_semi")
           .drop("bkt")
     }
@@ -187,10 +179,7 @@ object TxSketchStack {
     * retention exactly like any snapshot read. */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Long): DataFrame = {
-    val stF = Manifest.stateAt(spark, root, Some(fromVersion))
-    val stT = Manifest.stateAt(spark, root, Some(toVersion))
-    require(stT.batchId >= stF.batchId,
-      s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
+    val (stF, stT) = Manifest.changeWindow(spark, root, fromVersion, toVersion)
     val changed = Manifest.repinnedBuckets(stF.statsV, stT.statsV)
     val before = readSketches(spark, root, stF, Some(changed))
       .select(col("key"), col("n_rows").as("_fn"),
@@ -272,9 +261,7 @@ object TxSketchStack {
                     lgK: Int = 12, thetaLgNom: Int = 12,
                     publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"sketch stack not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("sketch stack", root)) { (st, vNew) =>
     val agg = rebuilt
       .filter(col(keyCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(keyCol).cast("string").as("key"))
@@ -289,9 +276,9 @@ object TxSketchStack {
       .localCheckpoint(eager = false)
     // lazy pair: the union election below drains BOTH frames,
     // materializing two checkpoints in one action (guide §2.4)
-    val touched = agg.select(col("bkt"))
-      .unionByName(dropKeys.select(col("bkt")))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val touched = Manifest.elect(
+      agg.select(col("bkt")).unionByName(dropKeys.select(col("bkt"))),
+      col("bkt"))
     if (touched.nonEmpty) {
       val untouched = readSketches(spark, root, st, Some(touched))
         .join(agg.select("key"), Seq("key"), "left_anti")
@@ -328,9 +315,7 @@ object TxSketchStack {
                    buckets: Int, lgK: Int = 12, thetaLgNom: Int = 12,
                    publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"sketch stack not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("sketch stack", root)) { (st, vNew) =>
     val rebuilt = raw
       .filter(col(keyCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(keyCol).cast("string").as("key"))
@@ -350,20 +335,16 @@ object TxSketchStack {
     * — the shared migration contract. O(keys), amortized over every
     * batch after it. */
   def rebucket(spark: SparkSession, root: String,
-               newBuckets: Int, publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
+               newBuckets: Int, publish: Boolean = true): Boolean = {
     require(newBuckets > 0, "newBuckets must be positive")
-    val st = Manifest.stateAt(spark, root, None)
-    if (st.statsV.isEmpty) return false
-    val vNew = st.version + 1
-    val pins = Manifest.moveFamily(
-      readSketches(spark, root, st, None)
-        .withColumn("bkt", bktOf(col("key"), newBuckets)),
-      "sketch", root, vNew)
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
-        statsV = pins))
-    true
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+      Option.when(st.statsV.nonEmpty)(st.copy(version = vNew,
+        statsV = Manifest.moveFamily(
+          readSketches(spark, root, st, None)
+            .withColumn("bkt", bktOf(col("key"), newBuckets)),
+          "sketch", root, vNew)))
+    }
   }
 
   /** [[TxServeStack.vacuum]]'s twin: reclaim superseded sketch-bucket

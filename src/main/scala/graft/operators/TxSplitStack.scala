@@ -50,12 +50,8 @@ object TxSplitStack {
 
   /** Create an empty ledger: first manifest pins nothing. */
   def init(spark: SparkSession, root: String): Unit =
-    Manifest.withCommitLock(spark, root) {
-      require(Manifest.read(spark, root).isEmpty,
-        s"split ledger already initialized at $root")
-      Manifest.commit(spark, root,
-        Manifest.State(0L, -1L, -1L, Map.empty))
-    }
+    Manifest.create(spark, root, s"split ledger already initialized at $root")(
+      Manifest.State(0L, -1L, -1L, Map.empty))
 
   private def readAssigned(spark: SparkSession, root: String,
                            st: Manifest.State,
@@ -88,10 +84,7 @@ object TxSplitStack {
     * — one O(ledger) read, the migration's own amortized cost). */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Long): DataFrame = {
-    val stF = Manifest.stateAt(spark, root, Some(fromVersion))
-    val stT = Manifest.stateAt(spark, root, Some(toVersion))
-    require(stT.batchId >= stF.batchId,
-      s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
+    val (stF, stT) = Manifest.changeWindow(spark, root, fromVersion, toVersion)
     val changed = Manifest.repinnedBuckets(stF.statsV, stT.statsV)
     val before = readAssigned(spark, root, stF, Some(changed))
       .select(col("doc_id"), col("split").as("_fs"))
@@ -137,9 +130,7 @@ object TxSplitStack {
                    salt: String = "graft",
                    publish: Boolean = true): Boolean =
     Manifest.commitGuard(spark, root, batchId, publish)(
-      throw new IllegalStateException(
-        s"split ledger not initialized at $root — call init first")
-    ) { (st, vNew) =>
+      throw Manifest.notInitialized("split ledger", root)) { (st, vNew) =>
     // LAZY checkpoints throughout this face: each one's very next
     // election collect computes every partition (distinct drains the
     // frame), materializing the blocks in the SAME action instead of
@@ -300,27 +291,25 @@ object TxSplitStack {
     * Callers pass B′ to every subsequent commit — the shared
     * migration contract. O(ledger) by definition, amortized. */
   def rebucket(spark: SparkSession, root: String,
-               newBuckets: Int, publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
+               newBuckets: Int, publish: Boolean = true): Boolean = {
     require(newBuckets > 0, "newBuckets must be positive")
-    val st = Manifest.stateAt(spark, root, None)
-    if (st.statsV.isEmpty) return false
-    val vNew = st.version + 1
-    def move(read: DataFrame, family: String): Map[Int, Long] =
-      Manifest.moveFamily(
-        read.withColumn("bkt", bktOf(col("doc_id"), newBuckets)),
-        family, root, vNew)
-    // both legs read only the COMMITTED state and write disjoint
-    // families published by the one swap — order-free, overlap them
-    // (guide §2.6 / Par scaladoc)
-    val (pins, auxPins) = Par.both(
-      move(readAssigned(spark, root, st, None), "assign"),
-      if (st.auxV.isEmpty) st.auxV
-      else move(readConflicts(spark, root, st, None), "conflict"))
-    if (publish)
-      Manifest.commit(spark, root, st.copy(version = vNew,
-        statsV = pins, auxV = auxPins))
-    true
+    Manifest.transact(spark, root, publish)(
+      Manifest.stateAt(spark, root, None)) { (st, vNew) =>
+      Option.when(st.statsV.nonEmpty) {
+        def move(read: DataFrame, family: String): Map[Int, Long] =
+          Manifest.moveFamily(
+            read.withColumn("bkt", bktOf(col("doc_id"), newBuckets)),
+            family, root, vNew)
+        // both legs read only the COMMITTED state and write disjoint
+        // families published by the one swap — order-free, overlap them
+        // (guide §2.6 / Par scaladoc)
+        val (pins, auxPins) = Par.both(
+          move(readAssigned(spark, root, st, None), "assign"),
+          if (st.auxV.isEmpty) st.auxV
+          else move(readConflicts(spark, root, st, None), "conflict"))
+        st.copy(version = vNew, statsV = pins, auxV = auxPins)
+      }
+    }
   }
 
   /** [[TxServeStack.vacuum]]'s twin for the assignment ledger. */

@@ -181,8 +181,7 @@ object TxTableStack {
   private def bktOf(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
 
-  private def notInitialized(root: String) = new IllegalStateException(
-    s"table not initialized at $root — call init first")
+  private def notInitialized(root: String) = Manifest.notInitialized("table", root)
 
   private def schemaOf(st: Manifest.State): TableSchema =
     TableSchema.decode(st.schema)
@@ -198,13 +197,9 @@ object TxTableStack {
     * safe). The key column is passed per call like every stack's,
     * not stored. */
   def init(spark: SparkSession, root: String, schema: String): Unit =
-    Manifest.withCommitLock(spark, root) {
-      require(Manifest.read(spark, root).isEmpty,
-        s"table already initialized at $root")
-      Manifest.commit(spark, root,
-        Manifest.State(0L, -1L, -1L, Map.empty,
-          schema = TableSchema.fromDdl(schema).encode))
-    }
+    Manifest.create(spark, root, s"table already initialized at $root")(
+      Manifest.State(0L, -1L, -1L, Map.empty,
+        schema = TableSchema.fromDdl(schema).encode))
 
   /** Rename logical columns to their `f<id>` storage names — the
     * write-side half of the id-resolution contract. `bkt` and the
@@ -520,8 +515,7 @@ object TxTableStack {
         val seen = images.withColumn("_n", n).observe(obs, m.head, m.tail: _*)
           .drop("_n")
         if (first)
-          toPhysical(seen.filter(!col("_del")), schema)
-            .write.partitionBy("bkt").mode("overwrite").parquet(dir)
+          Manifest.writeBuckets(toPhysical(seen.filter(!col("_del")), schema), dir)
         else
           toPhysical(seen, schema, "_del").write.mode("overwrite").parquet(dir)
         val touched = requireGuard(spark,
@@ -675,22 +669,18 @@ object TxTableStack {
       }
     }
 
-  /** The shared metadata-only evolution commit shell: derive the new
+  /** The shared metadata-only evolution commit: derive the new
     * [[TableSchema]] from the head's, publish ONE pointer swap with
     * every pin riding through untouched. */
   private def evolve(spark: SparkSession, root: String, publish: Boolean)
                     (derive: TableSchema => TableSchema): Boolean =
-    Manifest.withCommitLock(spark, root) {
-      val st = Manifest.read(spark, root).getOrElse(
-        throw notInitialized(root))
-      val next = derive(schemaOf(st))
-      require(st.deltas.isEmpty || next.fields.exists(_.id == st.deltaKey),
-        "the pending delta chain is keyed by the column this evolution " +
-          "drops — compact the table first")
-      if (publish)
-        Manifest.commit(spark, root, st.copy(version = st.version + 1,
-          schema = next.encode))
-      true
+    Manifest.transact(spark, root, publish)(throw notInitialized(root)) {
+      (st, vNew) =>
+        val next = derive(schemaOf(st))
+        require(st.deltas.isEmpty || next.fields.exists(_.id == st.deltaKey),
+          "the pending delta chain is keyed by the column this evolution " +
+            "drops — compact the table first")
+        Some(st.copy(version = vNew, schema = next.encode))
     }
 
   /** ADD-COLUMN SCHEMA EVOLUTION — a METADATA-ONLY commit: `addDdl`
@@ -824,10 +814,7 @@ object TxTableStack {
     * nothing. */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Long, keyCol: String): DataFrame = {
-    val stF = Manifest.stateAt(spark, root, Some(fromVersion))
-    val stT = Manifest.stateAt(spark, root, Some(toVersion))
-    require(stT.batchId >= stF.batchId,
-      s"change window is inverted: batch ${stF.batchId} → ${stT.batchId}")
+    val (stF, stT) = Manifest.changeWindow(spark, root, fromVersion, toVersion)
     val target = schemaOf(stT)
     val keyF = target.find(keyCol).getOrElse(throw
       new IllegalArgumentException(
@@ -906,26 +893,22 @@ object TxTableStack {
     * must pass the new bucket count. The row schema rides through
     * unchanged. */
   def rebucket(spark: SparkSession, root: String, keyCol: String,
-               newBuckets: Int, publish: Boolean = true): Boolean =
-    Manifest.withCommitLock(spark, root) {
-      require(newBuckets > 0, "newBuckets must be positive")
-      val st = Manifest.read(spark, root).getOrElse(
-        throw notInitialized(root))
-      if (st.statsV.isEmpty && st.deltas.isEmpty) false
-      else {
-        val schema = schemaOf(st)
-        val key = keyField(schema, keyCol).name
-        val vNew = st.version + 1
-        val pins = Manifest.moveFamily(
-          toPhysical(readRows(spark, root, st, schema, None)
-            .withColumn("bkt", bktOf(col(key), newBuckets)), schema),
-          "rows", root, vNew)
-        if (publish)
-          Manifest.commit(spark, root, st.copy(version = vNew, statsV = pins,
-            deltas = Seq.empty, deltaKey = -1))
-        true
-      }
+               newBuckets: Int, publish: Boolean = true): Boolean = {
+    require(newBuckets > 0, "newBuckets must be positive")
+    Manifest.transact(spark, root, publish)(throw notInitialized(root)) {
+      (st, vNew) =>
+        Option.when(st.statsV.nonEmpty || st.deltas.nonEmpty) {
+          val schema = schemaOf(st)
+          val key = keyField(schema, keyCol).name
+          st.copy(version = vNew,
+            statsV = Manifest.moveFamily(
+              toPhysical(readRows(spark, root, st, schema, None)
+                .withColumn("bkt", bktOf(col(key), newBuckets)), schema),
+              "rows", root, vNew),
+            deltas = Seq.empty, deltaKey = -1)
+        }
     }
+  }
 
   /** COMPACTION — the OPTIMIZE face ([[Ledger.compactBuckets]]'s
     * sibling under the manifest). Two things fragment a table's read:
@@ -938,26 +921,26 @@ object TxTableStack {
     * maintenance commit (the batch high-water is untouched —
     * compaction is not a batch). Unelected buckets keep their pins:
     * their bytes are untouched by construction. Returns the elected
-    * bucket ids (empty → nothing to do, nothing committed). */
+    * bucket ids (empty → nothing to do, nothing committed); an
+    * unpublished compaction elects them and writes nothing. */
   def compact(spark: SparkSession, root: String,
               maxFilesPerBucket: Int = 1,
-              publish: Boolean = true): Seq[Int] =
-    Manifest.withCommitLock(spark, root) {
-      require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-      val st = Manifest.read(spark, root).getOrElse(
-        throw notInitialized(root))
-      val conf = spark.sessionState.newHadoopConf()
-      val fsys = new Path(root).getFileSystem(conf)
-      val fragmented = st.statsV.toSeq.filter { case (b, v) =>
-        fsys.listStatus(new Path(s"$root/rows/v=$v/bkt=$b"))
-          .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket
-      }.map(_._1)
-      val elected = (fragmented ++ st.deltas.flatMap(_.buckets)).distinct.sorted
-      if (elected.nonEmpty && publish)
-        Manifest.commit(spark, root,
-          fold(spark, root, st, st.version + 1, schemaOf(st), elected))
-      elected
+              publish: Boolean = true): Seq[Int] = {
+    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
+    var elected = Seq.empty[Int]
+    Manifest.transact(spark, root, publish)(throw notInitialized(root)) {
+      (st, vNew) =>
+        val fsys = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+        val fragmented = st.statsV.toSeq.filter { case (b, v) =>
+          fsys.listStatus(new Path(s"$root/rows/v=$v/bkt=$b"))
+            .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket
+        }.map(_._1)
+        elected = (fragmented ++ st.deltas.flatMap(_.buckets)).distinct.sorted
+        Option.when(elected.nonEmpty && publish)(
+          fold(spark, root, st, vNew, schemaOf(st), elected))
     }
+    elected
+  }
 
   /** Garbage-collect unpinned row versions and deltas no retained cut
     * chains, and retire history below the retention floor. */

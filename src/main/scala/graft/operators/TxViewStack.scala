@@ -76,9 +76,8 @@ object TxViewStack {
   def build(spark: SparkSession, viewRoot: String, upstreamRoot: String,
             grpOf: Column => Column, buckets: Int,
             atVersion: Option[Long] = None): Long =
-    Manifest.withCommitLock(spark, viewRoot) {
-      require(Manifest.read(spark, viewRoot).isEmpty,
-        s"view stack already built at $viewRoot — refresh instead")
+    Manifest.create(spark, viewRoot,
+        s"view stack already built at $viewRoot — refresh instead") {
       val upV = atVersion.getOrElse(
         Manifest.read(spark, upstreamRoot).getOrElse(
           throw new IllegalStateException(
@@ -90,10 +89,8 @@ object TxViewStack {
         .withColumn("bkt", bktOf(col("grp"), buckets))
       val pins = Manifest.moveFamily(members, "members", viewRoot,
         Manifest.attemptVersion(0L))
-      Manifest.commit(spark, viewRoot,
-        Manifest.State(0L, upV, -1L, pins, baseV = upV))
-      upV
-    }
+      Manifest.State(0L, upV, -1L, pins, baseV = upV)
+    }.baseV
 
   /** Advance the view to the upstream cut `toVersion` by the FEED
     * ALONE: open [[TxSketchStack.changes]] at the stored cursor
@@ -123,8 +120,7 @@ object TxViewStack {
         // election collect right below drains every partition, so it
         // materializes the checkpoint in the same action (guide §2.4)
         .localCheckpoint(eager = false)
-      val touched = feed.select(col("bkt")).distinct()
-        .collect().map(_.getInt(0)).toSeq
+      val touched = Manifest.elect(feed, col("bkt"))
       val next =
         if (touched.isEmpty) st
         else {
@@ -164,9 +160,8 @@ object TxViewStack {
           // query-sized; LAZY — the election collect materializes it
           // in the same action, the semi-join reuses the blocks (§2.4)
           .distinct().localCheckpoint(eager = false)
-        val elected = gf.select(bktOf(col("grp"), buckets).as("_b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        readMembers(spark, root, st, Some(elected))
+        readMembers(spark, root, st,
+            Some(Manifest.elect(gf, bktOf(col("grp"), buckets))))
           .join(gf, Seq("grp"), "left_semi")
           .drop("bkt")
     }

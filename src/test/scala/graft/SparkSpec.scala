@@ -9,6 +9,13 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** `body` over a fresh temp dir named `prefix`*, deleted after it. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    try body(d.toString)
+    finally graft.queries.FixtureCache.deleteRecursively(d)
+  }
 }
 
 object SparkSpec {

@@ -1,10 +1,7 @@
 package graft.operators
 
-import graft.{SparkSpec, Tables}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
 
 /** Vacuum and pinned-read behaviour, pinned once for EVERY manifest
   * stack and the catalog. Each case builds a short history — a
@@ -19,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
   *  3. every top-level directory the stack wrote belongs to one of its
   *     families, and those are the families the stack declares — a
   *     family no declaration names is never swept. */
-class FamilyVacuumSpec extends SparkSpec {
+class FamilyVacuumSpec extends StackFixtures {
   import spark.implicits._
 
   /** One stack under test. `pins` maps a retained state to the asset
@@ -48,32 +45,6 @@ class FamilyVacuumSpec extends SparkSpec {
 
   private def merge(ps: (Set[String], Set[String])*) =
     (ps.flatMap(_._1).toSet, ps.flatMap(_._2).toSet)
-
-  /** Rows as sorted strings; binary and nested values render by content
-    * (hex / json), never by object identity. */
-  private def canon(df: DataFrame): Seq[String] =
-    df.select(df.schema.fields.toSeq.map { f =>
-      (f.dataType match {
-        case BinaryType => hex(col(f.name))
-        case _: ArrayType | _: StructType | _: MapType => to_json(col(f.name))
-        case _ => col(f.name).cast("string")
-      }).as(f.name)
-    }: _*).collect().map(_.mkString("|")).toSeq.sorted
-
-  private def tagged(tag: String, df: DataFrame): Seq[String] =
-    canon(df).map(s"$tag:" + _)
-
-  /** Every directory under `root`, relative to it. */
-  private def dirsUnder(root: String): Set[String] = {
-    val base = new Path(root)
-    val f = base.getFileSystem(spark.sessionState.newHadoopConf())
-    def walk(p: Path, rel: String): Seq[String] =
-      f.listStatus(p).toSeq.filter(_.isDirectory).flatMap { s =>
-        val r = if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}"
-        r +: walk(s.getPath, r)
-      }
-    walk(base, "").toSet
-  }
 
   private def historyVersions(root: String): Set[Long] = {
     val base = new Path(root)
@@ -122,10 +93,6 @@ class FamilyVacuumSpec extends SparkSpec {
 
   // ---- serve (lexical) -------------------------------------------------
 
-  private def docs(ids: Seq[Long], gen: Int = 0) =
-    ids.map(i => (i, (0L to i % 4).map(t => s"w${(i + t + gen) % 7}").mkString(" ")))
-      .toDF("doc_id", "text")
-
   test("serve stack: vacuum keeps exactly the retained pins and rows") {
     run(Case("serve",
       build = { root =>
@@ -163,23 +130,16 @@ class FamilyVacuumSpec extends SparkSpec {
 
   // ---- vector ----------------------------------------------------------
 
-  private lazy val emb = Tables.embeddings(spark, sf)
-
   test("vector stack: vacuum keeps exactly the retained pins and rows") {
     val corpus = emb.filter($"vec_id" < 40).cache()
-    def cent(lo: Int) = emb.filter($"vec_id" >= lo && $"vec_id" < lo + 16)
-      .select(($"vec_id" - lo).cast("int").as("cell"), $"embedding".as("c_vec"))
-    def cb(lo: Int) = Similarity.pqCodebookSeed(
-      emb.withColumn("vec_id", $"vec_id" - lo).filter($"vec_id" >= 0),
-      "vec_id", "embedding", m = 8, ksub = 16, subDim = 8)
     run(Case("vector",
       build = { root =>
-        TxVectorStack.init(spark, root, cent(0), cb(0))
+        TxVectorStack.init(spark, root, vcent(0), vcb(0))
         TxVectorStack.commitBatch(spark, root, corpus.filter($"vec_id" < 20),
           0L, "vec_id", "embedding", buckets = 4)
         TxVectorStack.commitDelete(spark, root, Seq(3L, 5L).toDF("vec_id"),
           1L, "vec_id", buckets = 4)
-        TxVectorStack.refresh(spark, root, corpus, cent(16), cb(16),
+        TxVectorStack.refresh(spark, root, corpus, vcent(16), vcb(16),
           "vec_id", "embedding", buckets = 4)
         TxVectorStack.commitUpsert(spark, root,
           corpus.filter($"vec_id" >= 18 && $"vec_id" < 30), 2L, "vec_id",
@@ -202,9 +162,6 @@ class FamilyVacuumSpec extends SparkSpec {
   }
 
   // ---- sketch ----------------------------------------------------------
-
-  private def events(keys: Seq[String], users: Seq[Long]) =
-    (for (k <- keys; u <- users) yield (k, u)).toDF("key", "user")
 
   test("sketch stack: vacuum keeps exactly the retained pins and rows") {
     run(Case("sketch",
@@ -231,19 +188,10 @@ class FamilyVacuumSpec extends SparkSpec {
 
   // ---- split -----------------------------------------------------------
 
-  private val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-
   test("split ledger: vacuum keeps exactly the retained pins and rows") {
     run(Case("split",
       build = { root =>
-        TxSplitStack.init(spark, root)
-        TxSplitStack.commitAssign(spark, root, (1L to 12L).toDF("doc_id"),
-          Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("id", "cluster"), 0L,
-          "doc_id", splits, buckets = 4)
-        // a bridge across stored clusters lands conflict rows
-        TxSplitStack.commitAssign(spark, root, Seq(20L).toDF("doc_id"),
-          (1L to 12L).map(i => (i, 1L)).:+((20L, 1L)).toDF("id", "cluster"),
-          1L, "doc_id", splits, buckets = 4)
+        splitWithConflicts(root)
         TxSplitStack.rebucket(spark, root, 8)
         TxSplitStack.commitAssign(spark, root, (30L to 33L).toDF("doc_id"),
           Seq((30L, 30L)).toDF("id", "cluster"), 2L, "doc_id", splits,
@@ -266,19 +214,10 @@ class FamilyVacuumSpec extends SparkSpec {
 
   // ---- graph -----------------------------------------------------------
 
-  private def gvec(i: Int): Array[Float] =
-    Array.tabulate(16)(j => (((i * 31 + j * 7) % 17) - 8) / 8.0f)
-
-  private def gvecs(ids: Seq[Int]) =
-    ids.map(i => (i.toLong, gvec(i))).toDF("vec_id", "embedding")
-
   test("graph stack: vacuum keeps exactly the retained pins and rows") {
     val corpusDir = java.nio.file.Files.createTempDirectory("graft_fv_gcorp")
     try {
-      gvecs(0 until 20)
-        .withColumn("bkt", pmod($"vec_id", lit(4L)).cast("int"))
-        .write.partitionBy("bkt").mode("overwrite").parquet(corpusDir.toString)
-      def corpus = spark.read.parquet(corpusDir.toString)
+      val corpus = graphCorpus(corpusDir.toString, 20)
       def commit(root: String, ids: Seq[Int], id: Long, b: Int,
                  publish: Boolean = true) =
         TxGraphStack.commitBatch(spark, root, corpus, gvecs(ids), id,
@@ -286,11 +225,7 @@ class FamilyVacuumSpec extends SparkSpec {
           maxDegree = 3, corpusBuckets = Some(4), publish = publish)
       run(Case("graph",
         build = { root =>
-          val cent = corpus.filter($"vec_id" === 0)
-            .select(lit(0).cast("int").as("cell"), $"embedding".as("c_vec"))
-          TxGraphStack.init(spark, root, Similarity.knnGraph(
-            corpus.filter($"vec_id" < 10), cent, "vec_id", "embedding", k = 2)
-            .select("src_id", "nbr_id", "cos"), buckets = 4)
+          TxGraphStack.init(spark, root, baseGraph(corpus, 10), buckets = 4)
           commit(root, 10 to 13, 0L, 4)
           TxGraphStack.commitRemove(spark, root, Seq(2L).toDF("vec_id"), 1L,
             "vec_id", buckets = 4)
@@ -315,13 +250,6 @@ class FamilyVacuumSpec extends SparkSpec {
   }
 
   // ---- semantic --------------------------------------------------------
-
-  private def svec(i: Int): Array[Float] = {
-    val seed = if (i % 5 == 3) 3 else i
-    Array.tabulate(64)(j => (((seed * 31 + j * 7) % 17) - 8) / 8.0f)
-  }
-  private def svecs(ids: Seq[Int]) =
-    ids.map(i => (i.toLong, svec(i))).toDF("vec_id", "embedding")
 
   test("semantic stack: vacuum keeps exactly the retained pins and rows") {
     val base = svecs(0 until 10)

@@ -14,14 +14,19 @@ class HitsSpec extends SparkSpec {
     """{"_source":{"numeroProcesso":"0000001-00.2023.8.26.0000","classe":{"codigo":12729,"nome":"ANPP"},"dataAjuizamento":"2023-01-10T03:00:00Z","dataHoraUltimaAtualizacao":"2023-02-01T12:00:00Z","formato":{"nome":"Eletrônico"},"orgaoJulgador":{"codigo":"123","nome":"Vara X","codigoMunicipioIBGE":"3550308"},"grau":"G1","assuntos":[{"codigo":1,"nome":"Assunto A"},{"codigo":2,"nome":null}],"movimentos":[{"codigo":2,"nome":"B","dataHora":"2023-01-12T00:00:00Z"},{"codigo":1,"nome":"A","dataHora":"2023-01-11T00:00:00Z"},{"codigo":3,"nome":"C","dataHora":null}]},"sort":[1673319600000]}""",
     """{"_source":{"numeroProcesso":"0000002-00.2023.8.26.0000","classe":{"codigo":12729,"nome":"ANPP"},"dataAjuizamento":null,"formato":{"nome":"Físico"},"orgaoJulgador":{"codigo":"9","nome":"Vara Y","codigoMunicipioIBGE":"9999999"},"grau":"G1","assuntos":[],"movimentos":[]},"sort":[9]}""")
 
+  private lazy val hitsDir = Files.createTempDirectory("hits")
+
   private lazy val dir = {
-    val d = Files.createTempDirectory("hits").toFile
-    val f = new java.io.File(d, "tjsp.json")
+    val f = new java.io.File(hitsDir.toFile, "tjsp.json")
     val w = new java.io.PrintWriter(f, "UTF-8")
     hitLines.foreach(w.println)
     w.close()
-    d.getAbsolutePath
+    hitsDir.toFile.getAbsolutePath
   }
+
+  override def afterAll(): Unit =
+    try graft.queries.FixtureCache.deleteRecursively(hitsDir)
+    finally super.afterAll()
 
   private lazy val municipios =
     Seq((3550308L, "São Paulo")).toDF("CD_MUN", "NM_MUN")
@@ -59,17 +64,19 @@ class HitsSpec extends SparkSpec {
       PipelineConfig(de = Some("1990-01-01"), ate = Some("1990-12-31")))
     // only the null-date row passes
     assert(out.count() == 1)
-    assert(!JurimetriaPipeline.persist(out.limit(0),
-      Files.createTempDirectory("sink").toString)) // K5 empty guard
+    withTempDir("sink") { sink =>
+      assert(!JurimetriaPipeline.persist(out.limit(0), sink)) // K5 empty guard
+    }
   }
 
   test("persist: parquet+csv written, arrays stringified for CSV") {
     val out = JurimetriaPipeline.run(spark, Map("TJSP" -> dir), municipios,
       PipelineConfig())
-    val sink = Files.createTempDirectory("sink2").toString
-    assert(JurimetriaPipeline.persist(out, sink))
-    assert(spark.read.parquet(s"$sink/processos.parquet").count() == 2)
-    assert(spark.read.option("header", "true").csv(s"$sink/processos.csv").count() == 2)
+    withTempDir("sink2") { sink =>
+      assert(JurimetriaPipeline.persist(out, sink))
+      assert(spark.read.parquet(s"$sink/processos.parquet").count() == 2)
+      assert(spark.read.option("header", "true").csv(s"$sink/processos.csv").count() == 2)
+    }
   }
 
   test("K2 golden: CSV byte rendering of arrays/timestamps is pinned") {
@@ -83,70 +90,75 @@ class HitsSpec extends SparkSpec {
     // here, not in a downstream consumer.
     val out = JurimetriaPipeline.run(spark, Map("TJSP" -> dir), municipios,
       PipelineConfig())
-    val sink = Files.createTempDirectory("sink-golden").toString
-    assert(JurimetriaPipeline.persist(out, sink))
-    val parts = new java.io.File(s"$sink/processos.csv").listFiles
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val lines = parts.flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().toList finally src.close()
+    withTempDir("sink-golden") { sink =>
+      assert(JurimetriaPipeline.persist(out, sink))
+      val parts = new java.io.File(s"$sink/processos.csv").listFiles
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      val lines = parts.flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }
+      val (hdr, data) = lines.partition(_.startsWith("tribunal,"))
+      val actual = (hdr.distinct.toList ++ data.sorted).mkString("\n") + "\n"
+      val goldenStream = getClass.getResourceAsStream("/golden/processos_csv.golden")
+      val golden = scala.io.Source.fromInputStream(goldenStream, "UTF-8").mkString
+      assert(actual == golden,
+        s"CSV rendering drifted from the pinned golden:\n--- actual ---\n$actual")
     }
-    val (hdr, data) = lines.partition(_.startsWith("tribunal,"))
-    val actual = (hdr.distinct.toList ++ data.sorted).mkString("\n") + "\n"
-    val goldenStream = getClass.getResourceAsStream("/golden/processos_csv.golden")
-    val golden = scala.io.Source.fromInputStream(goldenStream, "UTF-8").mkString
-    assert(actual == golden,
-      s"CSV rendering drifted from the pinned golden:\n--- actual ---\n$actual")
   }
 
   test("CSV roundtrip (S2 source semantics): typed read-back preserves values") {
     val out = JurimetriaPipeline.run(spark, Map("TJSP" -> dir), municipios,
       PipelineConfig())
-    val sink = Files.createTempDirectory("sink-csv").toString
-    assert(JurimetriaPipeline.persist(out, sink))
-    // read the CSV as a typed source (explicit schema, like the municipio
-    // lookup would be): stringified timestamp parses back to the instant
-    val schema = "tribunal STRING, numero_processo STRING, classe STRING, " +
-      "data_ajuizamento TIMESTAMP, ultima_atualizacao TIMESTAMP, formato STRING, " +
-      "codigo_orgao STRING, orgao_julgador STRING, municipio STRING, grau STRING, " +
-      "assuntos STRING, movimentos STRING, sort BIGINT"
-    val back = spark.read.option("header", "true").schema(schema)
-      .csv(s"$sink/processos.csv")
-    val r = back.filter($"numero_processo".startsWith("0000001")).head()
-    assert(r.getAs[String]("municipio") == "São Paulo")
-    assert(r.getAs[java.sql.Timestamp]("data_ajuizamento") ==
-      java.sql.Timestamp.valueOf("2023-01-10 03:00:00"))
-    assert(r.getAs[Long]("sort") == 1673319600000L)
+    withTempDir("sink-csv") { sink =>
+      assert(JurimetriaPipeline.persist(out, sink))
+      // read the CSV as a typed source (explicit schema, like the municipio
+      // lookup would be): stringified timestamp parses back to the instant
+      val schema = "tribunal STRING, numero_processo STRING, classe STRING, " +
+        "data_ajuizamento TIMESTAMP, ultima_atualizacao TIMESTAMP, formato STRING, " +
+        "codigo_orgao STRING, orgao_julgador STRING, municipio STRING, grau STRING, " +
+        "assuntos STRING, movimentos STRING, sort BIGINT"
+      val back = spark.read.option("header", "true").schema(schema)
+        .csv(s"$sink/processos.csv")
+      val r = back.filter($"numero_processo".startsWith("0000001")).head()
+      assert(r.getAs[String]("municipio") == "São Paulo")
+      assert(r.getAs[java.sql.Timestamp]("data_ajuizamento") ==
+        java.sql.Timestamp.valueOf("2023-01-10 03:00:00"))
+      assert(r.getAs[Long]("sort") == 1673319600000L)
+    }
   }
 
   test("persistPartitioned: hive layout by tribunal, prunable on read") {
     val out = JurimetriaPipeline.run(spark, Map("TJSP" -> dir), municipios,
       PipelineConfig())
-    val sink = Files.createTempDirectory("sink3").toString
-    assert(JurimetriaPipeline.persistPartitioned(out, sink))
-    val back = spark.read.parquet(s"$sink/processos_part.parquet")
-    assert(back.filter($"tribunal" === "TJSP").count() == 2)
-    // partition pruning: the tribunal filter appears as a PartitionFilter
-    val plan = back.filter($"tribunal" === "TJSP")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(tribunal"))
+    withTempDir("sink3") { sink =>
+      assert(JurimetriaPipeline.persistPartitioned(out, sink))
+      val back = spark.read.parquet(s"$sink/processos_part.parquet")
+      assert(back.filter($"tribunal" === "TJSP").count() == 2)
+      // partition pruning: the tribunal filter appears as a PartitionFilter
+      val plan = back.filter($"tribunal" === "TJSP")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(tribunal"))
+    }
   }
 
   test("W6 error tolerance: malformed lines null out, absent court yields zero rows") {
-    val d = Files.createTempDirectory("bad-hits").toFile
-    val w = new java.io.PrintWriter(new java.io.File(d, "tjx.json"), "UTF-8")
-    w.println("""{"_source":{"numeroProcesso":"ok-1","grau":"G1"},"sort":[1]}""")
-    w.println("""this is not json at all""")                    // malformed
-    w.println("""{"_source":{"numeroProcesso":42},"sort":"x"}""") // type mismatch
-    w.close()
-    // PERMISSIVE read (the default with a fully-nullable schema): bad rows
-    // become all-null records, the reference's skip-and-continue analog
-    val out = JurimetriaPipeline.run(spark,
-      Map("TJX" -> d.getAbsolutePath,
-        "TJGONE" -> (d.getAbsolutePath + "/does-not-exist")),
-      municipios, PipelineConfig())
-    assert(out.filter($"numero_processo" === "ok-1").count() == 1)
-    assert(out.count() == 3) // malformed rows survive as null records, not crashes
+    withTempDir("bad-hits") { p =>
+      val d = new java.io.File(p)
+      val w = new java.io.PrintWriter(new java.io.File(d, "tjx.json"), "UTF-8")
+      w.println("""{"_source":{"numeroProcesso":"ok-1","grau":"G1"},"sort":[1]}""")
+      w.println("""this is not json at all""")                    // malformed
+      w.println("""{"_source":{"numeroProcesso":42},"sort":"x"}""") // type mismatch
+      w.close()
+      // PERMISSIVE read (the default with a fully-nullable schema): bad rows
+      // become all-null records, the reference's skip-and-continue analog
+      val out = JurimetriaPipeline.run(spark,
+        Map("TJX" -> d.getAbsolutePath,
+          "TJGONE" -> (d.getAbsolutePath + "/does-not-exist")),
+        municipios, PipelineConfig())
+      assert(out.filter($"numero_processo" === "ok-1").count() == 1)
+      assert(out.count() == 3) // malformed rows survive as null records, not crashes
+    }
   }
 
   /** A court directory `name` under `root` holding one page file of `hits`
@@ -168,71 +180,81 @@ class HitsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).toSet
 
   test("run: one scan over three courts labels each row with its own court") {
-    val root = Files.createTempDirectory("courts").toFile
-    val dirs = Map(
-      "TJA" -> court(root, "TJA", "a1" -> Some(1L), "a2" -> Some(2L)),
-      "TJB" -> court(root, "TJB", "b1" -> Some(3L)),
-      // a court whose name prefixes another's: only its own dir counts
-      "TJ" -> court(root, "TJ", "t1" -> Some(4L), "t2" -> None),
-      "TJGONE" -> new java.io.File(root, "TJGONE").getAbsolutePath) // absent
-    val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
-    assert(labelled(out) == Set("TJA" -> "a1", "TJA" -> "a2", "TJB" -> "b1",
-      "TJ" -> "t1", "TJ" -> "t2"))
+    withTempDir("courts") { p =>
+      val root = new java.io.File(p)
+      val dirs = Map(
+        "TJA" -> court(root, "TJA", "a1" -> Some(1L), "a2" -> Some(2L)),
+        "TJB" -> court(root, "TJB", "b1" -> Some(3L)),
+        // a court whose name prefixes another's: only its own dir counts
+        "TJ" -> court(root, "TJ", "t1" -> Some(4L), "t2" -> None),
+        "TJGONE" -> new java.io.File(root, "TJGONE").getAbsolutePath) // absent
+      val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
+      assert(labelled(out) == Set("TJA" -> "a1", "TJA" -> "a2", "TJB" -> "b1",
+        "TJ" -> "t1", "TJ" -> "t2"))
+    }
   }
 
   test("run: court dirs named with a space, %, + and non-ASCII characters") {
-    val root = Files.createTempDirectory("odd courts").toFile
-    // a JVM whose file-name charset (the locale's; ASCII under LANG=C)
-    // cannot encode a name can neither create nor read such a directory
-    val nameable = java.nio.charset.Charset.forName(
-      System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_: String)
-    val names = Seq("TJ São Paulo", "TJ 100%", "TJ%20X", "TJ+1", "TJ 1")
-      .filter(nameable)
-    val dirs = names.zipWithIndex.map { case (n, i) =>
-      n -> court(root, n, s"p$i" -> Some(i.toLong)) }.toMap
-    val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
-    assert(labelled(out) == names.zipWithIndex.map { case (n, i) => n -> s"p$i" }.toSet)
+    withTempDir("odd courts") { p =>
+      val root = new java.io.File(p)
+      // a JVM whose file-name charset (the locale's; ASCII under LANG=C)
+      // cannot encode a name can neither create nor read such a directory
+      val nameable = java.nio.charset.Charset.forName(
+        System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_: String)
+      val names = Seq("TJ São Paulo", "TJ 100%", "TJ%20X", "TJ+1", "TJ 1")
+        .filter(nameable)
+      val dirs = names.zipWithIndex.map { case (n, i) =>
+        n -> court(root, n, s"p$i" -> Some(i.toLong)) }.toMap
+      val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
+      assert(labelled(out) == names.zipWithIndex.map { case (n, i) => n -> s"p$i" }.toSet)
+    }
   }
 
   test("run: a court dir the file-name charset cannot encode is refused, naming the fix") {
-    val root = Files.createTempDirectory("unnameable").toFile
-    val name = "TJ São Paulo"
-    if (java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
-        .newEncoder().canEncode(name)) {
-      val dirs = Map(name -> court(root, name, "sp1" -> Some(1L)))
-      val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
-      assert(labelled(out) == Set(name -> "sp1"))
-    } else {
-      // under an ASCII charset (the POSIX locale) the JVM cannot even
-      // create the directory; the run refuses it before looking for it
-      val e = intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
-        Map(name -> new java.io.File(root, name).getAbsolutePath), municipios,
-        PipelineConfig()))
-      assert(e.getMessage.contains(name) && e.getMessage.contains("LC_ALL=C.UTF-8"))
+    withTempDir("unnameable") { p =>
+      val root = new java.io.File(p)
+      val name = "TJ São Paulo"
+      if (java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+          .newEncoder().canEncode(name)) {
+        val dirs = Map(name -> court(root, name, "sp1" -> Some(1L)))
+        val out = JurimetriaPipeline.run(spark, dirs, municipios, PipelineConfig())
+        assert(labelled(out) == Set(name -> "sp1"))
+      } else {
+        // under an ASCII charset (the POSIX locale) the JVM cannot even
+        // create the directory; the run refuses it before looking for it
+        val e = intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
+          Map(name -> new java.io.File(root, name).getAbsolutePath), municipios,
+          PipelineConfig()))
+        assert(e.getMessage.contains(name) && e.getMessage.contains("LC_ALL=C.UTF-8"))
+      }
     }
   }
 
   test("run: maxProcessos is a per-court limit in cursor order") {
-    val root = Files.createTempDirectory("limit").toFile
-    val dirs = Map(
-      "TJA" -> court(root, "TJA", "a1" -> Some(5L), "a2" -> None, "a3" -> Some(2L)),
-      // a null sort ranks last; a tie on sort falls to numero_processo
-      "TJB" -> court(root, "TJB", "b0" -> None, "b2" -> Some(7L), "b1" -> Some(7L)))
-    val out = JurimetriaPipeline.run(spark, dirs, municipios,
-      PipelineConfig(maxProcessos = Some(1)))
-    assert(labelled(out) == Set("TJA" -> "a3", "TJB" -> "b1"))
-    val two = JurimetriaPipeline.run(spark, dirs, municipios,
-      PipelineConfig(maxProcessos = Some(2)))
-    assert(labelled(two) == Set("TJA" -> "a3", "TJA" -> "a1", "TJB" -> "b1", "TJB" -> "b2"))
+    withTempDir("limit") { p =>
+      val root = new java.io.File(p)
+      val dirs = Map(
+        "TJA" -> court(root, "TJA", "a1" -> Some(5L), "a2" -> None, "a3" -> Some(2L)),
+        // a null sort ranks last; a tie on sort falls to numero_processo
+        "TJB" -> court(root, "TJB", "b0" -> None, "b2" -> Some(7L), "b1" -> Some(7L)))
+      val out = JurimetriaPipeline.run(spark, dirs, municipios,
+        PipelineConfig(maxProcessos = Some(1)))
+      assert(labelled(out) == Set("TJA" -> "a3", "TJB" -> "b1"))
+      val two = JurimetriaPipeline.run(spark, dirs, municipios,
+        PipelineConfig(maxProcessos = Some(2)))
+      assert(labelled(two) == Set("TJA" -> "a3", "TJA" -> "a1", "TJB" -> "b1", "TJB" -> "b2"))
+    }
   }
 
   test("run: a directory named by two courts is refused") {
-    val root = Files.createTempDirectory("twice").toFile
-    val d = court(root, "TJA", "a1" -> Some(1L))
-    intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
-      Map("TJA" -> d, "TJB" -> s"$d/"), municipios, PipelineConfig()))
-    intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
-      Map("TJA" -> d, "TJB" -> s"file:$d"), municipios, PipelineConfig()))
+    withTempDir("twice") { p =>
+      val root = new java.io.File(p)
+      val d = court(root, "TJA", "a1" -> Some(1L))
+      intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
+        Map("TJA" -> d, "TJB" -> s"$d/"), municipios, PipelineConfig()))
+      intercept[IllegalArgumentException](JurimetriaPipeline.run(spark,
+        Map("TJA" -> d, "TJB" -> s"file:$d"), municipios, PipelineConfig()))
+    }
   }
 
   test("typed Dataset face: Processo encoder round-trips the flattened frame") {

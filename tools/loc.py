@@ -12,7 +12,8 @@ through `git show`, so `python3 tools/loc.py cfe612a` next to
 per group:
 
   tx       the manifest-protocol layer: Manifest, Ledger, Catalog and
-           every Tx*Stack under src/main/scala/graft/operators
+           every Tx*Stack under src/main/scala/graft/operators, then
+           one indented line per file of that layer
   queries  src/main/scala/graft/queries
   tools    src/main/scala/graft/tools
   main     all of src/main/scala"""
@@ -104,14 +105,20 @@ def main(argv):
                           capture_output=True, text=True).stdout.strip()
     os.chdir(root)
     totals = {g: [0, 0] for g, _ in GROUPS}
+    tx_files = {}
     for path, text in sources(argv[1] if len(argv) == 2 else None):
         lines = code_lines(text)
+        if TX.match(path):
+            tx_files[os.path.basename(path)] = lines
         for g, member in GROUPS:
             if member(path):
                 totals[g][0] += 1
                 totals[g][1] += lines
     for g, (files, lines) in totals.items():
         print(f"{g:8} {lines:6d} code lines in {files} files")
+        if g == "tx":
+            for name, n in sorted(tx_files.items()):
+                print(f"  {name:22} {n:6d}")
 
 
 if __name__ == "__main__":
